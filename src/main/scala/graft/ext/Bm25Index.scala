@@ -97,8 +97,7 @@ object Bm25Index {
     * term space splits into). Returns the postings version. */
   def create(spark: SparkSession, corpusRoot: String, idCol: String,
       textCol: String, root: String, nParts: Int = 16): Long = {
-    val cv = VersionedTable.currentVersion(spark, corpusRoot).getOrElse(
-      throw new IllegalArgumentException(s"$corpusRoot: no versioned table"))
+    val cv = VersionedTable.headVersion(spark, corpusRoot)
     val docs = VersionedTable.read(spark, corpusRoot, Some(cv))
       .filter(col(textCol).isNotNull)
     val meta = Map(CorpusKey -> corpusRoot, WatermarkKey -> cv.toString,

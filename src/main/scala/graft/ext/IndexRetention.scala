@@ -33,9 +33,7 @@ object IndexRetention {
       bm25Indexes: Seq[String] = Seq.empty,
       asOfHorizon: Option[Long] = None,
       orphanGraceMs: Long = 24L * 3600 * 1000): Long = {
-    val cur = VersionedTable.currentVersion(spark, corpusRoot)
-      .getOrElse(throw new IllegalArgumentException(
-        s"$corpusRoot: no versioned table"))
+    val cur = VersionedTable.headVersion(spark, corpusRoot)
     ivfIndexes.foreach { p =>
       require(IvfIndex.corpusOf(spark, p) == corpusRoot,
         s"$p maintains from ${IvfIndex.corpusOf(spark, p)}, " +

@@ -219,8 +219,7 @@ object IvfIndex {
       rowsPerFile: Long,
       pqOpqIters: Int = 0): (DataFrame, Map[String, String], () => Unit) = {
     require(nlist > 0, s"need nlist > 0, got $nlist")
-    val cv = VersionedTable.currentVersion(spark, corpusRoot).getOrElse(
-      throw new IllegalArgumentException(s"$corpusRoot: no versioned table"))
+    val cv = VersionedTable.headVersion(spark, corpusRoot)
     val corpus = VersionedTable.read(spark, corpusRoot, Some(cv))
       .filter(col(vecCol).isNotNull)
       .select(col(idCol).as("neighbor_id"), col(vecCol).as("nv"))

@@ -51,12 +51,11 @@ object Par {
     if (thunks.size == 1) return Seq(thunks.head())
     val results = new Array[Either[Throwable, A]](thunks.size)
     val latch = new java.util.concurrent.CountDownLatch(thunks.size)
-    // fail-fast skip flag (r19 ADVICE): once a thunk has failed,
-    // not-yet-STARTED thunks are skipped (marked with the first
-    // failure's placeholder) — running ones still settle before the
-    // rethrow, preserving the tear-down guarantee. Fatal VM errors
-    // propagate immediately on the submitting thread where possible;
-    // InterruptedException restores the interrupt flag.
+    // fail-fast skip flag: once a thunk has failed, not-yet-STARTED
+    // thunks are skipped (marked with the first failure's placeholder)
+    // — running ones still settle before the rethrow, preserving the
+    // tear-down guarantee. InterruptedException restores the interrupt
+    // flag.
     val failed = new java.util.concurrent.atomic.AtomicReference[Throwable]
     thunks.zipWithIndex.foreach { case (th, i) =>
       def runOne(): Unit = {
@@ -82,7 +81,15 @@ object Par {
         pool.execute(() => try runOne() finally permits.release())
       else runOne()
     }
-    latch.await()
+    // an interrupt of the calling thread (a caller-runs thunk that was
+    // interrupted re-asserts the flag) must not end the wait early:
+    // keep waiting until every thunk has settled, then re-assert it
+    var interrupted = false
+    var settled = false
+    while (!settled)
+      try { latch.await(); settled = true }
+      catch { case _: InterruptedException => interrupted = true }
+    if (interrupted) Thread.currentThread().interrupt()
     // rethrow the first REAL failure in input order (skip markers
     // stand in for work never started after that failure)
     results.collectFirst { case Left(t) if t ne Skipped => t }

@@ -797,7 +797,7 @@ object IoQueries extends QueryPack {
     // the one a lexicographic sort leaves spanning every file — prunes
     // file reads. In-query requires pin exactly that contrast: under
     // clusterBy(o_orderkey) the custkey band keeps all files; after
-    // clusterByZorder it keeps at most 3/4 (Morton boundary boxes
+    // clusterByZorderN it keeps at most 3/4 (Morton boundary boxes
     // bound the constant at this file count; the grid bounds come from
     // the manifest's own stats, zero extra scan). The oracle checks
     // the ranged read's content.
@@ -816,7 +816,7 @@ object IoQueries extends QueryPack {
       val (kLex, tLex) = VersionedTable.pruneProfile(s, root, pred)
       require(kLex == tLex && tLex == 16,
         s"custkey must span every file under an orderkey sort: $kLex/$tLex")
-      VersionedTable.clusterByZorder(s, root, "o_orderkey", "o_custkey",
+      VersionedTable.clusterByZorderN(s, root, Seq("o_orderkey", "o_custkey"),
         targetPartitions = 16)
       val (kZ, tZ) = VersionedTable.pruneProfile(s, root, pred)
       require(tZ == 16 && kZ <= tZ * 3 / 4,

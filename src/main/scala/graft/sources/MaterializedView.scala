@@ -424,10 +424,6 @@ object MaterializedView {
       expectMeta = expectMeta)
   }
 
-  private def currentOf(spark: SparkSession, root: String): Long =
-    VersionedTable.currentVersion(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"$root: no versioned table"))
-
   private def signedChanges(spark: SparkSession, root: String,
       from: Long, to: Long): DataFrame =
     VersionedTable.readChanges(spark, root, from, Some(to))
@@ -450,7 +446,7 @@ object MaterializedView {
     require(keys.intersect(sums ++ distincts ++ minmax).isEmpty,
       s"columns cannot be both key and aggregate: " +
         s"${keys.intersect(sums ++ distincts ++ minmax)}")
-    val bv = currentOf(spark, baseRoot)
+    val bv = VersionedTable.headVersion(spark, baseRoot)
     val snap = VersionedTable.read(spark, baseRoot, Some(bv))
     VersionedTable.create(spark, mvRoot,
       stateOf(snap, keys, sums, distincts, minmax),
@@ -483,15 +479,14 @@ object MaterializedView {
     * if the base has not advanced). */
   def refresh(spark: SparkSession, baseRoot: String,
       mvRoot: String): Long = {
-    val mvV = currentOf(spark, mvRoot)
-    val m = VersionedTable.readManifest(spark, mvRoot, mvV)
+    val m = VersionedTable.snapshot(spark, mvRoot)
     val (keys, sums, distincts, minmax) = definition(m)
     require(!m.meta.contains(JoinKeysKey),
       "this is a join view — use refreshJoin(left, right, mv)")
     requireBase(m, BaseKey, baseRoot, "base")
     val last = m.meta(WatermarkKey).toLong
-    val bv = currentOf(spark, baseRoot)
-    if (bv <= last) return mvV
+    val bv = VersionedTable.headVersion(spark, baseRoot)
+    if (bv <= last) return m.version
     applySignedDelta(spark, mvRoot, m, keys, sums, distincts, minmax,
       VersionedTable.read(spark, baseRoot, Some(bv)),
       signedChanges(spark, baseRoot, last, bv), batchId = bv,
@@ -522,8 +517,8 @@ object MaterializedView {
     require(keys.intersect(sums ++ distincts ++ minmax).isEmpty,
       s"columns cannot be both key and aggregate: " +
         s"${keys.intersect(sums ++ distincts ++ minmax)}")
-    val lv = currentOf(spark, leftRoot)
-    val rv = currentOf(spark, rightRoot)
+    val lv = VersionedTable.headVersion(spark, leftRoot)
+    val rv = VersionedTable.headVersion(spark, rightRoot)
     val l = applyRen(VersionedTable.read(spark, leftRoot, Some(lv)),
       leftRename)
     val r = applyRen(VersionedTable.read(spark, rightRoot, Some(rv)),
@@ -578,8 +573,7 @@ object MaterializedView {
     * watermark pair it was read from (see [[refreshJoin]]'s retry). */
   private[sources] def refreshJoinOnce(spark: SparkSession,
       leftRoot: String, rightRoot: String, mvRoot: String): Long = {
-    val mvV = currentOf(spark, mvRoot)
-    val m = VersionedTable.readManifest(spark, mvRoot, mvV)
+    val m = VersionedTable.snapshot(spark, mvRoot)
     val (keys, sums, distincts, minmax) = definition(m)
     val joinKeys = m.meta.getOrElse(JoinKeysKey,
         sys.error("this is a single-table view — use refresh(base, mv)"))
@@ -587,10 +581,11 @@ object MaterializedView {
     requireBase(m, LeftKey, leftRoot, "left base")
     requireBase(m, RightKey, rightRoot, "right base")
     val (l0, r0) = (m.meta(LeftVKey).toLong, m.meta(RightVKey).toLong)
-    val (l1, r1) = (currentOf(spark, leftRoot), currentOf(spark, rightRoot))
+    val (l1, r1) = (VersionedTable.headVersion(spark, leftRoot),
+      VersionedTable.headVersion(spark, rightRoot))
     require(l1 >= l0 && r1 >= r0,
       s"base went backwards: left $l0->$l1, right $r0->$r1")
-    if (l1 == l0 && r1 == r0) return mvV
+    if (l1 == l0 && r1 == r0) return m.version
 
     val (renL, renR) = (renameOf(m, LeftRenKey), renameOf(m, RightRenKey))
     val proj = (df: DataFrame) => df.select(
@@ -659,13 +654,12 @@ object MaterializedView {
   def addColumns(spark: SparkSession, baseRoot: String, mvRoot: String,
       sums: Seq[String] = Seq.empty, distincts: Seq[String] = Seq.empty,
       minmax: Seq[String] = Seq.empty): Long = {
-    val mvV = currentOf(spark, mvRoot)
-    val m = VersionedTable.readManifest(spark, mvRoot, mvV)
+    val m = VersionedTable.snapshot(spark, mvRoot)
     require(!m.meta.contains(JoinKeysKey),
       "this is a join view — use addColumnsJoin(left, right, mv)")
     requireBase(m, BaseKey, baseRoot, "base")
     val wm = m.meta(WatermarkKey).toLong
-    addColumnsCore(spark, mvRoot, mvV, m,
+    addColumnsCore(spark, mvRoot, m,
       VersionedTable.read(spark, baseRoot, Some(wm)),
       sums, distincts, minmax)
   }
@@ -682,8 +676,7 @@ object MaterializedView {
       rightRoot: String, mvRoot: String,
       sums: Seq[String] = Seq.empty, distincts: Seq[String] = Seq.empty,
       minmax: Seq[String] = Seq.empty): Long = {
-    val mvV = currentOf(spark, mvRoot)
-    val m = VersionedTable.readManifest(spark, mvRoot, mvV)
+    val m = VersionedTable.snapshot(spark, mvRoot)
     require(m.meta.contains(JoinKeysKey),
       "this is a single-table view — use addColumns(base, mv)")
     requireBase(m, LeftKey, leftRoot, "left base")
@@ -694,7 +687,7 @@ object MaterializedView {
         renameOf(m, LeftRenKey))
       .join(applyRen(VersionedTable.read(spark, rightRoot, Some(r0)),
         renameOf(m, RightRenKey)), joinKeys)
-    addColumnsCore(spark, mvRoot, mvV, m, snap, sums, distincts, minmax)
+    addColumnsCore(spark, mvRoot, m, snap, sums, distincts, minmax)
   }
 
   /** Shared evolution core: validate, backfill from `snap` (already
@@ -702,7 +695,7 @@ object MaterializedView {
     * agreement in both directions, commit the widened view — with the
     * rewrite's derivable change rows when the view feeds a cascade. */
   private def addColumnsCore(spark: SparkSession, mvRoot: String,
-      mvV: Long, m: VersionedTable.Manifest, snap: DataFrame,
+      m: VersionedTable.Manifest, snap: DataFrame,
       sums: Seq[String], distincts: Seq[String],
       minmax: Seq[String]): Long = {
     val (keys, oldSums, oldDistincts, oldMinmax) = definition(m)
@@ -724,7 +717,7 @@ object MaterializedView {
     // group cardinality, reused below as the drift pin
     val bf = stateOf(snap, keys, sums, distincts, minmax)
       .withColumnRenamed("cnt", "_bf_cnt").localCheckpoint(true)
-    val state = VersionedTable.read(spark, mvRoot, Some(mvV))
+    val state = VersionedTable.read(spark, mvRoot, Some(m.version))
     // inner join: by the maintenance invariant the view's groups ARE
     // the watermark snapshot's groups, with the SAME counts; pin BOTH
     // DIRECTIONS (a drifted state must refuse, not silently drop
@@ -757,14 +750,14 @@ object MaterializedView {
         VersionedTable.writeChangeData(spark, mvRoot,
           pre.unionByName(post))
       }
-    VersionedTable.commit(spark, mvRoot, mvV, widened.schema,
+    VersionedTable.commit(spark, mvRoot, Some(m), widened.schema,
       VersionedTable.writeData(spark, mvRoot, widened),
       meta = m.meta +
         (SumsKey -> (oldSums ++ sums).mkString(",")) +
         (DistinctsKey -> (oldDistincts ++ distincts).mkString(",")) +
         (MinMaxKey -> (oldMinmax ++ minmax).mkString(",")),
       changeFiles = change,
-      op = "ALTER VIEW ADD COLUMNS", baseM = Some(m))
+      op = "ALTER VIEW ADD COLUMNS")
   }
 
   /** [[addColumns]] for sum columns only. */
@@ -796,7 +789,7 @@ object MaterializedView {
     require(parallelism > 0, s"parallelism must be positive: $parallelism")
     val nodes = views.map(norm).distinct
     val deps: Map[String, Seq[String]] = nodes.map { v =>
-      val m = VersionedTable.readManifest(spark, v, currentOf(spark, v))
+      val m = VersionedTable.snapshot(spark, v)
       require(m.meta.contains(KeysKey), s"$v is not a materialized view")
       val ds =
         if (m.meta.contains(JoinKeysKey))
@@ -875,10 +868,9 @@ object MaterializedView {
     * watermark. */
   def read(spark: SparkSession, mvRoot: String,
       version: Option[Long] = None): DataFrame = {
-    val v = version.getOrElse(currentOf(spark, mvRoot))
-    val m = VersionedTable.readManifest(spark, mvRoot, v)
+    val m = VersionedTable.snapshot(spark, mvRoot, version)
     val (keys, sums, distincts, minmax) = definition(m)
-    VersionedTable.read(spark, mvRoot, Some(v))
+    VersionedTable.read(spark, mvRoot, Some(m.version))
       .select(keys.map(col) ++ (col("cnt") +: sums.map(c =>
         when(col(s"nn_$c") > 0, col(s"raw_$c")).as(s"sum_$c"))) ++
         distincts.map(c => // an all-null group has no sketch: 0, not NULL
@@ -897,16 +889,14 @@ object MaterializedView {
     * of a minmax/hll view means the base is NOT clustered by the
     * group key — see the class doc. */
   def rescanProfile(spark: SparkSession, mvRoot: String): (Int, Int) = {
-    val m = VersionedTable.readManifest(spark, mvRoot,
-      currentOf(spark, mvRoot))
+    val m = VersionedTable.snapshot(spark, mvRoot)
     (m.meta.get("mv.rescan.files_kept").fold(0)(_.toInt),
       m.meta.get("mv.rescan.files_total").fold(0)(_.toInt))
   }
 
   /** Last applied base version (single-table views). */
   def watermark(spark: SparkSession, mvRoot: String): Long = {
-    val m = VersionedTable.readManifest(spark, mvRoot,
-      currentOf(spark, mvRoot))
+    val m = VersionedTable.snapshot(spark, mvRoot)
     require(!m.meta.contains(JoinKeysKey),
       "this is a join view (its batch watermark is a version SUM, " +
         "not a base version) — use watermarks(mv)")
@@ -915,8 +905,7 @@ object MaterializedView {
 
   /** Last applied (left, right) base versions (join views). */
   def watermarks(spark: SparkSession, mvRoot: String): (Long, Long) = {
-    val m = VersionedTable.readManifest(spark, mvRoot,
-      currentOf(spark, mvRoot))
+    val m = VersionedTable.snapshot(spark, mvRoot)
     require(m.meta.contains(JoinKeysKey),
       "this is a single-table view — use watermark(mv)")
     (m.meta(LeftVKey).toLong, m.meta(RightVKey).toLong)

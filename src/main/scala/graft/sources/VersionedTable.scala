@@ -120,27 +120,33 @@ object VersionedTable {
   def currentVersion(spark: SparkSession, root: String): Option[Long] =
     versions(spark, root).lastOption
 
+  private def noTable(root: String): String = s"$root: no versioned table"
+
+  /** Highest published version of `root`; refuses a non-table path. */
+  def headVersion(spark: SparkSession, root: String): Long =
+    currentVersion(spark, root).getOrElse(
+      throw new IllegalArgumentException(noTable(root)))
+
+  /** The manifest of `root` at `version` (default: the head). */
+  private[sources] def snapshot(spark: SparkSession, root: String,
+      version: Option[Long] = None): Manifest =
+    readManifest(spark, root, version.getOrElse(headVersion(spark, root)))
+
   /** The user-visible manifest meta of `root` at `version` (default
     * current) — the public face of the key-value state commits carry
     * (watermarks, view definitions, audit counters). Reserved
     * bookkeeping keys (`_ts`, `_op`, stream batch ids) ride along
     * unfiltered; callers match on their own keys. */
   def metaOf(spark: SparkSession, root: String,
-      version: Option[Long] = None): Map[String, String] = {
-    val v = version.orElse(currentVersion(spark, root)).getOrElse(
-      throw new IllegalArgumentException(s"$root: no versioned table"))
-    readManifest(spark, root, v).meta
-  }
+      version: Option[Long] = None): Map[String, String] =
+    snapshot(spark, root, version).meta
 
   /** Live data-file count of a version's manifest — the signal a
     * compaction policy watches (metadata only; exact without
     * materializing a checkpointed file list). */
   def fileCount(spark: SparkSession, root: String,
-      version: Option[Long] = None): Long = {
-    val v = version.orElse(currentVersion(spark, root)).getOrElse(
-      throw new IllegalArgumentException(s"$root: no versioned table"))
-    readManifest(spark, root, v).fileCount
-  }
+      version: Option[Long] = None): Long =
+    snapshot(spark, root, version).fileCount
 
   /** Total LIVE rows from the manifest's per-file counts minus
     * deletion-vector rows — metadata only, no scan; −1 when any file
@@ -149,11 +155,17 @@ object VersionedTable {
     * callers needing an auditable count should count rows. */
   def rowCount(spark: SparkSession, root: String,
       version: Option[Long] = None): Long = {
-    val v = version.orElse(currentVersion(spark, root)).getOrElse(
-      throw new IllegalArgumentException(s"$root: no versioned table"))
-    val m = readManifest(spark, root, v)
+    val m = snapshot(spark, root, version)
     if (m.files.exists(_.rows < 0)) -1L
     else m.files.map(_.rows).sum - m.dvs.values.map(_._2).sum
+  }
+
+  /** The retained manifests of `root`, newest first, each read only
+    * when reached. */
+  private def history(spark: SparkSession, root: String): Iterator[Manifest] = {
+    val retained = versions(spark, root).reverse
+    require(retained.nonEmpty, noTable(root))
+    retained.iterator.map(v => readManifest(spark, root, v))
   }
 
   /** Every RETAINED manifest version of `root`, ascending — after a
@@ -181,8 +193,7 @@ object VersionedTable {
   def versionAtMeta(spark: SparkSession, root: String, key: String,
       target: Long): Long = {
     val vs = versions(spark, root)
-    if (vs.isEmpty)
-      throw new IllegalArgumentException(s"$root: no versioned table")
+    if (vs.isEmpty) throw new IllegalArgumentException(noTable(root))
     val floor = vs.head
     var v = vs.last
     while (v > floor && metaOf(spark, root, Some(v))(key).toLong > target)
@@ -273,38 +284,30 @@ object VersionedTable {
     // checkpointed layout; relative file paths never start with any of
     // these prefixes (they start with "data/")
     val body = lines.drop(2).filter(_.nonEmpty)
-    val metaLines = body.filter(_.startsWith("meta "))
-    val cdfLines = body.filter(_.startsWith("cdf "))
-    val dvLines = body.filter(_.startsWith("dv "))
-    val cpLines = body.filter(_.startsWith("cp "))
-    val addLines = body.filter(_.startsWith("add "))
-    val removeLines = body.filter(_.startsWith("remove "))
-    val fileLines = body.filterNot(l =>
-      l.startsWith("meta ") || l.startsWith("cdf ") ||
-        l.startsWith("dv ") || l.startsWith("cp ") ||
-        l.startsWith("add ") || l.startsWith("remove "))
-    val meta = metaLines.map { l =>
-      val kv = l.stripPrefix("meta ")
+    val tags = Seq("meta ", "cdf ", "dv ", "cp ", "add ", "remove ")
+    def tagged(tag: String): Seq[String] =
+      body.filter(_.startsWith(tag)).map(_.stripPrefix(tag))
+    val fileLines = body.filterNot(l => tags.exists(l.startsWith))
+    val meta = tagged("meta ").map { kv =>
       val i = kv.indexOf('=')
-      require(i > 0, s"$p: bad meta line '$l'")
+      require(i > 0, s"$p: bad meta line 'meta $kv'")
       kv.take(i) -> kv.drop(i + 1)
     }.toMap
-    val cdfVals = cdfLines.map(_.stripPrefix("cdf "))
-    val dvs = dvLines.map { l =>
-      val Array(fr, dr, n) = l.stripPrefix("dv ").split(' ')
+    val cdfVals = tagged("cdf ")
+    val dvs = tagged("dv ").map { l =>
+      val Array(fr, dr, n) = l.split(' ')
       dec(fr) -> (dec(dr), n.toLong)
     }.toMap
+    val cpLines = tagged("cp ")
     require(cpLines.size <= 1, s"$p: multiple cp lines")
     val cpRef = cpLines.headOption.map { l =>
-      val Array(rel, n) = l.stripPrefix("cp ").split(' ')
+      val Array(rel, n) = l.split(' ')
       (rel, n.toLong)
     }
-    require(cpRef.isDefined || (addLines.isEmpty && removeLines.isEmpty),
+    val (addLines, removes) = (tagged("add "), tagged("remove ").toSet)
+    require(cpRef.isDefined || (addLines.isEmpty && removes.isEmpty),
       s"$p: add/remove lines without a cp line")
-    val adds =
-      if (cpRef.isDefined) addLines.map(l => parseEntry(l.stripPrefix("add ")))
-      else fileLines.map(parseEntry)
-    val removes = removeLines.map(_.stripPrefix("remove ")).toSet
+    val adds = (if (cpRef.isDefined) addLines else fileLines).map(parseEntry)
     val loader: () => Seq[FileEntry] = cpRef match {
       case None => () => adds
       case Some((rel, _)) => () =>
@@ -387,23 +390,20 @@ object VersionedTable {
     }
   }
 
-  /** Publish `files` (+ `meta`) as version `base + 1`. Atomic:
-    * create-exclusive lock reservation (CAS — loser gets
+  /** Publish `files` (+ `meta`) as the version after `base` — the
+    * manifest the caller built the commit on, `None` to create version
+    * 1. Atomic: create-exclusive lock reservation (CAS — loser gets
     * [[CommitConflict]]), then write-temp + rename. */
   // private[sources] so the driver-bound spec can publish a SYNTHETIC
   // 50k-entry manifest and measure planning cost without writing 50k
-  // real files; production callers all sit inside this object
-  private[sources] def commit(spark: SparkSession, root: String, base: Long,
-      schema: StructType, files: Seq[FileEntry],
+  // real files; MaterializedView's schema-evolving rewrite commits here
+  private[sources] def commit(spark: SparkSession, root: String,
+      base: Option[Manifest], schema: StructType, files: Seq[FileEntry],
       meta: Map[String, String] = Map.empty,
       changeFiles: Seq[String] = Seq.empty,
       cdfNone: Boolean = false,
       dvs: Map[String, (String, Long)] = Map.empty,
-      op: String = "WRITE",
-      // the base manifest the caller already holds — saves commit()
-      // re-reading it (and re-materializing its checkpoint list, a
-      // second O(table-files) job per commit) for the Rep decision
-      baseM: Option[Manifest] = None): Long = {
+      op: String = "WRITE"): Long = {
     // validate inputs BEFORE reserving the version: a require firing
     // after the lock is taken would strand an orphan reservation that
     // blocks every writer until a manual recover()
@@ -421,41 +421,30 @@ object VersionedTable {
         adds: Seq[FileEntry], removes: Seq[String])
     val rep: Rep =
       if (files.size < CpThreshold) Rep(None, files, Nil)
-      else {
-        val baseCp = baseM.filter(_.version == base)
-          .orElse(
-            if (base >= 1) Some(readManifest(spark, root, base)) else None)
-          .filter(_.cp.isDefined)
-        baseCp match {
-          case Some(bm) =>
-            val baseFiles = bm.files
-            val baseByRel = baseFiles.iterator.map(e => e.rel -> e).toMap
-            val newRels = files.iterator.map(_.rel).toSet
-            // changed entries (same rel, different stats — impossible
-            // for our immutable data files, handled defensively) count
-            // as remove + add
-            val added = files.filter(e => baseByRel.get(e.rel).forall(_ != e))
-            val addedRels = added.iterator.map(_.rel).toSet
-            val removedRels = baseFiles.iterator.map(_.rel).filter(r =>
-              !newRels.contains(r) || addedRels.contains(r)).toSet
-            val baseAddRels = bm.adds.iterator.map(_.rel).toSet
-            val newAdds =
-              bm.adds.filterNot(e => removedRels.contains(e.rel)) ++ added
-            // remove lines only for rels living in the checkpoint —
-            // keeps Manifest.fileCount arithmetic exact
-            val newRemoves =
-              bm.removes ++ removedRels.filterNot(baseAddRels.contains)
-            if (newAdds.size + newRemoves.size > files.size / 4 + 64)
-              Rep(Some((writeCheckpoint(spark, root, files), files.size)),
-                Nil, Nil)
-            else Rep(Some((bm.cp.get, bm.cpCount)), newAdds,
-              newRemoves.toSeq.sorted)
-          case None =>
-            Rep(Some((writeCheckpoint(spark, root, files), files.size)),
-              Nil, Nil)
-        }
-      }
-    val next = base + 1
+      else base.filter(_.cp.isDefined).flatMap { bm =>
+        val baseFiles = bm.files
+        val baseByRel = baseFiles.iterator.map(e => e.rel -> e).toMap
+        val newRels = files.iterator.map(_.rel).toSet
+        // changed entries (same rel, different stats — impossible for
+        // our immutable data files, handled defensively) count as
+        // remove + add
+        val added = files.filter(e => baseByRel.get(e.rel).forall(_ != e))
+        val addedRels = added.iterator.map(_.rel).toSet
+        val removedRels = baseFiles.iterator.map(_.rel).filter(r =>
+          !newRels.contains(r) || addedRels.contains(r)).toSet
+        val baseAddRels = bm.adds.iterator.map(_.rel).toSet
+        val newAdds =
+          bm.adds.filterNot(e => removedRels.contains(e.rel)) ++ added
+        // remove lines only for rels living in the checkpoint — keeps
+        // Manifest.fileCount arithmetic exact
+        val newRemoves =
+          bm.removes ++ removedRels.filterNot(baseAddRels.contains)
+        if (newAdds.size + newRemoves.size > files.size / 4 + 64) None
+        else Some(Rep(Some((bm.cp.get, bm.cpCount)), newAdds,
+          newRemoves.toSeq.sorted))
+      }.getOrElse(
+        Rep(Some((writeCheckpoint(spark, root, files), files.size)), Nil, Nil))
+    val next = base.fold(0L)(_.version) + 1
     val dir = manifestDir(root)
     val f = fs(spark, dir)
     f.mkdirs(dir)
@@ -621,7 +610,10 @@ object VersionedTable {
     * transaction protocol — parquet footers already hold the same
     * bounds — but Spark's public writer API exposes no per-file hook,
     * and one extra scan of the just-written delta buys exact,
-    * format-independent stats. */
+    * format-independent stats. A file the aggregate never sees (Spark
+    * writes an empty partition 0 as an empty file; no aggregate runs
+    * without a stats column) takes its row count from its footer, and
+    * a zero-row file is deleted and left out of the entries. */
   // private[sources]: MaterializedView's schema-evolving rewrite
   // (addSums) writes its widened state through the same path
   private[sources] def writeData(spark: SparkSession, root: String,
@@ -643,20 +635,32 @@ object VersionedTable {
     val fields = df.schema.fields.toSeq
       .filter(sf => statsSupported(sf.dataType)).take(StatsMaxCols)
     if (rels.isEmpty) return Seq.empty
-    if (fields.isEmpty) return rels.map(FileEntry(_, -1L, Map.empty))
-    val back = spark.read.schema(df.schema).parquet(abs.toString)
-    val aggs = count(lit(1)).as("__vt_rows") +: fields.flatMap { sf =>
-      val c = canonCol(sf.name, sf.dataType)
-      Seq(min(c), max(c),
-        sum(when(col(sf.name).isNull, 1L).otherwise(0L)))
-    }
-    val byName = back.groupBy(input_file_name().as("__vt_file"))
-      .agg(aggs.head, aggs.tail: _*).collect()
-      .map(r => new Path(r.getString(0)).getName -> r).toMap
-    rels.map { rel =>
+    val byName =
+      if (fields.isEmpty) Map.empty[String, org.apache.spark.sql.Row]
+      else {
+        val back = spark.read.schema(df.schema).parquet(abs.toString)
+        val aggs = count(lit(1)).as("__vt_rows") +: fields.flatMap { sf =>
+          val c = canonCol(sf.name, sf.dataType)
+          Seq(min(c), max(c),
+            sum(when(col(sf.name).isNull, 1L).otherwise(0L)))
+        }
+        back.groupBy(input_file_name().as("__vt_file"))
+          .agg(aggs.head, aggs.tail: _*).collect()
+          .map(r => new Path(r.getString(0)).getName -> r).toMap
+      }
+    lazy val conf = spark.sessionState.newHadoopConf()
+    rels.flatMap { rel =>
       val name = new Path(rel).getName
       byName.get(name) match {
-        case None => FileEntry(rel, -1L, Map.empty)
+        case None =>
+          val p = new Path(root, rel)
+          val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
+          val rows = try reader.getRecordCount finally reader.close()
+          if (rows > 0 && fields.nonEmpty) throw new IllegalStateException(
+            s"$p holds $rows row(s) the stats aggregate never saw")
+          if (rows > 0) Some(FileEntry(rel, rows, Map.empty))
+          else { f.delete(p, false); None }
         case Some(r) =>
           val stats = fields.zipWithIndex.map { case (sf, i) =>
             val (mn, mx, nl) = (r.get(2 + i * 3), r.get(3 + i * 3),
@@ -664,7 +668,7 @@ object VersionedTable {
             sf.name -> ColStats(Option(mn).map(statEncode),
               Option(mx).map(statEncode), nl)
           }.toMap
-          FileEntry(rel, r.getLong(1), stats)
+          Some(FileEntry(rel, r.getLong(1), stats))
       }
     }
   }
@@ -772,14 +776,11 @@ object VersionedTable {
 
   /** The table's CHECK constraints at version `v` (name → SQL). */
   def constraints(spark: SparkSession, root: String,
-      v: Option[Long] = None): Map[String, String] = {
-    val ver = v.orElse(currentVersion(spark, root)).getOrElse(
-      throw new IllegalArgumentException(s"$root: no versioned table"))
-    readManifest(spark, root, ver).meta.collect {
+      v: Option[Long] = None): Map[String, String] =
+    snapshot(spark, root, v).meta.collect {
       case (k, sql) if k.startsWith(CheckKeyPrefix) =>
         k.stripPrefix(CheckKeyPrefix) -> sql
     }
-  }
 
   private def constraintChecks(meta: Map[String, String],
       schema: StructType): Seq[(String, Column)] =
@@ -821,9 +822,7 @@ object VersionedTable {
     require(name.nonEmpty && !name.exists(c =>
         c == '=' || c == '\n' || c == '\r' || c.isWhitespace),
       s"bad constraint name '$name'")
-    val base = currentVersion(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"$root: no versioned table"))
-    val m = readManifest(spark, root, base)
+    val m = snapshot(spark, root)
     require(!m.meta.contains(CheckKeyPrefix + name),
       s"constraint '$name' already exists — drop it first")
     // resolve against the schema without a job: analysis of a dummy
@@ -833,21 +832,19 @@ object VersionedTable {
     requireConstraints(scanLive(spark, root, m.schema, m.files, m.dvs,
         physMapOf(m.meta)),
       candidate, m.schema, s"addConstraint '$name'")
-    commit(spark, root, base, m.schema, m.files, candidate, dvs = m.dvs,
-      op = "ADD CONSTRAINT", baseM = Some(m))
+    commit(spark, root, Some(m), m.schema, m.files, candidate, dvs = m.dvs,
+      op = "ADD CONSTRAINT")
   }
 
   /** ALTER TABLE DROP CONSTRAINT: meta-only commit. */
   def dropConstraint(spark: SparkSession, root: String,
       name: String): Long = {
-    val base = currentVersion(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"$root: no versioned table"))
-    val m = readManifest(spark, root, base)
+    val m = snapshot(spark, root)
     require(m.meta.contains(CheckKeyPrefix + name),
       s"no constraint '$name' on $root")
-    commit(spark, root, base, m.schema, m.files,
+    commit(spark, root, Some(m), m.schema, m.files,
       m.meta - (CheckKeyPrefix + name), dvs = m.dvs,
-      op = "DROP CONSTRAINT", baseM = Some(m))
+      op = "DROP CONSTRAINT")
   }
 
   /** Create the table at `root` with `df` as version 1. `meta`
@@ -859,7 +856,7 @@ object VersionedTable {
       meta: Map[String, String] = Map.empty): Long = {
     require(currentVersion(spark, root).isEmpty,
       s"$root already holds a versioned table")
-    commit(spark, root, 0L, nullableSchema(df.schema),
+    commit(spark, root, None, nullableSchema(df.schema),
       writeData(spark, root, df), meta = meta, op = "CREATE")
   }
 
@@ -875,19 +872,16 @@ object VersionedTable {
     val base = currentVersion(spark, root).getOrElse(
       throw new IllegalArgumentException(
         s"$root: no versioned table to replace — use create"))
-    val m = readManifest(spark, root, base)
-    commit(spark, root, base, nullableSchema(df.schema),
-      writeData(spark, root, df), meta = meta, op = "REPLACE",
-      baseM = Some(m))
+    commit(spark, root, Some(readManifest(spark, root, base)),
+      nullableSchema(df.schema),
+      writeData(spark, root, df), meta = meta, op = "REPLACE")
   }
 
   /** The snapshot a reader pins: resolve the manifest once, scan only
     * its files. `version = None` → latest; `Some(v)` → time travel. */
   def read(spark: SparkSession, root: String,
       version: Option[Long] = None): DataFrame = {
-    val v = version.orElse(currentVersion(spark, root)).getOrElse(
-      throw new IllegalArgumentException(s"$root: no versioned table"))
-    val m = readManifest(spark, root, v)
+    val m = snapshot(spark, root, version)
     scanLive(spark, root, m.schema, m.files, m.dvs, physMapOf(m.meta))
   }
 
@@ -898,19 +892,15 @@ object VersionedTable {
     * is one manifest-dir listing plus one manifest HEADER read per
     * probed version, newest first — O(versions since ts), not
     * O(files). */
-  def readAsOf(spark: SparkSession, root: String, tsMillis: Long): DataFrame = {
-    val retained = versions(spark, root).reverse
-    require(retained.nonEmpty, s"$root: no versioned table")
-    val hit = retained.iterator.map(v => readManifest(spark, root, v))
-      .find(_.meta.get(CommitTsKey).forall(_.toLong <= tsMillis))
-    hit match {
+  def readAsOf(spark: SparkSession, root: String, tsMillis: Long): DataFrame =
+    history(spark, root)
+      .find(_.meta.get(CommitTsKey).forall(_.toLong <= tsMillis)) match {
       case Some(m) =>
         scanLive(spark, root, m.schema, m.files, m.dvs, physMapOf(m.meta))
       case None => throw new IllegalArgumentException(
         s"$root: no version existed at timestamp $tsMillis " +
           "(before the table's first commit, or its history was vacuumed)")
     }
-  }
 
   /** RESTORE TO VERSION (Delta `RESTORE`): commit a NEW version whose
     * content is snapshot `v` — history moves forward, nothing is
@@ -919,8 +909,7 @@ object VersionedTable {
     * (immutable, still on disk as long as vacuum keeps version `v`).
     * Refuses if `v`'s files were already vacuumed away. */
   def restore(spark: SparkSession, root: String, v: Long): Long = {
-    val cur = currentVersion(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"$root: no versioned table"))
+    val cur = snapshot(spark, root)
     val m = readManifest(spark, root, v) // throws if vacuumed
     val f = fs(spark, new Path(root))
     // existence via ONE listing per referenced data dir, not one
@@ -939,27 +928,36 @@ object VersionedTable {
       require(f.exists(new Path(root, d)),
         s"restore: $root v$v references vacuumed deletion vector $d")
     }
-    commit(spark, root, cur, m.schema, m.files, m.meta, dvs = m.dvs,
+    commit(spark, root, Some(cur), m.schema, m.files, m.meta, dvs = m.dvs,
       op = s"RESTORE v$v")
   }
 
   /** Scan exactly `entries` under the manifest schema (empty → empty):
     * files are read by their PHYSICAL column names and aliased back to
-    * the logical schema (identity unless columns were renamed). */
+    * the logical schema (identity unless columns were renamed).
+    * `withPos` adds each row's (rel, pos) identity as
+    * `__vt_rel`/`__vt_pos`, taken from the file-source metadata. */
   private def scanEntries(spark: SparkSession, root: String,
       schema: StructType, entries: Seq[FileEntry],
-      phys: Map[String, String] = Map.empty): DataFrame =
+      phys: Map[String, String] = Map.empty,
+      withPos: Boolean = false): DataFrame = {
     if (entries.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else {
-      val scan = spark.read.schema(physSchema(schema, phys))
-        .parquet(entries.map(e => new Path(root, e.rel).toString): _*)
-      if (phys.isEmpty) scan
-      else scan.select(schema.fields.toIndexedSeq.map(f =>
-        col(graft.dag.DataFlowExec.bq(physOf(phys)(f.name)))
-          .as(f.name)): _*)
-    }
+      return spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        if (!withPos) schema
+        else schema.add("__vt_rel", StringType).add("__vt_pos", LongType))
+    val files = spark.read.schema(physSchema(schema, phys))
+      .parquet(entries.map(e => new Path(root, e.rel).toString): _*)
+    val scan =
+      if (!withPos) files
+      else files
+        .withColumn("__vt_rel", relOfFilePath(col("_metadata.file_path")))
+        .withColumn("__vt_pos", col("_metadata.row_index"))
+    if (phys.isEmpty) scan
+    else scan.select(schema.fields.toIndexedSeq.map(f =>
+      col(graft.dag.DataFlowExec.bq(physOf(phys)(f.name))).as(f.name)) ++
+      (if (withPos) Seq(col("__vt_rel"), col("__vt_pos")) else Nil): _*)
+  }
 
   // ---- deletion vectors: merge-on-read row deletes ----------------------
   //
@@ -1019,19 +1017,7 @@ object VersionedTable {
       schema: StructType, entries: Seq[FileEntry],
       dvs: Map[String, (String, Long)],
       phys: Map[String, String] = Map.empty): DataFrame = {
-    if (entries.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        schema.add("__vt_rel", StringType).add("__vt_pos", LongType))
-    val scan0 = spark.read.schema(physSchema(schema, phys))
-      .parquet(entries.map(e => new Path(root, e.rel).toString): _*)
-      .withColumn("__vt_rel", relOfFilePath(col("_metadata.file_path")))
-      .withColumn("__vt_pos", col("_metadata.row_index"))
-    val scan =
-      if (phys.isEmpty) scan0
-      else scan0.select(schema.fields.toIndexedSeq.map(f =>
-        col(graft.dag.DataFlowExec.bq(physOf(phys)(f.name))).as(f.name)) :+
-        col("__vt_rel") :+ col("__vt_pos"): _*)
+    val scan = scanEntries(spark, root, schema, entries, phys, withPos = true)
     dvRows(spark, root, entries, dvs) match {
       case None => scan
       case Some((dv, nDel)) =>
@@ -1217,90 +1203,81 @@ object VersionedTable {
     case _ => None
   }
 
+  /** Could a value in the file's [min, max] for a column (stats `cs`,
+    * type `dt`) satisfy `col OP lit`? True on any doubt; a file with no
+    * non-null value (no min) satisfies no comparison. One range test
+    * per operator, `attr OP lit` form, read off the literal's order
+    * against the file's bounds. */
+  private def rangeMayMatch(cs: ColStats, dt: DataType,
+      lit: (Any, DataType), op: String): Boolean = cs.min match {
+    case None => false
+    case Some(mnS) =>
+      (for {
+        lv <- litDomain(lit._1, lit._2)
+        mn <- statDomain(mnS, dt)
+        mx <- cs.max.flatMap(statDomain(_, dt))
+        cMin <- domCmp(lv, mn)
+        cMax <- domCmp(lv, mx)
+      } yield op match {
+        case "=" | "<=>" => cMin >= 0 && cMax <= 0
+        case "<" => cMin > 0 // need min < lit
+        case "<=" => cMin >= 0
+        case ">" => cMax < 0 // need max > lit
+        case ">=" => cMax <= 0
+        case _ => true
+      }).getOrElse(true)
+  }
+
+  /** `lit OP attr` read as `attr OP' lit`. */
+  private def mirrored(op: String): String = op match {
+    case "<" => ">"
+    case "<=" => ">="
+    case ">" => "<"
+    case ">=" => "<="
+    case sym => sym
+  }
+
   /** Can `entry` possibly contain a row satisfying `conjunct`? True on
     * any doubt. `schema` supplies column types for stat decoding. */
   private def mayContain(entry: FileEntry, conjunct: cexp.Expression,
       schema: StructType,
       phys: Map[String, String] = Map.empty): Boolean = {
-    def fieldType(name: String): Option[DataType] =
-      schema.fields.find(_.name == name).map(_.dataType)
     // stats are keyed by PHYSICAL column name (frozen at write);
     // predicate attrs are logical — map through the column mapping
     def statsOf(name: String): Option[ColStats] =
       entry.stats.get(physOf(phys)(name))
-    // range check: could any non-null value in [min,max] satisfy op-lit?
-    def rangeMayMatch(name: String, lit: (Any, DataType),
-        test: (Int, Int) => Boolean): Boolean = {
-      val verdict = for {
+    def inRange(name: String, lit: (Any, DataType), op: String): Boolean =
+      (for {
         cs <- statsOf(name)
-        dt <- fieldType(name)
-      } yield cs.min match {
-        case None => false // no non-null values: no comparison matches
-        case Some(mnS) =>
-          (for {
-            lv <- litDomain(lit._1, lit._2)
-            mn <- statDomain(mnS, dt)
-            mx <- cs.max.flatMap(statDomain(_, dt))
-            cMin <- domCmp(lv, mn)
-            cMax <- domCmp(lv, mx)
-          } yield test(cMin, cMax)).getOrElse(true)
-      }
-      verdict.getOrElse(true)
-    }
+        dt <- schema.fields.find(_.name == name).map(_.dataType)
+      } yield rangeMayMatch(cs, dt, lit, op)).getOrElse(true)
     conjunct match {
-      // attr OP lit (and the mirrored lit OP attr forms)
-      case cexp.EqualTo(l, r) =>
-        (attrNameOf(l), litOf(r), attrNameOf(r), litOf(l)) match {
-          case (Some(n), Some(v), _, _) =>
-            v._1 != null && rangeMayMatch(n, v,
-              (cMin, cMax) => cMin >= 0 && cMax <= 0)
-          case (_, _, Some(n), Some(v)) =>
-            v._1 != null && rangeMayMatch(n, v,
-              (cMin, cMax) => cMin >= 0 && cMax <= 0)
-          case _ => true
-        }
-      case cexp.EqualNullSafe(l, r) =>
-        (attrNameOf(l), litOf(r), attrNameOf(r), litOf(l)) match {
-          case (Some(n), Some(v), _, _) if v._1 != null =>
-            rangeMayMatch(n, v, (cMin, cMax) => cMin >= 0 && cMax <= 0)
-          case (_, _, Some(n), Some(v)) if v._1 != null =>
-            rangeMayMatch(n, v, (cMin, cMax) => cMin >= 0 && cMax <= 0)
-          case (Some(n), Some(v), _, _) => // attr <=> NULL: needs a null
+      case c: cexp.BinaryComparison =>
+        val attrOpLit =
+          (attrNameOf(c.left), litOf(c.right), attrNameOf(c.right),
+            litOf(c.left)) match {
+            case (Some(n), Some(v), _, _) => Some((n, c.symbol, v))
+            case (_, _, Some(n), Some(v)) => Some((n, mirrored(c.symbol), v))
+            case _ => None
+          }
+        attrOpLit match {
+          case Some((n, "<=>", (null, _))) => // attr <=> NULL: needs a null
             statsOf(n).forall(_.nulls > 0)
-          case _ => true
+          case Some((n, op, v)) => v._1 != null && inRange(n, v, op)
+          case None => true
         }
-      case cexp.LessThan(l, r) =>
-        (attrNameOf(l), litOf(r), attrNameOf(r), litOf(l)) match {
-          case (Some(n), Some(v), _, _) => // attr < lit: need min < lit
-            v._1 != null && rangeMayMatch(n, v, (cMin, _) => cMin > 0)
-          case (_, _, Some(n), Some(v)) => // lit < attr: need max > lit
-            v._1 != null && rangeMayMatch(n, v, (_, cMax) => cMax < 0)
-          case _ => true
-        }
-      case cexp.LessThanOrEqual(l, r) =>
-        (attrNameOf(l), litOf(r), attrNameOf(r), litOf(l)) match {
-          case (Some(n), Some(v), _, _) =>
-            v._1 != null && rangeMayMatch(n, v, (cMin, _) => cMin >= 0)
-          case (_, _, Some(n), Some(v)) =>
-            v._1 != null && rangeMayMatch(n, v, (_, cMax) => cMax <= 0)
-          case _ => true
-        }
-      case cexp.GreaterThan(l, r) =>
-        (attrNameOf(l), litOf(r), attrNameOf(r), litOf(l)) match {
-          case (Some(n), Some(v), _, _) => // attr > lit: need max > lit
-            v._1 != null && rangeMayMatch(n, v, (_, cMax) => cMax < 0)
-          case (_, _, Some(n), Some(v)) => // lit > attr: need min < lit
-            v._1 != null && rangeMayMatch(n, v, (cMin, _) => cMin > 0)
-          case _ => true
-        }
-      case cexp.GreaterThanOrEqual(l, r) =>
-        (attrNameOf(l), litOf(r), attrNameOf(r), litOf(l)) match {
-          case (Some(n), Some(v), _, _) =>
-            v._1 != null && rangeMayMatch(n, v, (_, cMax) => cMax <= 0)
-          case (_, _, Some(n), Some(v)) =>
-            v._1 != null && rangeMayMatch(n, v, (cMin, _) => cMin >= 0)
-          case _ => true
-        }
+      // the analyzed plan keeps BETWEEN as a node whose coerced form is
+      // `input >= lower AND input <= upper` over a common-expression
+      // reference to `input`: inline the reference and test that
+      case b: cexp.Between => b.replacement match {
+        case cexp.With(body, defs) =>
+          val byId = defs.map(d => d.id -> d.child).toMap
+          mayContain(entry, body.transform {
+            case r: cexp.CommonExpressionRef if byId.contains(r.id) =>
+              byId(r.id)
+          }, schema, phys)
+        case other => mayContain(entry, other, schema, phys)
+      }
       case cexp.In(a, lits) =>
         attrNameOf(a) match {
           case Some(n) if lits.forall(_.foldable) =>
@@ -1315,8 +1292,7 @@ object VersionedTable {
               val vs = resolved.flatten.filter(_._1 != null)
               // all-null IN list never matches; otherwise any member
               // in range keeps the file
-              vs.exists(v => rangeMayMatch(n, v,
-                (cMin, cMax) => cMin >= 0 && cMax <= 0))
+              vs.exists(v => inRange(n, v, "="))
             }
           case _ => true
         }
@@ -1348,12 +1324,13 @@ object VersionedTable {
     }
   }
 
-  private[sources] def pruneEntries(spark: SparkSession, schema: StructType,
-      entries: Seq[FileEntry], pred: Column,
-      phys: Map[String, String] = Map.empty): Seq[FileEntry] = {
+  /** The pruning rule for `pred`: keeps a file entry unless its stats
+    * prove no row matches. Serializable, so it also runs as a
+    * distributed filter over a checkpoint. */
+  private def mayMatch(spark: SparkSession, schema: StructType, pred: Column,
+      phys: Map[String, String]): FileEntry => Boolean = {
     val conjuncts = resolvedConjuncts(spark, schema, pred)
-    entries.filter(e =>
-      conjuncts.forall(c => mayContain(e, c, schema, phys)))
+    e => conjuncts.forall(c => mayContain(e, c, schema, phys))
   }
 
   /** Prune a version's file list for `pred` WITHOUT materializing a
@@ -1367,27 +1344,22 @@ object VersionedTable {
     * unserializable conjunct falls back the same way (pruning is an
     * optimization — both paths are exact). */
   private def prunedEntriesOf(spark: SparkSession, root: String,
-      m: Manifest, pred: Column): Seq[FileEntry] = m.cp match {
-    case None =>
-      pruneEntries(spark, m.schema, m.files, pred, physMapOf(m.meta))
-    case Some(cpRel) =>
-      val conjuncts = resolvedConjuncts(spark, m.schema, pred)
-      val schema = m.schema
-      val removes = m.removes
-      val phys = physMapOf(m.meta)
-      val fromCp =
-        try checkpointDs(spark, root, cpRel)
-          .filter((e: FileEntry) => !removes.contains(e.rel) &&
-            conjuncts.forall(c => mayContain(e, c, schema, phys)))
-          .collect().toSeq
-        catch { case _: org.apache.spark.SparkException =>
-          readCheckpoint(spark, root, cpRel)
-            .filterNot(e => removes.contains(e.rel))
-            .filter(e =>
-              conjuncts.forall(c => mayContain(e, c, schema, phys)))
-        }
-      fromCp ++ m.adds.filter(e =>
-        conjuncts.forall(c => mayContain(e, c, schema, phys)))
+      m: Manifest, pred: Column): Seq[FileEntry] = {
+    val keep = mayMatch(spark, m.schema, pred, physMapOf(m.meta))
+    m.cp match {
+      case None => m.files.filter(keep)
+      case Some(cpRel) =>
+        val removes = m.removes
+        val fromCp =
+          try checkpointDs(spark, root, cpRel)
+            .filter((e: FileEntry) => !removes.contains(e.rel) && keep(e))
+            .collect().toSeq
+          catch { case _: org.apache.spark.SparkException =>
+            readCheckpoint(spark, root, cpRel)
+              .filter(e => !removes.contains(e.rel) && keep(e))
+          }
+        fromCp ++ m.adds.filter(keep)
+    }
   }
 
   /** Snapshot read with manifest-level data skipping: scan only the
@@ -1396,9 +1368,7 @@ object VersionedTable {
     * files, never change the answer). */
   def readWhere(spark: SparkSession, root: String, pred: Column,
       version: Option[Long] = None): DataFrame = {
-    val v = version.orElse(currentVersion(spark, root)).getOrElse(
-      throw new IllegalArgumentException(s"$root: no versioned table"))
-    val m = readManifest(spark, root, v)
+    val m = snapshot(spark, root, version)
     scanLive(spark, root, m.schema,
       prunedEntriesOf(spark, root, m, pred), m.dvs,
       physMapOf(m.meta)).filter(pred)
@@ -1421,9 +1391,7 @@ object VersionedTable {
       version: Option[Long] = None): Long = {
     require(currentVersion(spark, dst).isEmpty,
       s"$dst already holds a versioned table")
-    val v = version.orElse(currentVersion(spark, src)).getOrElse(
-      throw new IllegalArgumentException(s"$src: no versioned table"))
-    val m = readManifest(spark, src, v)
+    val m = snapshot(spark, src, version)
     val srcFs = fs(spark, new Path(src))
     def abs(rel: String): String =
       if (new Path(rel).isAbsolute) rel
@@ -1434,8 +1402,8 @@ object VersionedTable {
     // streaming batch watermarks do NOT — the clone is a new table
     // whose ingestion history starts here
     val forked = m.meta.filterNot(_._1.startsWith("stream."))
-    commit(spark, dst, 0L, m.schema, borrowed, forked, dvs = dvs,
-      op = s"CLONE $src v$v")
+    commit(spark, dst, None, m.schema, borrowed, forked, dvs = dvs,
+      op = s"CLONE $src v${m.version}")
   }
 
   /** DESCRIBE HISTORY: one row per surviving version, newest first —
@@ -1447,18 +1415,15 @@ object VersionedTable {
     * O(versions), never O(files) (checkpointed file counts come from
     * the manifest arithmetic, not the list). */
   def describeHistory(spark: SparkSession, root: String): DataFrame = {
-    val retained = versions(spark, root).reverse.toIndexedSeq
-    require(retained.nonEmpty, s"$root: no versioned table")
-    val rows = retained.map { v =>
-      val m = readManifest(spark, root, v)
+    val rows = history(spark, root).map { m =>
       val capture =
         if (m.cdfNone) "none"
         else if (m.changeFiles.nonEmpty) "cdf"
         else "derivable"
-      (v, m.meta.getOrElse(OpKey, "WRITE"),
+      (m.version, m.meta.getOrElse(OpKey, "WRITE"),
         m.meta.get(CommitTsKey).map(_.toLong).getOrElse(0L),
         m.fileCount, m.dvs.values.map(_._2).sum, capture)
-    }
+    }.toIndexedSeq
     import spark.implicits._
     rows.toDF("version", "op", "commit_ts", "file_count", "dv_rows",
       "change_capture")
@@ -1480,9 +1445,7 @@ object VersionedTable {
     * caller asserts data skipping with. */
   def pruneProfile(spark: SparkSession, root: String, pred: Column,
       version: Option[Long] = None): (Int, Int) = {
-    val v = version.orElse(currentVersion(spark, root)).getOrElse(
-      throw new IllegalArgumentException(s"$root: no versioned table"))
-    val m = readManifest(spark, root, v)
+    val m = snapshot(spark, root, version)
     (prunedEntriesOf(spark, root, m, pred).size, m.fileCount.toInt)
   }
 
@@ -1491,34 +1454,43 @@ object VersionedTable {
   private def cowWhere(spark: SparkSession, root: String, pred: Column,
       cdf: Boolean = false, op: String = "WRITE")(
       rebuild: DataFrame => DataFrame): Long = {
-    val base = currentVersion(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"$root: no versioned table"))
-    val m = readManifest(spark, root, base)
+    val m = snapshot(spark, root)
+    val touched =
+      m.files.filter(mayMatch(spark, m.schema, pred, physMapOf(m.meta)))
+    if (touched.isEmpty) return m.version // provably nothing matches
+    cowTail(spark, root, m, touched, m.meta, cdf, op,
+      "copy-on-write rewrite")(rebuild)
+  }
+
+  /** The tail every copy-on-write commit shares: rebuild the live rows
+    * of the `rewrite` files (deletion vectors applied) into their
+    * replacement, write it cast to the table schema, capture the
+    * row-level change set when `cdf`, and publish it beside the
+    * carried files, retiring the rewritten files' deletion vectors.
+    * `context` names the write in a constraint refusal. */
+  private def cowTail(spark: SparkSession, root: String, m: Manifest,
+      rewrite: Seq[FileEntry], meta: Map[String, String], cdf: Boolean,
+      op: String, context: String)(rebuild: DataFrame => DataFrame): Long = {
     val phys = physMapOf(m.meta)
-    val touched = pruneEntries(spark, m.schema, m.files, pred, phys)
-    if (touched.isEmpty) return base // provably nothing matches
-    val touchedSet = touched.map(_.rel).toSet
-    val kept = m.files.filterNot(e => touchedSet.contains(e.rel))
-    // live rows: a rewritten file's deletion vector is applied here
-    // and retired below (the rewrite materializes it)
-    val before = scanLive(spark, root, m.schema, touched, m.dvs, phys)
+    val rels = rewrite.map(_.rel).toSet
+    val before = scanLive(spark, root, m.schema, rewrite, m.dvs, phys)
     // persisted across the emptiness probe and the write: the rebuild
     // is the mutation's dominant join/filter work, not worth twice
-    val replacement = rebuild(before)
-      .select(m.schema.fields.toSeq.map(f =>
-        col(f.name).cast(f.dataType).as(f.name)): _*).persist()
+    val rows = rebuild(before).select(m.schema.fields.toSeq.map(f =>
+      col(f.name).cast(f.dataType).as(f.name)): _*).persist()
     val newEntries =
       try {
-        if (replacement.isEmpty) Seq.empty
+        if (rows.isEmpty) Seq.empty
         else {
-          requireConstraints(replacement, m.meta, m.schema,
-            "copy-on-write rewrite")
-          writeData(spark, root, replacement, phys)
+          requireConstraints(rows, m.meta, m.schema, context)
+          writeData(spark, root, rows, phys)
         }
-      } finally { replacement.unpersist(); () }
+      } finally { rows.unpersist(); () }
     val change: Seq[String] =
       if (!cdf) Seq.empty
       else {
+        // persisted across the isEmpty probe and the write, like the
+        // replacement
         val diff = changeDiff(before,
           scanEntries(spark, root, m.schema, newEntries, phys)).persist()
         try {
@@ -1526,9 +1498,10 @@ object VersionedTable {
           else writeChangeData(spark, root, diff)
         } finally { diff.unpersist(); () }
       }
-    commit(spark, root, base, m.schema, kept ++ newEntries, m.meta,
+    commit(spark, root, Some(m), m.schema,
+      m.files.filterNot(e => rels.contains(e.rel)) ++ newEntries, meta,
       changeFiles = change, cdfNone = cdf && change.isEmpty,
-      dvs = m.dvs -- touchedSet, op = op, baseM = Some(m))
+      dvs = m.dvs -- rels, op = op)
   }
 
   /** DELETE WHERE pred, file-granular via data skipping: a file whose
@@ -1559,12 +1532,10 @@ object VersionedTable {
     * rewrite. */
   def deleteWhereMor(spark: SparkSession, root: String, pred: Column,
       cdf: Boolean = false): Long = {
-    val base = currentVersion(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"$root: no versioned table"))
-    val m = readManifest(spark, root, base)
+    val m = snapshot(spark, root)
     val phys = physMapOf(m.meta)
-    val candidates = pruneEntries(spark, m.schema, m.files, pred, phys)
-    if (candidates.isEmpty) return base // provably nothing matches
+    val candidates = m.files.filter(mayMatch(spark, m.schema, pred, phys))
+    if (candidates.isEmpty) return m.version // provably nothing matches
     // live rows only: a position already in a DV must not re-delete
     // (it would inflate counts and emit phantom CDF deletes)
     val hits = scanWithPos(spark, root, m.schema, candidates, m.dvs,
@@ -1576,7 +1547,7 @@ object VersionedTable {
       val perId = hits.groupBy(col("__vt_rel"))
         .agg(count(lit(1)).as("n")).collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
-      if (perId.isEmpty) return base
+      if (perId.isEmpty) return m.version
       val entryById = m.files.map(e => dvFileId(e.rel) -> e).toMap
       val newCounts: Map[String, Long] = perId.map { case (id, n) =>
         id -> (n + m.dvs.get(entryById(id).rel).map(_._2).getOrElse(0L))
@@ -1594,14 +1565,12 @@ object VersionedTable {
         else writeChangeData(spark, root,
           hits.select(m.schema.fieldNames.map(col).toIndexedSeq: _*)
             .withColumn("_change_type", lit("delete")))
-      if (partialIds.isEmpty) {
-        // every touched file died whole: a pure file-list shrink
-        commit(spark, root, base, m.schema,
-          m.files.filterNot(e => deadRels.contains(e.rel)), m.meta,
-          changeFiles = change, dvs = m.dvs -- deadRels, op = "DELETE MOR", baseM = Some(m))
-      } else {
-        // new DV set for the partially-deleted files = their existing
-        // positions ∪ the new hits, rewritten whole into one fresh dir
+      // every touched file that died whole is a pure file-list shrink;
+      // the partially-deleted files' new DV set = their existing
+      // positions ∪ the new hits, rewritten whole into one fresh dir
+      val newDvs =
+        if (partialIds.isEmpty) m.dvs -- deadRels
+        else {
         val newPos = hits
           .filter(col("__vt_rel").isin(partialIds.toSeq: _*))
           .select(col("__vt_rel").as("file"), col("__vt_pos").as("pos"))
@@ -1613,12 +1582,12 @@ object VersionedTable {
           .getOrElse(newPos)
         val sub = s"deletes/${java.util.UUID.randomUUID()}"
         allPos.repartition(1).write.parquet(new Path(root, sub).toString)
-        val newDvs = (m.dvs -- deadRels) ++ partialIds.iterator.map(id =>
+        (m.dvs -- deadRels) ++ partialIds.iterator.map(id =>
           entryById(id).rel -> (sub, newCounts(id))).toMap
-        commit(spark, root, base, m.schema,
-          m.files.filterNot(e => deadRels.contains(e.rel)), m.meta,
-          changeFiles = change, dvs = newDvs, op = "DELETE MOR", baseM = Some(m))
       }
+      commit(spark, root, Some(m), m.schema,
+        m.files.filterNot(e => deadRels.contains(e.rel)), m.meta,
+        changeFiles = change, dvs = newDvs, op = "DELETE MOR")
     } finally { hits.unpersist(); () }
   }
 
@@ -1632,23 +1601,37 @@ object VersionedTable {
   def materializeDeletes(spark: SparkSession, root: String,
       targetPartitions: Int = 1, sortCols: Seq[String] = Seq.empty): Long = {
     require(targetPartitions > 0, "targetPartitions must be positive")
-    val base = currentVersion(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"$root: no versioned table"))
-    val m = readManifest(spark, root, base)
+    val m = snapshot(spark, root)
     val dvd = m.files.filter(e => m.dvs.contains(e.rel))
-    if (dvd.isEmpty) return base
-    val phys = physMapOf(m.meta)
-    val scanned = scanLive(spark, root, m.schema, dvd, m.dvs, phys)
-    val rows =
-      if (sortCols.isEmpty) scanned.repartition(targetPartitions)
-      else scanned
-        .repartitionByRange(targetPartitions, sortCols.map(col): _*)
-        .sortWithinPartitions(sortCols.map(col): _*)
-    val kept = m.files.filterNot(e => m.dvs.contains(e.rel))
-    commit(spark, root, base, m.schema,
-      kept ++ writeData(spark, root, rows, phys), m.meta, cdfNone = true,
-      op = "MATERIALIZE DELETES", baseM = Some(m))
+    if (dvd.isEmpty) return m.version
+    rewriteLayout(spark, root, m, dvd, "MATERIALIZE DELETES")(
+      laidOut(targetPartitions, sortCols))
   }
+
+  /** The layout rewrite every OPTIMIZE-style commit shares: scan the
+    * live rows of `rewrite`, lay them out, write them, and publish them
+    * beside the carried files as a provably zero-change version (cdf
+    * none), retiring the rewritten files' deletion vectors. */
+  private def rewriteLayout(spark: SparkSession, root: String, m: Manifest,
+      rewrite: Seq[FileEntry], op: String)(
+      layout: DataFrame => DataFrame): Long = {
+    val phys = physMapOf(m.meta)
+    val rels = rewrite.map(_.rel).toSet
+    val rows = layout(scanLive(spark, root, m.schema, rewrite, m.dvs, phys))
+    commit(spark, root, Some(m), m.schema,
+      m.files.filterNot(e => rels.contains(e.rel)) ++
+        writeData(spark, root, rows, phys),
+      m.meta, cdfNone = true, dvs = m.dvs -- rels, op = op)
+  }
+
+  /** `targetPartitions` files, range-clustered and sorted on `sortCols`
+    * when given — a plain repartition would interleave the ranges of a
+    * clustered table and silently turn data skipping back off. */
+  private def laidOut(targetPartitions: Int, sortCols: Seq[String])(
+      df: DataFrame): DataFrame =
+    if (sortCols.isEmpty) df.repartition(targetPartitions)
+    else df.repartitionByRange(targetPartitions, sortCols.map(col): _*)
+      .sortWithinPartitions(sortCols.map(col): _*)
 
   /** UPDATE ... SET `set` WHERE pred, same file-granular discipline.
     * Each SET expression must resolve to the column's schema type or a
@@ -1685,15 +1668,13 @@ object VersionedTable {
 
   /** Append-only commit: new files, no rewrite, manifest grows. */
   def append(spark: SparkSession, root: String, df: DataFrame): Long = {
-    val base = currentVersion(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"$root: no versioned table"))
-    val m = readManifest(spark, root, base)
+    val m = snapshot(spark, root)
     requireConforms(df, m.schema, "append")
     val aligned = df.select(m.schema.fieldNames.map(col).toIndexedSeq: _*)
     requireConstraints(aligned, m.meta, m.schema, "append")
-    commit(spark, root, base, m.schema,
+    commit(spark, root, Some(m), m.schema,
       m.files ++ writeData(spark, root, aligned, physMapOf(m.meta)),
-      m.meta, dvs = m.dvs, op = "APPEND", baseM = Some(m))
+      m.meta, dvs = m.dvs, op = "APPEND")
   }
 
   /** Append with SCHEMA EVOLUTION (Delta `mergeSchema`): columns of
@@ -1707,9 +1688,7 @@ object VersionedTable {
     * Each version keeps ITS OWN schema: time travel to a pre-evolution
     * version reads the old shape. */
   def appendEvolve(spark: SparkSession, root: String, df: DataFrame): Long = {
-    val base = currentVersion(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"$root: no versioned table"))
-    val m = readManifest(spark, root, base)
+    val m = snapshot(spark, root)
     val existing = m.schema.fields.map(f => f.name -> f.dataType).toMap
     df.schema.fields.foreach { f =>
       existing.get(f.name).foreach { dt =>
@@ -1736,9 +1715,9 @@ object VersionedTable {
       else lit(null).cast(newSchema(n).dataType).as(n)
     }: _*)
     requireConstraints(aligned, newMeta, newSchema, "appendEvolve")
-    commit(spark, root, base, newSchema,
+    commit(spark, root, Some(m), newSchema,
       m.files ++ writeData(spark, root, aligned, physMapOf(newMeta)),
-      newMeta, dvs = m.dvs, op = "APPEND EVOLVE", baseM = Some(m))
+      newMeta, dvs = m.dvs, op = "APPEND EVOLVE")
   }
 
   /** The constraints (by name) whose SQL references column `colName`
@@ -1762,9 +1741,7 @@ object VersionedTable {
       to: String): Long = {
     require(to.nonEmpty && !to.exists(c => c == '=' || c == '\n' ||
         c == '\r'), s"bad column name '$to'")
-    val base = currentVersion(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"$root: no versioned table"))
-    val m = readManifest(spark, root, base)
+    val m = snapshot(spark, root)
     require(m.schema.fieldNames.contains(from),
       s"renameColumn: no column '$from' in ${m.schema.fieldNames.toSeq}")
     require(!m.schema.fieldNames.contains(to),
@@ -1777,8 +1754,8 @@ object VersionedTable {
     val newMeta = m.meta - (PhysKeyPrefix + from) + (PhysKeyPrefix + to -> p)
     val newSchema = StructType(m.schema.fields.map(f =>
       if (f.name == from) f.copy(name = to) else f))
-    commit(spark, root, base, newSchema, m.files, newMeta, dvs = m.dvs,
-      op = "RENAME COLUMN", baseM = Some(m))
+    commit(spark, root, Some(m), newSchema, m.files, newMeta, dvs = m.dvs,
+      op = "RENAME COLUMN")
   }
 
   /** ALTER TABLE DROP COLUMN: metadata-only — the logical field leaves
@@ -1787,9 +1764,7 @@ object VersionedTable {
     * the data stays in place for time travel. Constraints referencing
     * the column must be dropped first. */
   def dropColumn(spark: SparkSession, root: String, name: String): Long = {
-    val base = currentVersion(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"$root: no versioned table"))
-    val m = readManifest(spark, root, base)
+    val m = snapshot(spark, root)
     require(m.schema.fieldNames.contains(name),
       s"dropColumn: no column '$name' in ${m.schema.fieldNames.toSeq}")
     require(m.schema.fields.length >= 2,
@@ -1802,8 +1777,8 @@ object VersionedTable {
     val newMeta = m.meta - (PhysKeyPrefix + name) +
       (PhysDropPrefix + p -> "1")
     val newSchema = StructType(m.schema.fields.filterNot(_.name == name))
-    commit(spark, root, base, newSchema, m.files, newMeta, dvs = m.dvs,
-      op = "DROP COLUMN", baseM = Some(m))
+    commit(spark, root, Some(m), newSchema, m.files, newMeta, dvs = m.dvs,
+      op = "DROP COLUMN")
   }
 
   /** Shared copy-on-write core: split the current snapshot into the
@@ -1824,12 +1799,10 @@ object VersionedTable {
         m => Some(m),
       cdf: Boolean = false, op: String = "MERGE")(
       rebuild: (DataFrame, DataFrame, DataFrame) => DataFrame): Long = {
-    val base = currentVersion(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"$root: no versioned table"))
-    val m = readManifest(spark, root, base)
+    val m = snapshot(spark, root)
     val nextMeta = metaUpdate(m.meta) match {
       case Some(nm) => nm
-      case None => return base // idempotent replay: nothing to do
+      case None => return m.version // idempotent replay: nothing to do
     }
     requireConforms(source, m.schema, "copy-on-write source")
     val srcKeys = source.select(keys.map(col): _*).dropDuplicates(keys)
@@ -1863,38 +1836,9 @@ object VersionedTable {
           matchableP(k) <=> srcKeys(k)).reduceOption(_ && _).getOrElse(lit(true)))
         .select(col("__vt_rel")).distinct()
         .collect().map(_.getString(0)).toSet
-    val (affectedE, keptE) =
-      m.files.partition(e => affectedIds.contains(dvFileId(e.rel)))
-    val affectedRows =
-      scanLive(spark, root, m.schema, affectedE, m.dvs, phys)
-    val replacement = rebuild(affectedRows, source, matchable)
-      .select(m.schema.fields.toSeq.map(f =>
-        col(f.name).cast(f.dataType).as(f.name)): _*).persist()
-    val newEntries =
-      try {
-        if (replacement.isEmpty) Seq.empty
-        else {
-          requireConstraints(replacement, m.meta, m.schema,
-            "merge/upsert rewrite")
-          writeData(spark, root, replacement, phys)
-        }
-      } finally { replacement.unpersist(); () }
-    val change: Seq[String] =
-      if (!cdf) Seq.empty
-      else {
-        // persisted across the isEmpty probe and the write — the diff
-        // is two exceptAll shuffles over the rewrite, not worth twice
-        val diff = changeDiff(affectedRows,
-          scanEntries(spark, root, m.schema, newEntries, phys)).persist()
-        try {
-          if (diff.isEmpty) Seq.empty
-          else writeChangeData(spark, root, diff)
-        } finally { diff.unpersist(); () }
-      }
-    commit(spark, root, base, m.schema, keptE ++ newEntries, nextMeta,
-      changeFiles = change, cdfNone = cdf && change.isEmpty,
-      dvs = m.dvs -- affectedE.map(_.rel), op = op,
-      baseM = Some(m))
+    cowTail(spark, root, m,
+      m.files.filter(e => affectedIds.contains(dvFileId(e.rel))), nextMeta,
+      cdf, op, "merge/upsert rewrite")(rebuild(_, source, matchable))
   }
 
   /** Files that may hold a key matching ANY source key: per key column,
@@ -1909,42 +1853,33 @@ object VersionedTable {
     // table schema but evaluated on the source, so a dtype mismatch
     // (int feed against a long dimension) must fall back to scanning,
     // not miscompare
+    val typeOf = m.schema.fields.map(f => f.name -> f.dataType).toMap
     val statKeys = keys.filter { k =>
-      val tableType = m.schema.fields.find(_.name == k).map(_.dataType)
       val srcType = srcKeys.schema.fields.find(_.name == k).map(_.dataType)
-      tableType.exists(statsSupported) && tableType == srcType
+      typeOf.get(k).exists(statsSupported) && typeOf.get(k) == srcType
     }
     if (statKeys.isEmpty) return m.files
     val phys = physMapOf(m.meta)
     val aggs = statKeys.flatMap { k =>
-      val dt = m.schema.fields.find(_.name == k).get.dataType
-      val c = canonCol(k, dt)
+      val c = canonCol(k, typeOf(k))
       Seq(min(c), max(c), sum(when(col(k).isNull, 1L).otherwise(0L)))
     }
     val r = srcKeys.agg(aggs.head, aggs.tail: _*).collect()(0)
     m.files.filter { e =>
       statKeys.zipWithIndex.forall { case (k, i) =>
-        val dt = m.schema.fields.find(_.name == k).get.dataType
+        val dt = typeOf(k)
         val (sMn, sMx) = (r.get(i * 3), r.get(1 + i * 3))
         // sum() over an EMPTY source is NULL, not 0 — an empty source
         // has no null keys and no range, so nothing is a candidate
         val srcNulls = if (r.isNullAt(2 + i * 3)) 0L else r.getLong(2 + i * 3)
         val nullMatch = srcNulls > 0 &&
           e.stats.get(physOf(phys)(k)).forall(_.nulls > 0)
+        // [min, max] overlaps the source's [lo, hi]: k >= lo AND k <= hi
         val overlap =
           (e.stats.get(physOf(phys)(k)), Option(sMn), Option(sMx)) match {
-          case (Some(cs), Some(mn), Some(mx)) => cs.min match {
-            case None => false // all-null file never range-matches
-            case Some(fMnS) =>
-              (for {
-                fMn <- statDomain(fMnS, dt)
-                fMx <- cs.max.flatMap(statDomain(_, dt))
-                lo <- litDomain(mn, canonLitType(dt))
-                hi <- litDomain(mx, canonLitType(dt))
-                c1 <- domCmp(fMx, lo)
-                c2 <- domCmp(fMn, hi)
-              } yield c1 >= 0 && c2 <= 0).getOrElse(true)
-          }
+          case (Some(cs), Some(lo), Some(hi)) =>
+            rangeMayMatch(cs, dt, (lo, canonLitType(dt)), ">=") &&
+              rangeMayMatch(cs, dt, (hi, canonLitType(dt)), "<=")
           case (None, _, _) => true // no stats: must scan
           case _ => false // source has ONLY null keys: no range match
         }
@@ -2079,10 +2014,7 @@ object VersionedTable {
       expectMeta: Map[String, String] = Map.empty): Long = {
     require(queryName.nonEmpty && !queryName.contains('='),
       s"bad queryName '$queryName'")
-    requireConforms(inserts,
-      readManifest(spark, root, currentVersion(spark, root).getOrElse(
-        throw new IllegalArgumentException(s"$root: no versioned table")))
-        .schema, "streamingApply")
+    requireConforms(inserts, snapshot(spark, root).schema, "streamingApply")
     val metaKey = s"stream.$queryName.batch"
     val touch = inserts.select(keys.map(col): _*)
       .unionByName(deleteKeys.select(keys.map(col): _*))
@@ -2140,8 +2072,7 @@ object VersionedTable {
     * re-read the snapshot instead). */
   def readAppendsSince(spark: SparkSession, root: String, fromVersion: Long,
       toVersion: Option[Long] = None): DataFrame = {
-    val to = toVersion.orElse(currentVersion(spark, root)).getOrElse(
-      throw new IllegalArgumentException(s"$root: no versioned table"))
+    val to = toVersion.getOrElse(headVersion(spark, root))
     require(fromVersion >= 1 && fromVersion <= to,
       s"need 1 <= fromVersion <= $to, got $fromVersion (a before-create " +
         "feed is readChanges(root, 0), which emits version 1 as inserts)")
@@ -2187,8 +2118,7 @@ object VersionedTable {
     * multisets) reproduces the TO snapshot exactly — proven in spec. */
   def readChanges(spark: SparkSession, root: String, fromVersion: Long,
       toVersion: Option[Long] = None): DataFrame = {
-    val to = toVersion.orElse(currentVersion(spark, root)).getOrElse(
-      throw new IllegalArgumentException(s"$root: no versioned table"))
+    val to = toVersion.getOrElse(headVersion(spark, root))
     // fromVersion = 0 reads from BEFORE the table existed: version 1
     // (create) surfaces as pure inserts — what a streaming tail that
     // attaches before the first commit needs
@@ -2278,26 +2208,14 @@ object VersionedTable {
   def compact(spark: SparkSession, root: String, smallFileBytes: Long,
       targetPartitions: Int = 1, sortCols: Seq[String] = Seq.empty): Long = {
     require(targetPartitions > 0, "targetPartitions must be positive")
-    val base = currentVersion(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"$root: no versioned table"))
-    val m = readManifest(spark, root, base)
+    val m = snapshot(spark, root)
     val f = fs(spark, new Path(root))
-    val (small, big) = m.files.partition(e =>
+    val small = m.files.filter(e =>
       f.getFileStatus(new Path(root, e.rel)).getLen < smallFileBytes)
-    if (small.size < 2) return base
-    val phys = physMapOf(m.meta)
-    val scanned = scanLive(spark, root, m.schema, small, m.dvs, phys)
-    // sortCols: keep a clustered table clustered THROUGH compaction —
-    // a plain repartition would interleave the ranges and silently
-    // turn data skipping back off for the compacted span
-    val rows =
-      if (sortCols.isEmpty) scanned.repartition(targetPartitions)
-      else scanned
-        .repartitionByRange(targetPartitions, sortCols.map(col): _*)
-        .sortWithinPartitions(sortCols.map(col): _*)
-    commit(spark, root, base, m.schema,
-      big ++ writeData(spark, root, rows, phys), m.meta, cdfNone = true,
-      dvs = m.dvs -- small.map(_.rel), op = "COMPACT", baseM = Some(m))
+    if (small.size < 2) return m.version
+    // sortCols keep a clustered table clustered THROUGH compaction
+    rewriteLayout(spark, root, m, small, "COMPACT")(
+      laidOut(targetPartitions, sortCols))
   }
 
   /** Rewrite the table range-clustered on `cols` as a new version:
@@ -2316,42 +2234,28 @@ object VersionedTable {
       targetPartitions: Int): Long = {
     require(cols.nonEmpty, "clusterBy needs at least one column")
     require(targetPartitions > 0, "targetPartitions must be positive")
-    val base = currentVersion(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"$root: no versioned table"))
-    val m = readManifest(spark, root, base)
+    val m = snapshot(spark, root)
     val bad = cols.filterNot(m.schema.fieldNames.contains)
     require(bad.isEmpty, s"unknown cluster column(s): $bad")
-    val phys = physMapOf(m.meta)
-    val rows = scanLive(spark, root, m.schema, m.files, m.dvs, phys)
-      .repartitionByRange(targetPartitions, cols.map(col): _*)
-      .sortWithinPartitions(cols.map(col): _*)
-    commit(spark, root, base, m.schema,
-      writeData(spark, root, rows, phys), m.meta, cdfNone = true,
-      op = "CLUSTER BY", baseM = Some(m))
+    rewriteLayout(spark, root, m, m.files, "CLUSTER BY")(
+      laidOut(targetPartitions, cols))
   }
 
-  /** Z-ORDER rewrite on two columns (Delta `OPTIMIZE ... ZORDER BY
-    * (a, b)`): rows sorted along the Morton curve
-    * ([[graft.ops.Scale.zValue]]), so every file's manifest stats are
-    * narrow on BOTH columns and a predicate on EITHER prunes file
-    * reads — the property [[clusterBy]]'s lexicographic sort cannot
-    * give (its second column spans the full range in every file). The
-    * grid bounds come from the MANIFEST's own per-file stats when
-    * every file carries them (a zero-scan metadata fold), falling back
-    * to one aggregate otherwise. Both columns must be numeric/date/
-    * timestamp (the Morton grid needs a numeric normalization).
-    * Contents unchanged, layout-only (cdf none), history time-travels. */
-  def clusterByZorder(spark: SparkSession, root: String,
-      colA: String, colB: String, targetPartitions: Int): Long =
-    clusterByZorderN(spark, root, Seq(colA, colB), targetPartitions)
-
-  /** The N-column generalization (2 ≤ N ≤ 6, Delta `ZORDER BY (a, b,
-    * c, ...)`): rows sorted along the N-dimensional Morton curve
+  /** Z-ORDER rewrite (Delta `OPTIMIZE ... ZORDER BY (a, b, ...)`, 2 to
+    * 6 columns): rows sorted along the N-dimensional Morton curve
     * ([[graft.ops.Scale.zValueN]] — bit j of column i at position
-    * j·N + i), so every file's stats are narrow on ALL N columns and
-    * a predicate on ANY of them prunes. Each added dimension costs
-    * resolution (min(16, 62/N) grid bits per column), the classic
-    * Z-order trade — past ~4 columns prefer hierarchical clusterBy. */
+    * j·N + i), so every file's manifest stats are narrow on ALL N
+    * columns and a predicate on ANY of them prunes file reads — the
+    * property [[clusterBy]]'s lexicographic sort cannot give (its
+    * second column spans the full range in every file). Each added
+    * dimension costs resolution (min(16, 62/N) grid bits per column),
+    * the classic Z-order trade — past ~4 columns prefer hierarchical
+    * clusterBy. The grid bounds come from the MANIFEST's own per-file
+    * stats when every file carries them (a zero-scan metadata fold),
+    * falling back to one aggregate otherwise. Every column must be
+    * numeric/date/timestamp (the Morton grid needs a numeric
+    * normalization). Contents unchanged, layout-only (cdf none),
+    * history time-travels. */
   def clusterByZorderN(spark: SparkSession, root: String,
       zcols: Seq[String], targetPartitions: Int): Long = {
     require(targetPartitions > 0, "targetPartitions must be positive")
@@ -2359,9 +2263,7 @@ object VersionedTable {
       s"Z-order needs 2..6 columns, got ${zcols.size}")
     require(zcols.distinct.size == zcols.size,
       s"duplicate Z-order column in $zcols")
-    val base = currentVersion(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"$root: no versioned table"))
-    val m = readManifest(spark, root, base)
+    val m = snapshot(spark, root)
     zcols.foreach { c =>
       val f = m.schema.fields.find(_.name == c).getOrElse(
         throw new IllegalArgumentException(s"unknown Z-order column '$c'"))
@@ -2373,10 +2275,8 @@ object VersionedTable {
     }
     // global [lo, hi] per column from the manifest stats (every entry
     // carries the column) — no data scan; else one bounds aggregate
-    def bounds(c: String): (Double, Double) = {
-      val dt = m.schema.fields.find(_.name == c).get.dataType
-      val perFile =
-        m.files.map(_.stats.get(physOf(physMapOf(m.meta))(c)))
+    def bounds(c: String, dt: DataType): (Double, Double) = {
+      val perFile = m.files.map(_.stats.get(physOf(physMapOf(m.meta))(c)))
       if (m.files.nonEmpty && perFile.forall(_.isDefined)) {
         val ds = perFile.flatten
         val los = ds.flatMap(_.min).flatMap(statDomain(_, dt))
@@ -2385,7 +2285,7 @@ object VersionedTable {
           .collect { case d: java.math.BigDecimal => d.doubleValue() }
         if (los.nonEmpty && his.nonEmpty) return (los.min, his.max)
       }
-      val r = read(spark, root, Some(base))
+      val r = read(spark, root, Some(m.version))
         .agg(min(canonCol(c, dt)).cast("double"),
           max(canonCol(c, dt)).cast("double")).collect()(0)
       (if (r.isNullAt(0)) 0.0 else r.getDouble(0),
@@ -2393,18 +2293,12 @@ object VersionedTable {
     }
     val z = graft.ops.Scale.zValueN(zcols.map { c =>
       val dt = m.schema.fields.find(_.name == c).get.dataType
-      val (lo, hi) = bounds(c)
+      val (lo, hi) = bounds(c, dt)
       (canonCol(c, dt), lo, hi)
     })
-    val phys = physMapOf(m.meta)
-    val rows = scanLive(spark, root, m.schema, m.files, m.dvs, phys)
-      .withColumn("__vt_z", z)
-      .repartitionByRange(targetPartitions, col("__vt_z"))
-      .sortWithinPartitions(col("__vt_z"))
-      .drop("__vt_z")
-    commit(spark, root, base, m.schema,
-      writeData(spark, root, rows, phys), m.meta, cdfNone = true,
-      op = "ZORDER BY", baseM = Some(m))
+    rewriteLayout(spark, root, m, m.files, "ZORDER BY")(df =>
+      laidOut(targetPartitions, Seq("__vt_z"))(df.withColumn("__vt_z", z))
+        .drop("__vt_z"))
   }
 
   /** One-call table maintenance — the OPTIMIZE + VACUUM cron a
@@ -2421,13 +2315,11 @@ object VersionedTable {
       dvRowThreshold: Long = 0L, keepVersions: Int = 10,
       orphanGraceMs: Long = 24L * 3600 * 1000): Long = {
     require(keepVersions >= 0, s"keepVersions must be >= 0: $keepVersions")
-    val base = currentVersion(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"$root: no versioned table"))
-    val m = readManifest(spark, root, base)
+    val m = snapshot(spark, root)
     if (m.dvs.values.map(_._2).sum > dvRowThreshold)
       materializeDeletes(spark, root, targetPartitions, sortCols)
     compact(spark, root, smallFileBytes, targetPartitions, sortCols)
-    val cur = currentVersion(spark, root).getOrElse(base)
+    val cur = currentVersion(spark, root).getOrElse(m.version)
     vacuum(spark, root, keepFrom = math.max(1L, cur - keepVersions),
       orphanGraceMs = orphanGraceMs)
     cur

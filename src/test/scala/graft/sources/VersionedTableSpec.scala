@@ -501,7 +501,9 @@ class VersionedTableSpec extends AnyFunSuite {
       col("amt") > 50L,
       col("amt").isNull,
       coalesce(col("amt"), lit(0L)) > 55L, // unrecognized conjunct: no prune
-      col("k") > 1000                      // prunes EVERYTHING
+      col("k") > 1000,                     // prunes EVERYTHING
+      expr("k BETWEEN 20 AND 30"),
+      expr("k NOT BETWEEN 20 AND 30")
     )
     preds.foreach { p =>
       val skip = rowsN(VersionedTable.readWhere(spark, root, p))
@@ -510,6 +512,32 @@ class VersionedTableSpec extends AnyFunSuite {
     }
     // and the everything-pruned case really scanned nothing
     assert(VersionedTable.pruneProfile(spark, root, col("k") > 1000)._1 == 0)
+    // BETWEEN prunes exactly like its >= AND <= form
+    val between = VersionedTable.pruneProfile(spark, root,
+      expr("k BETWEEN 20 AND 30"))
+    assert(between == VersionedTable.pruneProfile(spark, root,
+      expr("k >= 20 AND k <= 30")))
+    assert(between._1 < between._2, s"BETWEEN must prune: $between")
+  }
+
+  test("a write whose first partition is empty records exact row counts") {
+    // partition 0 holds no row (a partition-id filter stays above the
+    // shuffle), and Spark still writes an empty part file for it
+    val root = freshRoot()
+    VersionedTable.create(spark, root,
+      dim((1 to 10000).map(i => (i, s"n$i", i.toLong)): _*)
+        .repartition(2).filter(spark_partition_id() =!= 0))
+    assert(VersionedTable.rowCount(spark, root) ==
+      VersionedTable.read(spark, root).count())
+    assert(VersionedTable.readManifest(spark, root, 1L).files
+      .forall(e => e.rows > 0 && e.stats.nonEmpty))
+    // an empty frame: no file is listed, the schema survives
+    val empty = freshRoot()
+    VersionedTable.create(spark, empty, dim().filter(lit(false)))
+    val back = VersionedTable.read(spark, empty)
+    assert(back.isEmpty && VersionedTable.rowCount(spark, empty) == 0L)
+    assert(back.schema.map(f => f.name -> f.dataType) ==
+      dim().schema.map(f => f.name -> f.dataType))
   }
 
   test("fuzz: readWhere == full filter over random data and predicates") {
@@ -861,7 +889,7 @@ class VersionedTableSpec extends AnyFunSuite {
     assert(tLex == 16 && kLex <= 5, s"k must prune under k-sort: $kLex/$tLex")
     assert(aLex == tLex, "amt spans every file under a k-only sort")
     // Z-order on (k, amt): BOTH prune
-    VersionedTable.clusterByZorder(spark, root, "k", "amt",
+    VersionedTable.clusterByZorderN(spark, root, Seq("k", "amt"),
       targetPartitions = 16)
     val (kZ, tZ) = VersionedTable.pruneProfile(spark, root, predK)
     val (aZ, _) = VersionedTable.pruneProfile(spark, root, predA)
@@ -876,7 +904,7 @@ class VersionedTableSpec extends AnyFunSuite {
       rowsOf(VersionedTable.read(spark, root, Some(1L))))
     // non-numeric column refuses
     val err = intercept[IllegalArgumentException] {
-      VersionedTable.clusterByZorder(spark, root, "k", "name", 4)
+      VersionedTable.clusterByZorderN(spark, root, Seq("k", "name"), 4)
     }
     assert(err.getMessage.contains("numeric"), err.getMessage)
   }
@@ -1536,8 +1564,8 @@ class VersionedTableSpec extends AnyFunSuite {
             Some((i * 1000L + 999L).toString), 0L),
           "v" -> VersionedTable.ColStats(Some("0"), Some("999999"), 0L)))
     }
-    VersionedTable.commit(spark, root, 1L, m1.schema, entries,
-      meta = m1.meta, op = "SYNTH", baseM = Some(m1))
+    VersionedTable.commit(spark, root, Some(m1), m1.schema, entries,
+      meta = m1.meta, op = "SYNTH")
     val m = VersionedTable.readManifest(spark, root, 2L)
     assert(m.fileCount == n.toLong)
     // the full list materializes on the driver (readCheckpoint's
