@@ -86,6 +86,13 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         case _ => throw new IllegalArgumentException("md5_low_byte(str)")
       }))
     ext.injectFunction((
+      new FunctionIdentifier("repeat_rows"),
+      new ExpressionInfo(classOf[RepeatRows].getName, "repeat_rows"),
+      (args: Seq[Expression]) =>
+        if (args.size >= 2) RepeatRows(args)
+        else throw new IllegalArgumentException(
+          "repeat_rows(count bigint, col, ...)")))
+    ext.injectFunction((
       new FunctionIdentifier("overlap_size"),
       new ExpressionInfo(classOf[OverlapSize].getName, "overlap_size"),
       (args: Seq[Expression]) => args match {

@@ -601,19 +601,23 @@ object VersionedTable {
   }
 
   /** Write `df` into new immutable files under data/<uuid>/ and return
-    * their manifest entries. Runs BEFORE any manifest is touched — a
-    * crash leaves an invisible orphan dir. Stats come from ONE
-    * group-by-file aggregate over the freshly written delta (bounded
-    * by the commit's data, never the table; the collect is bounded by
-    * the commit's FILE count). A production writer would fold this
-    * into the write itself the way Delta collects stats in the
-    * transaction protocol — parquet footers already hold the same
-    * bounds — but Spark's public writer API exposes no per-file hook,
-    * and one extra scan of the just-written delta buys exact,
-    * format-independent stats. A file the aggregate never sees (Spark
-    * writes an empty partition 0 as an empty file; no aggregate runs
-    * without a stats column) takes its row count from its footer, and
-    * a zero-row file is deleted and left out of the entries. */
+    * their manifest entries, in ONE Spark action: the write itself.
+    * Runs BEFORE any manifest is touched — a crash leaves an invisible
+    * orphan dir. Row counts and per-column stats come from each file's
+    * parquet footer ([[footerStats]]): the bounds the parquet writer
+    * collected while writing, the way Delta collects stats inside the
+    * transaction instead of re-reading what it wrote. A column whose
+    * footer holds no min/max (NaN-bearing floats, strings past
+    * parquet-mr's 4 KB stats limit) gets no stats and never prunes.
+    * TIMESTAMP columns are the exception: Spark writes them as INT96
+    * by default, whose footers carry no bounds, so a table with one
+    * reads their stats back with a group-by-file aggregate narrowed to
+    * those columns ([[timestampStats]]) — the one extra action, and
+    * only for such tables (switching the session to TIMESTAMP_MICROS
+    * would change the file format of every table instead). Zero-row
+    * files (Spark writes an empty input as one empty file) are deleted
+    * and left out of the entries; a write with no rows at all leaves no
+    * directory behind. */
   // private[sources]: MaterializedView's schema-evolving rewrite
   // (addSums) writes its widened state through the same path
   private[sources] def writeData(spark: SparkSession, root: String,
@@ -628,63 +632,146 @@ object VersionedTable {
     val sub = s"data/${java.util.UUID.randomUUID()}"
     val abs = new Path(root, sub)
     df.write.parquet(abs.toString)
-    val f = fs(spark, abs)
-    val rels = f.listStatus(abs).map(_.getPath.getName)
-      .filter(_.endsWith(".parquet")).sorted
-      .map(n => s"$sub/$n").toSeq
     val fields = df.schema.fields.toSeq
       .filter(sf => statsSupported(sf.dataType)).take(StatsMaxCols)
-    if (rels.isEmpty) return Seq.empty
-    val byName =
-      if (fields.isEmpty) Map.empty[String, org.apache.spark.sql.Row]
-      else {
-        val back = spark.read.schema(df.schema).parquet(abs.toString)
-        val aggs = count(lit(1)).as("__vt_rows") +: fields.flatMap { sf =>
-          val c = canonCol(sf.name, sf.dataType)
-          Seq(min(c), max(c),
-            sum(when(col(sf.name).isNull, 1L).otherwise(0L)))
-        }
-        back.groupBy(input_file_name().as("__vt_file"))
-          .agg(aggs.head, aggs.tail: _*).collect()
-          .map(r => new Path(r.getString(0)).getName -> r).toMap
-      }
-    lazy val conf = spark.sessionState.newHadoopConf()
-    rels.flatMap { rel =>
-      val name = new Path(rel).getName
-      byName.get(name) match {
-        case None =>
-          val p = new Path(root, rel)
-          val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
-          val rows = try reader.getRecordCount finally reader.close()
-          if (rows > 0 && fields.nonEmpty) throw new IllegalStateException(
-            s"$p holds $rows row(s) the stats aggregate never saw")
-          if (rows > 0) Some(FileEntry(rel, rows, Map.empty))
-          else { f.delete(p, false); None }
-        case Some(r) =>
-          val stats = fields.zipWithIndex.map { case (sf, i) =>
-            val (mn, mx, nl) = (r.get(2 + i * 3), r.get(3 + i * 3),
-              r.getLong(4 + i * 3))
-            sf.name -> ColStats(Option(mn).map(statEncode),
-              Option(mx).map(statEncode), nl)
-          }.toMap
-          Some(FileEntry(rel, r.getLong(1), stats))
-      }
+    val footed = writtenFiles(spark, root, sub)
+    val tsFields = fields.filter(_.dataType == TimestampType)
+    val tsByName: Map[String, Map[String, ColStats]] =
+      if (tsFields.isEmpty || footed.isEmpty) Map.empty
+      else timestampStats(spark, abs, tsFields)
+    footed.map { case (rel, blocks) =>
+      val rows = blocks.map(_.getRowCount).sum
+      val ts =
+        if (tsFields.isEmpty) Map.empty[String, ColStats]
+        else tsByName.getOrElse(new Path(rel).getName,
+          throw new IllegalStateException(
+            s"${new Path(root, rel)} holds $rows row(s) the stats " +
+              "aggregate never saw"))
+      FileEntry(rel, rows, footerStats(blocks, fields) ++ ts)
     }
   }
 
+  private type Blocks = Seq[org.apache.parquet.hadoop.metadata.BlockMetaData]
+
+  /** The parquet files Spark wrote under `sub` that hold rows, each
+    * with its footer's row groups. Zero-row files are deleted, and the
+    * whole directory when no file holds a row. */
+  private def writtenFiles(spark: SparkSession, root: String,
+      sub: String): Seq[(String, Blocks)] = {
+    import scala.jdk.CollectionConverters._
+    val abs = new Path(root, sub)
+    val f = fs(spark, abs)
+    val conf = spark.sessionState.newHadoopConf()
+    val all = f.listStatus(abs).map(_.getPath.getName)
+      .filter(_.endsWith(".parquet")).sorted.toSeq.map { n =>
+        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new Path(abs, n), conf))
+        val blocks: Blocks =
+          try reader.getFooter.getBlocks.asScala.toSeq finally reader.close()
+        (s"$sub/$n", blocks)
+      }
+    val (kept, empty) = all.partition(_._2.exists(_.getRowCount > 0))
+    if (kept.isEmpty) f.delete(abs, true)
+    else empty.foreach(e => f.delete(new Path(root, e._1), false))
+    kept
+  }
+
+  /** Per-column stats of one file from its footer's row groups, in the
+    * canonical forms [[canonCol]]/[[statEncode]] give: int32 widens to
+    * long for byte/short/int, a date stays epoch days, a float becomes
+    * a double, a decimal a `BigDecimal` at its scale, a string comes
+    * from its UTF-8 bytes (parquet orders them unsigned, as Spark
+    * does). A column is left out (never prunes) unless every row group
+    * either has min/max or holds only nulls — a row group with values
+    * but no bounds (parquet-mr drops NaN bounds) says nothing. */
+  private def footerStats(blocks: Blocks,
+      fields: Seq[StructField]): Map[String, ColStats] = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.parquet.column.statistics.Statistics
+    val chunks = blocks.map { b =>
+      b.getColumns.asScala.collect {
+        case c if c.getPath.size == 1 => c.getPath.toArray()(0) -> c
+      }.toMap
+    }
+    fields.filter(_.dataType != TimestampType).flatMap { sf =>
+      val groups: Seq[Option[Statistics[_]]] =
+        blocks.zip(chunks).map { case (b, cs) =>
+          cs.get(sf.name).map(_.getStatistics).filter { s =>
+            s != null && s.isNumNullsSet &&
+              (s.hasNonNullValue || s.getNumNulls == b.getRowCount)
+          }
+        }
+      if (groups.isEmpty || groups.contains(None)) None
+      else {
+        val all = groups.flatten
+        val merged = all.head.copy()
+        all.tail.foreach(s => merged.mergeStatistics(s))
+        val bounds =
+          if (!merged.hasNonNullValue) Some((None, None))
+          else for {
+            mn <- footerCanon(merged.genericGetMin, sf.dataType)
+            mx <- footerCanon(merged.genericGetMax, sf.dataType)
+          } yield (Some(mn), Some(mx))
+        bounds.map { case (mn, mx) =>
+          sf.name -> ColStats(mn, mx, merged.getNumNulls)
+        }
+      }
+    }.toMap
+  }
+
+  /** A footer min/max in the canonical string form; None for a value
+    * the pruner must not trust (NaN). */
+  private def footerCanon(v: Any, dt: DataType): Option[String] =
+    (dt, v) match {
+      case (FloatType, x: java.lang.Float) =>
+        Some(x.toDouble).filterNot(_.isNaN).map(_.toString)
+      case (DoubleType, x: java.lang.Double) =>
+        Some(x.doubleValue).filterNot(_.isNaN).map(_.toString)
+      case (d: DecimalType, x: java.lang.Number) =>
+        Some(java.math.BigDecimal.valueOf(x.longValue, d.scale).toString)
+      case (d: DecimalType, x: org.apache.parquet.io.api.Binary) =>
+        Some(new java.math.BigDecimal(
+          new java.math.BigInteger(x.getBytes), d.scale).toString)
+      case (StringType, x: org.apache.parquet.io.api.Binary) =>
+        Some(x.toStringUsingUTF8)
+      case (ByteType | ShortType | IntegerType | LongType | DateType,
+          x: java.lang.Number) => Some(x.longValue.toString)
+      case (BooleanType, x: java.lang.Boolean) => Some(x.toString)
+      case _ => None
+    }
+
+  /** Per-file stats of the TIMESTAMP columns `tsFields` by file name:
+    * one group-by-file aggregate over the just-written `abs`, because
+    * INT96 timestamps carry no footer bounds. */
+  private def timestampStats(spark: SparkSession, abs: Path,
+      tsFields: Seq[StructField]): Map[String, Map[String, ColStats]] = {
+    val aggs = tsFields.flatMap { sf =>
+      val c = canonCol(sf.name, TimestampType)
+      Seq(min(c), max(c), sum(when(col(sf.name).isNull, 1L).otherwise(0L)))
+    }
+    spark.read.schema(StructType(tsFields)).parquet(abs.toString)
+      .groupBy(input_file_name().as("__vt_file"))
+      .agg(aggs.head, aggs.tail: _*).collect().map { r =>
+        new Path(r.getString(0)).getName -> tsFields.zipWithIndex.map {
+          case (sf, i) =>
+            sf.name -> ColStats(Option(r.get(1 + i * 3)).map(statEncode),
+              Option(r.get(2 + i * 3)).map(statEncode), r.getLong(3 + i * 3))
+        }.toMap
+      }.toMap
+  }
+
   /** Write a commit's row-level change set (table columns +
-    * `_change_type`) under changes/<uuid>/ and return the rel paths.
-    * Like data files: written BEFORE the manifest publish, so a torn
-    * write leaves only an orphan dir ([[vacuum]] sweeps it). */
+    * `_change_type`) under changes/<uuid>/ and return the rel paths of
+    * its non-empty files — none for an empty change set, whose files
+    * are dropped by their footers' row counts. Like data files:
+    * written BEFORE the manifest publish, so a torn write leaves only
+    * an orphan dir ([[vacuum]] sweeps it). */
   private[sources] def writeChangeData(spark: SparkSession, root: String,
       df: DataFrame): Seq[String] = {
     val sub = s"changes/${java.util.UUID.randomUUID()}"
-    val abs = new Path(root, sub)
-    df.write.parquet(abs.toString)
-    fs(spark, abs).listStatus(abs).map(_.getPath.getName)
-      .filter(_.endsWith(".parquet")).sorted
-      .map(n => s"$sub/$n").toSeq
+    df.write.parquet(new Path(root, sub).toString)
+    writtenFiles(spark, root, sub).map(_._1)
   }
 
   /** Row-level change set of a copy-on-write rewrite as a multiset
@@ -696,32 +783,34 @@ object VersionedTable {
     * (never the table). Delta's CDF refines this with
     * update_pre/postimage labels; consumers that need the pairing
     * join delete×insert on the key. */
-  private def changeDiff(before: DataFrame, after: DataFrame): DataFrame = {
+  // private[sources] so a spec can pin it against exceptAll at a
+  // multiplicity no array-building replication would survive
+  private[sources] def changeDiff(before: DataFrame,
+      after: DataFrame): DataFrame = {
     // ONE pass over both sides (guide §2.1/§2.3): tag-and-count both
     // multisets in a single aggregate instead of two exceptAll subplans
     // (Spark plans each exceptAll as its own union+aggregate+replicate,
     // so the old form scanned BOTH inputs twice and shuffled twice).
     // Same multiset out: groupBy's null/NaN key equality matches
-    // exceptAll's, and |nb−na| copies of each row replicate through the
-    // same generate shape exceptAll itself lowers to.
+    // exceptAll's, and |nb−na| copies of each row replicate through
+    // `repeat_rows` ([[graft.functions.RepeatRows]]), which streams the
+    // copies instead of building an array of them.
     val cols = before.columns.toSeq
     def fresh(base: String): String = {
       var n = base
       while (cols.contains(n)) n += "_"
       n
     }
-    val (nb, na, cnt) = (fresh("__cd_nb"), fresh("__cd_na"), fresh("__cd_n"))
+    val (nb, na) = (fresh("__cd_nb"), fresh("__cd_na"))
     val counts = before.withColumn(nb, lit(1L)).withColumn(na, lit(0L))
       .unionByName(after.withColumn(nb, lit(0L)).withColumn(na, lit(1L)))
       .groupBy(cols.map(col): _*)
       .agg(sum(col(nb)).as(nb), sum(col(na)).as(na))
       .filter(col(nb) =!= col(na))
-    counts.select(cols.map(col) ++ Seq(
-        when(col(nb) > col(na), lit("delete")).otherwise(lit("insert"))
-          .as("_change_type"),
-        greatest(col(nb) - col(na), col(na) - col(nb)).as(cnt)): _*)
-      .withColumn(cnt, explode(sequence(lit(1L), col(cnt))))
-      .drop(cnt)
+    counts.select(call_function("repeat_rows",
+        (greatest(col(nb) - col(na), col(na) - col(nb)) +: cols.map(col) :+
+          when(col(nb) > col(na), lit("delete")).otherwise(lit("insert"))): _*)
+      .as(cols :+ "_change_type"))
   }
 
   /** Loud type guard for every write path that aligns by NAME: a
@@ -768,9 +857,10 @@ object VersionedTable {
   // move atomically with the data, version with the table (time travel
   // sees the constraints of its snapshot), and replicate with meta
   // propagation. Enforcement is Delta's: every commit's NEW rows are
-  // validated (ANSI CHECK semantics — NULL passes, FALSE refuses) in
-  // ONE fused aggregate over the commit-bounded delta, never the
-  // table; existing data is validated once, at addConstraint time.
+  // validated (ANSI CHECK semantics — NULL passes, FALSE refuses) by
+  // ONE fused set of counts over the commit-bounded delta, never the
+  // table — tapped onto the write's own action ([[writeChecked]]);
+  // existing data is validated once, at addConstraint time.
 
   private val CheckKeyPrefix = "_check."
 
@@ -789,25 +879,62 @@ object VersionedTable {
         k.stripPrefix(CheckKeyPrefix) -> expr(sql)
     }.sortBy(_._1)
 
+  /** Per constraint, the count of rows it refuses, named after it. */
+  private def violationCounts(checks: Seq[(String, Column)]): Seq[Column] =
+    checks.map { case (name, c) =>
+      sum(when(coalesce(c.cast("boolean"), lit(true)) === false, 1L)
+        .otherwise(0L)).as(name)
+    }
+
+  /** Refuse, naming the first violated constraint and its row count;
+    * `bad(name)` is that constraint's count (NULL over no rows). */
+  private def refuseViolations(checks: Seq[(String, Column)],
+      bad: String => Any, meta: Map[String, String],
+      context: String): Unit =
+    checks.foreach { case (name, _) =>
+      val n = Option(bad(name)).fold(0L)(_.asInstanceOf[Long])
+      require(n == 0L,
+        s"$context: $n row(s) violate CHECK constraint '$name' " +
+          s"(${meta(CheckKeyPrefix + name)}) — nothing was committed")
+    }
+
   /** Refuse loudly if any row of `df` violates a `_check.*` constraint
     * in `meta` — one aggregate, all constraints fused (the
-    * Expectations single-pass style), naming the first violated
-    * constraint and its row count. No-op when no constraints exist. */
+    * Expectations single-pass style). No-op when no constraints exist. */
   private def requireConstraints(df: DataFrame, meta: Map[String, String],
       schema: StructType, context: String): Unit = {
     val checks = constraintChecks(meta, schema)
     if (checks.isEmpty) return
-    val aggs = checks.map { case (name, c) =>
-      sum(when(coalesce(c.cast("boolean"), lit(true)) === false, 1L)
-        .otherwise(0L)).as(name)
-    }
+    val aggs = violationCounts(checks)
     val r = df.agg(aggs.head, aggs.tail: _*).collect()(0)
-    checks.zipWithIndex.foreach { case ((name, _), i) =>
-      val bad = if (r.isNullAt(i)) 0L else r.getLong(i)
-      require(bad == 0L,
-        s"$context: $bad row(s) violate CHECK constraint '$name' " +
-          s"(${meta(CheckKeyPrefix + name)}) — nothing was committed")
+    refuseViolations(checks, n => r.getAs[Any](n), meta, context)
+  }
+
+  /** [[writeData]] with the constraints in `meta` checked on the
+    * write's own action: an `observe` tap counts each constraint's
+    * violating rows as the files are written, read once the write has
+    * returned. A violation refuses with [[requireConstraints]]'s
+    * message and deletes the written directory, so nothing is
+    * published. */
+  private def writeChecked(spark: SparkSession, root: String,
+      df: DataFrame, meta: Map[String, String], schema: StructType,
+      context: String, phys: Map[String, String]): Seq[FileEntry] = {
+    val checks = constraintChecks(meta, schema)
+    if (checks.isEmpty) return writeData(spark, root, df, phys)
+    val aggs = violationCounts(checks)
+    val tap = org.apache.spark.sql.Observation()
+    val entries = writeData(spark, root,
+      df.observe(tap, aggs.head, aggs.tail: _*), phys)
+    val counts = tap.get
+    try refuseViolations(checks, counts, meta, context)
+    catch { case e: IllegalArgumentException =>
+      entries.headOption.foreach { e0 =>
+        val dir = new Path(root, e0.rel).getParent
+        fs(spark, dir).delete(dir, true)
+      }
+      throw e
     }
+    entries
   }
 
   /** ALTER TABLE ADD CONSTRAINT (Delta CHECK constraints): validate
@@ -1474,30 +1601,19 @@ object VersionedTable {
     val phys = physMapOf(m.meta)
     val rels = rewrite.map(_.rel).toSet
     val before = scanLive(spark, root, m.schema, rewrite, m.dvs, phys)
-    // persisted across the emptiness probe and the write: the rebuild
-    // is the mutation's dominant join/filter work, not worth twice
-    val rows = rebuild(before).select(m.schema.fields.toSeq.map(f =>
-      col(f.name).cast(f.dataType).as(f.name)): _*).persist()
-    val newEntries =
-      try {
-        if (rows.isEmpty) Seq.empty
-        else {
-          requireConstraints(rows, m.meta, m.schema, context)
-          writeData(spark, root, rows, phys)
-        }
-      } finally { rows.unpersist(); () }
-    val change: Seq[String] =
+    // written straight from the rebuild plan, constraints tapped onto
+    // the same action: no probe and nothing cached. An empty rebuild is
+    // the write whose footers report 0 rows — it yields no entries.
+    val newEntries = writeChecked(spark, root,
+      rebuild(before).select(m.schema.fields.toSeq.map(f =>
+        col(f.name).cast(f.dataType).as(f.name)): _*),
+      m.meta, m.schema, context, phys)
+    // the change set is written the same way and dropped by its
+    // footers when empty; such a commit publishes `cdf none`
+    val change =
       if (!cdf) Seq.empty
-      else {
-        // persisted across the isEmpty probe and the write, like the
-        // replacement
-        val diff = changeDiff(before,
-          scanEntries(spark, root, m.schema, newEntries, phys)).persist()
-        try {
-          if (diff.isEmpty) Seq.empty
-          else writeChangeData(spark, root, diff)
-        } finally { diff.unpersist(); () }
-      }
+      else writeChangeData(spark, root, changeDiff(before,
+        scanEntries(spark, root, m.schema, newEntries, phys)))
     commit(spark, root, Some(m), m.schema,
       m.files.filterNot(e => rels.contains(e.rel)) ++ newEntries, meta,
       changeFiles = change, cdfNone = cdf && change.isEmpty,
@@ -1671,9 +1787,9 @@ object VersionedTable {
     val m = snapshot(spark, root)
     requireConforms(df, m.schema, "append")
     val aligned = df.select(m.schema.fieldNames.map(col).toIndexedSeq: _*)
-    requireConstraints(aligned, m.meta, m.schema, "append")
     commit(spark, root, Some(m), m.schema,
-      m.files ++ writeData(spark, root, aligned, physMapOf(m.meta)),
+      m.files ++ writeChecked(spark, root, aligned, m.meta, m.schema,
+        "append", physMapOf(m.meta)),
       m.meta, dvs = m.dvs, op = "APPEND")
   }
 
@@ -1714,9 +1830,9 @@ object VersionedTable {
       if (df.columns.contains(n)) col(n)
       else lit(null).cast(newSchema(n).dataType).as(n)
     }: _*)
-    requireConstraints(aligned, newMeta, newSchema, "appendEvolve")
     commit(spark, root, Some(m), newSchema,
-      m.files ++ writeData(spark, root, aligned, physMapOf(newMeta)),
+      m.files ++ writeChecked(spark, root, aligned, newMeta, newSchema,
+        "appendEvolve", physMapOf(newMeta)),
       newMeta, dvs = m.dvs, op = "APPEND EVOLVE")
   }
 
@@ -1805,9 +1921,10 @@ object VersionedTable {
       case None => return m.version // idempotent replay: nothing to do
     }
     requireConforms(source, m.schema, "copy-on-write source")
-    val srcKeys = source.select(keys.map(col): _*).dropDuplicates(keys)
+    val srcKeys = source.select(keys.map(col): _*)
     // data skipping on the KEY RANGES of the source: one small agg over
-    // the (deduped) source keys yields per-key min/max + has-null; any
+    // the raw source keys (min, max and null count need no dedup)
+    // yields per-key min/max + has-null; any
     // file whose stats exclude every source key range provably holds no
     // match and is carried without being SCANNED at all. This prunes
     // both the match-discovery join and the insert anti-join below —
@@ -1832,10 +1949,14 @@ object VersionedTable {
     // collect is bounded by the FILE count, never the row count
     val affectedIds: Set[String] =
       if (candidates.isEmpty) Set.empty
-      else matchableP.join(srcKeys, keys.map(k =>
-          matchableP(k) <=> srcKeys(k)).reduceOption(_ && _).getOrElse(lit(true)))
-        .select(col("__vt_rel")).distinct()
-        .collect().map(_.getString(0)).toSet
+      else {
+        val distinctKeys = srcKeys.dropDuplicates(keys)
+        matchableP.join(distinctKeys, keys.map(k =>
+            matchableP(k) <=> distinctKeys(k)).reduceOption(_ && _)
+          .getOrElse(lit(true)))
+          .select(col("__vt_rel")).distinct()
+          .collect().map(_.getString(0)).toSet
+      }
     cowTail(spark, root, m,
       m.files.filter(e => affectedIds.contains(dvFileId(e.rel))), nextMeta,
       cdf, op, "merge/upsert rewrite")(rebuild(_, source, matchable))

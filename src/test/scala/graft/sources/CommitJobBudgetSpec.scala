@@ -7,11 +7,12 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The Spark-job budget of each VersionedTable commit kind on a small
-  * table: the exact number of jobs one commit runs, counted by a
-  * listener. A refactor of the commit paths must keep every count; a
-  * change that removes actions from a commit lowers one on purpose and
-  * updates the figure here. */
+/** The Spark action budget of each VersionedTable commit kind on a
+  * small table: the exact number of jobs one commit runs and the exact
+  * number of SQL executions they belong to (by `spark.sql.execution.id`),
+  * counted by a listener. A refactor of the commit paths must keep
+  * every count; a change that removes actions from a commit lowers one
+  * on purpose and updates the figure here. */
 class CommitJobBudgetSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -26,49 +27,58 @@ class CommitJobBudgetSpec extends AnyFunSuite {
     root
   }
 
-  private def jobsDuring(body: => Unit): Int = {
+  /** (jobs, SQL executions) started while `body` runs. */
+  private def actionsDuring(body: => Unit): (Int, Int) = {
     val sc = spark.sparkContext
     ListenerDrain(sc)
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val executions = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
     val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        n.incrementAndGet()
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet()
+        Option(j.properties).flatMap(p =>
+          Option(p.getProperty("spark.sql.execution.id")))
+          .foreach(executions.add)
+      }
     }
     sc.addSparkListener(l)
-    try { body; ListenerDrain(sc); n.get() }
+    try { body; ListenerDrain(sc); (jobs.get(), executions.size) }
     finally sc.removeSparkListener(l)
   }
 
   private def src(rows: (Int, String, Long)*): DataFrame =
     rows.toSeq.toDF("k", "name", "amt")
 
-  // (commit kind, its exact job count, the commit)
-  private val budget: Seq[(String, Int, String => Unit)] = Seq(
-    ("append", 3, (root: String) =>
+  // (commit kind, its exact job count, its exact execution count, the
+  // commit)
+  private val budget: Seq[(String, Int, Int, String => Unit)] = Seq(
+    ("append", 1, 1, (root: String) =>
       VersionedTable.append(spark, root, src((41, "x", 41L)))),
-    ("merge", 16, (root: String) =>
+    ("merge", 11, 3, (root: String) =>
       VersionedTable.merge(spark, root,
         src((5, "u", 50L), (6, "u", 60L), (99, "i", 99L)), Seq("k"))),
-    ("merge(cdf = true)", 20, (root: String) =>
+    ("merge(cdf = true)", 13, 4, (root: String) =>
       VersionedTable.merge(spark, root,
         src((5, "u", 50L), (6, "u", 60L), (99, "i", 99L)), Seq("k"),
         cdf = true)),
-    ("updateWhere", 4, (root: String) =>
+    ("updateWhere", 1, 1, (root: String) =>
       VersionedTable.updateWhere(spark, root, col("k") === 5,
         Map("amt" -> lit(500L)))),
-    ("deleteWhere", 4, (root: String) =>
+    ("deleteWhere", 1, 1, (root: String) =>
       VersionedTable.deleteWhere(spark, root, col("k") === 7)),
-    ("deleteWhereMor", 5, (root: String) =>
+    ("deleteWhereMor", 5, 2, (root: String) =>
       VersionedTable.deleteWhereMor(spark, root, col("k") === 12)),
-    ("compact", 4, (root: String) =>
+    ("compact", 2, 1, (root: String) =>
       VersionedTable.compact(spark, root, smallFileBytes = Long.MaxValue)))
 
   test("each commit kind runs its exact Spark-job budget") {
-    val counts = budget.map { case (kind, _, op) =>
+    val counts = budget.map { case (kind, _, _, op) =>
       val root = table()
-      kind -> jobsDuring(op(root))
+      val (jobs, executions) = actionsDuring(op(root))
+      (kind, jobs, executions)
     }
-    info(counts.map { case (k, n) => s"$k=$n" }.mkString(" "))
-    assert(counts == budget.map { case (kind, jobs, _) => kind -> jobs })
+    info(counts.map { case (k, j, e) => s"$k=$j/$e" }.mkString(" "))
+    assert(counts == budget.map { case (kind, jobs, executions, _) =>
+      (kind, jobs, executions) })
   }
 }
