@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Per-round benchmark main: times every SparkEntry query at the given
@@ -60,22 +60,11 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Fully isolate catalog state per run: embedded Derby (JDBC queries)
-    // writes derby.log + db dirs under derby.system.home, which defaults
-    // to the process cwd — accumulated repo-dir state must never leak
-    // into a timing run. Must be set BEFORE the first Derby boot.
-    System.setProperty("derby.system.home",
-      java.nio.file.Files.createTempDirectory("graft_derby_bench").toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    // catalog state is isolated per run (temp warehouse and Derby
+    // home): accumulated repo-dir state must never leak into a timing
+    // run
+    val spark = LocalSpark.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // untimed warmup: JVM/codegen/parquet-footer paths, PLUS the two

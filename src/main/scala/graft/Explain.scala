@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit main: prints the formatted physical plan of named
   * SparkEntry queries (all of them with no names given). The per-round
   * discipline: after a query is correct, READ its plan — pushed
@@ -12,25 +10,27 @@ import org.apache.spark.sql.SparkSession
   *        runMain graft.Explain --audit [sfDir]
   *
   * `--audit` prints one line per query — exchange / broadcast / sort
-  * counts plus anti-pattern flags (CartesianProduct,
-  * BroadcastNestedLoopJoin, Exchange SinglePartition) — the shuffle
+  * counts plus the [[flagsOf]] anti-pattern flags — the shuffle
   * budget at a glance (see SCALING.md).
   */
 object Explain {
+
+  /** The plan-audit flag table: the anti-pattern operators any of
+    * `plans` shows, as CARTESIAN / NESTEDLOOP / SINGLEPART (in that
+    * order). PlanAuditSpec checks every query against its baseline
+    * with it. */
+  def flagsOf(plans: Seq[String]): Seq[String] = Seq(
+      "CartesianProduct" -> "CARTESIAN",
+      "BroadcastNestedLoopJoin" -> "NESTEDLOOP",
+      "Exchange SinglePartition" -> "SINGLEPART")
+    .collect { case (pat, flag) if plans.exists(_.contains(pat)) => flag }
+
   def main(args: Array[String]): Unit = {
     val audit = args.headOption.contains("--audit")
     val rest = if (audit) args.drop(1).toSeq else args.toSeq
     val sfDir = rest.headOption.getOrElse("/root/testdata/sf0.001")
     val names = rest.drop(1)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSpark.builder(4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val wanted =
       if (names.isEmpty) SparkEntry.queries.keys.toSeq.sorted else names
@@ -45,11 +45,7 @@ object Explain {
         try {
           val plan = SparkEntry.queries(n)(spark, sfDir)
             .queryExecution.executedPlan.toString
-          val flags = Seq(
-            "CartesianProduct" -> "CARTESIAN",
-            "BroadcastNestedLoopJoin" -> "NESTEDLOOP",
-            "Exchange SinglePartition" -> "SINGLEPART")
-            .collect { case (pat, flag) if plan.contains(pat) => flag }
+          val flags = flagsOf(Seq(plan))
           println(f"$n%-24s ${count(plan, "Exchange hashpartitioning")}%5d " +
             f"${count(plan, "BroadcastExchange")}%5d " +
             f"${count(plan, "ReusedExchange")}%5d " +

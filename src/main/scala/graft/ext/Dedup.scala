@@ -42,13 +42,6 @@ object Dedup {
       .filter(col("__rn") === 1).drop("__rn")
   }
 
-  /** Exact content dedup at scale: group on a 64-bit content hash, not
-    * the content itself — the shuffle carries 8 bytes per row instead of
-    * the document. */
-  def exactByContent(df: DataFrame, contentCol: String, idCol: String): DataFrame =
-    exactKeepFirst(df.withColumn("__h", xxhash64(col(contentCol))), Seq("__h"), idCol)
-      .drop("__h")
-
   // ---------- shingling & Jaccard ----------
 
   /** Whitespace tokens (exact single-space split — matches the oracle's
@@ -169,27 +162,6 @@ object Dedup {
         jaccardStr(col("sha"), col("shb")).as("jaccard_sim"))
       .filter(col("jaccard_sim") >= threshold)
     (out, () => { sets.unpersist(blocking = true); () })
-  }
-
-  /** Fuzzy dedup: drop every document that has a near-duplicate with a
-    * smaller id (the canonical survivor is the earliest).
-    *
-    * Cache lifecycle: the corpus-sized shingle cache is released
-    * before this returns; what stays cached is the duplicate-id set —
-    * dup-count-bounded, i.e. smaller than the pair frame the
-    * generators themselves leave for the caller (the output-cache
-    * convention: bounded product stays, caller/harness clears it). */
-  def minhashDedup(df: DataFrame, idCol: String, textCol: String,
-      k: Int = 3, numHashes: Int = 64, bands: Int = 16,
-      threshold: Double = 0.5, maxBucket: Int = 10000): DataFrame = {
-    val (pairs, release) = minhashNearDupPairsStaged(df, idCol, textCol,
-      k, numHashes, bands, threshold, maxBucket)
-    // materialize the (dup-count-bounded) id set, then drop the
-    // corpus-sized shingle cache; only dupIds rides into the anti-join
-    val dupIds = pairs.select(col("idb").as(idCol)).distinct().persist()
-    dupIds.count()
-    release()
-    df.join(dupIds, Seq(idCol), "left_anti")
   }
 
   // ---------- exact Jaccard join via prefix filtering ----------

@@ -140,13 +140,6 @@ object Fuzzy {
       .select("akey", "bid", "similarity", "match_rank")
   }
 
-  /** Best fuzzy match per distinct stream key: (akey, bid, similarity) —
-    * [[topMatchesPerKey]] at N=1. */
-  def bestMatchPerKey(streamKeys: DataFrame, ref: DataFrame,
-      minSim: Double, q: Int = 3): DataFrame =
-    topMatchesPerKey(streamKeys, ref, minSim, maxMatches = 1, q)
-      .select("akey", "bid", "similarity")
-
   /** Connected components over symmetric `edges` (src, dst): returns
     * (id, label) with label = the smallest id in the component.
     *

@@ -1040,7 +1040,7 @@ object IvfIndex {
 
   /** The quantizer generation a lists version was assigned against:
     * centroid_id → weights, in id order. `version` time-travels. */
-  def centroidsOf(spark: SparkSession, path: String,
+  private[ext] def centroidsOf(spark: SparkSession, path: String,
       version: Option[Long] = None): Seq[Seq[Double]] =
     readCentroids(spark, path,
       VersionedTable.metaOf(spark, listsRoot(path), version))

@@ -283,10 +283,4 @@ object Multimodal {
         lit(mime).as("mime"))
       .as[MediaItem]
   }
-
-  /** Column-level metadata that needs no decode (pushdown-friendly:
-    * length/digest never read the payload twice). */
-  def payloadMeta(df: DataFrame, payloadCol: String): DataFrame =
-    df.withColumn("n_bytes", length(col(payloadCol)).cast("long"))
-      .withColumn("digest", md5(col(payloadCol)))
 }

@@ -90,7 +90,8 @@ object Pq {
     * discipline). Runs as ONE native codegen'd kernel per row
     * ([[graft.functions.PqEncode]]; the codebook rides as a reference
     * object) — bit-identical to the original HOF form it replaced
-    * ([[encodeHof]], pinned by PqExprsSpec and the oracle gate): same
+    * (`encodeHof`, PqExprsSpec's test-scope reference; also pinned by
+    * the oracle gate): same
     * ascending-i fold per (subspace, codeword) distance, same
     * round(·, 9) tie grid, same lowest-id tie-break. The HOF shape
     * existed because a literal-unrolled form blows Janino's 64 KB
@@ -107,25 +108,6 @@ object Pq {
       codeCol: String = "pq_code"): DataFrame =
     df.withColumn(codeCol, call_function("pq_encode", col(vecCol),
       typedlit(model.codebooks)))
-
-  /** The ORIGINAL higher-order-function encode — the semantic
-    * reference [[graft.functions.PqEncode]] is pinned bit-identical
-    * to (PqExprsSpec), kept only for that parity spec. */
-  private[ext] def encodeHof(df: DataFrame, vecCol: String, model: PqModel,
-      codeCol: String = "pq_code"): DataFrame = {
-    val cb = typedlit(model.codebooks) // m × ks × dsub
-    val codes = (0 until model.m).map { j =>
-      val sl = slice(col(vecCol), j * model.dsub + 1, model.dsub)
-      array_min(transform(element_at(cb, j + 1), (row, c) =>
-        struct(round(aggregate(zip_with(sl, row, (x, y) => {
-          val d = x.cast("double") - y
-          d * d
-        }), lit(0.0), (a, b) => a + b), 9).as("d"),
-          c.cast("int").as("c")))).getField("c")
-    }
-    df.withColumn(codeCol,
-      when(col(vecCol).isNotNull, array(codes: _*)))
-  }
 
   /** OPQ parametric initialization (Ge/He/Ke/Sun, "Optimized Product
     * Quantization", CVPR 2013 §4): a PCA rotation alone CONCENTRATES
@@ -362,52 +344,20 @@ object Pq {
     * bounded-pool ADC recall degrades silently otherwise
     * ([[IvfIndex.pqDrift]] accumulates this per refresh delta). One
     * native codegen'd kernel per row ([[graft.functions.PqQuantErr]],
-    * bit-identical to the HOF reference [[quantErrHof]] — PqExprsSpec);
+    * bit-identical to the HOF reference `quantErrHof` — PqExprsSpec);
     * map-only. */
   private[ext] def quantErr(v: Column, cd: Column,
       model: PqModel): Column =
     call_function("pq_quant_err", v, cd, typedlit(model.codebooks))
 
-  /** The ORIGINAL HOF quantization error — kept as [[quantErr]]'s
-    * semantic reference for the parity spec. */
-  private[ext] def quantErrHof(v: Column, cd: Column,
-      model: PqModel): Column = {
-    val cb = typedlit(model.codebooks) // m × ks × dsub
-    (0 until model.m).map { j =>
-      val sl = slice(v, j * model.dsub + 1, model.dsub)
-      val row = element_at(element_at(cb, j + 1),
-        element_at(cd, j + 1) + 1)
-      aggregate(zip_with(sl, row, (x, y) => {
-        val d = x.cast("double") - y
-        d * d
-      }), lit(0.0), (a, b) => a + b)
-    }.reduce(_ + _)
-  }
-
-  /** The ADC cosine EXPRESSION of a full-precision query vector `qv`
-    * against the reconstruction a code column `cd` encodes — per
-    * subspace, dot(q_j, cb[code_j]) and ‖cb[code_j]‖² selected from
-    * literal tables by the stored code (element_at lookups +
-    * zip_with/aggregate loops — the same under-64KB codegen shape as
-    * [[encode]]; the sub-norms are a precomputed m × ks literal).
-    * Shared by [[adcTopK]] and [[IvfIndex.probe]]'s PQ path.
-    *
-    * `qvRot` = OPQ mode: the codes quantize R·v, so the
-    * reconstruction lives in the ROTATED space and the dot leg reads
-    * the PRE-ROTATED query column (cos(q, Rᵀẑ) = (Rq)·ẑ / (‖q‖·‖ẑ‖) —
-    * R orthogonal preserves the norms). The caller materializes Rq
-    * ONCE as a column on the query side of its join ([[rotate]]):
-    * HOF lambdas are excluded from Spark's common-subexpression
-    * elimination, so an in-expression rotate here would re-run the
-    * d×d matvec once PER SUBSPACE per scanned code — m× the intended
-    * cost on the exact step PQ exists to keep cheap. */
   /** The per-vector ADC LOOKUP TABLE: an m × ks array of sub-dots —
     * lut[j][c] = dot(v_j, cb[j][c]) — computed ONCE per row of the
     * (small) side that carries `v`. The classic ADC trade: scoring a
     * candidate then costs m table lookups instead of m slice+zip_with
     * sub-dots over the full vector. Each table cell is the EXACT
-    * expression [[adcSim]]/[[adcSimResidual]] inlined per candidate
-    * (same zip_with/aggregate element order), and the score sums
+    * expression the inline forms `adcSim`/`adcSimResidual` (AdcLutSpec's
+    * test-scope references) compute per candidate (same
+    * zip_with/aggregate element order), and the score sums
     * cells in the same ascending-j order — the LUT form is
     * bit-identical to the inline form, just hoisted from the
     * |candidates|-sized side to the |queries·nprobe|-sized side
@@ -424,14 +374,14 @@ object Pq {
   }
 
   /** Σ_j lut[j][code_j] — the LUT-form sub-dot sum (ascending j, the
-    * [[adcSim]] reduce order). */
+    * inline form's reduce order). */
   private[ext] def lutSum(lut: Column, cd: Column, model: PqModel): Column =
     (0 until model.m).map { j =>
       element_at(element_at(lut, j + 1), element_at(cd, j + 1) + 1)
     }.reduce(_ + _)
 
   /** Σ_j ‖cb_j[code_j]‖² from the precomputed sub-norm literal —
-    * shared by the inline and LUT score forms. */
+    * shared by both LUT score forms. */
   private[ext] def codeNorm2(cd: Column, model: PqModel): Column = {
     val n2 = typedlit(model.codebooks.map(_.map(_.map(x => x * x).sum)))
     (0 until model.m).map { j =>
@@ -439,97 +389,40 @@ object Pq {
     }.reduce(_ + _)
   }
 
-  /** ‖v‖ as the exact [[adcSim]] qNorm expression. */
+  /** ‖v‖: the squares summed in element order, then sqrt. */
   private[ext] def vecNorm(v: Column): Column =
     sqrt(aggregate(v, lit(0.0),
       (acc, x) => acc + x.cast("double") * x.cast("double")))
 
-  /** [[adcSim]] in LUT form: `qlut` = [[subDotLut]] of the (rotated)
-    * query, `qNorm` = [[vecNorm]] of the RAW query — both hoisted to
-    * the query side by the caller. Bit-identical to [[adcSim]]. */
+  /** The ADC cosine of a full-precision query against the
+    * reconstruction a code column `cd` encodes, in LUT form:
+    * Σ_j dot(q_j, cb_j[code_j]) over ‖q‖·sqrt(Σ_j ‖cb_j[code_j]‖²).
+    * `qlut` = [[subDotLut]] of the (rotated) query, `qNorm` =
+    * [[vecNorm]] of the RAW query — both hoisted to the query side by
+    * the caller. In OPQ mode the codes quantize R·v, so `qlut` reads
+    * Rq, materialized once as its own column ([[rotate]]; HOF lambdas
+    * are exempt from common-subexpression elimination), while ‖q‖
+    * stays raw (R is orthogonal). Bit-identical to the inline
+    * reference `adcSim` (AdcLutSpec). */
   private[ext] def adcSimLut(qlut: Column, qNorm: Column, cd: Column,
       model: PqModel): Column =
     lutSum(qlut, cd, model) / (qNorm * sqrt(codeNorm2(cd, model)))
 
-  /** [[adcSimResidual]] in LUT form — every (query, centroid)-only
-    * term hoisted by the caller: `qlut`/`clut` = [[subDotLut]] of the
+  /** [[adcSimLut]] for RESIDUAL-encoded codes (the code word quantizes
+    * v − centroid): cos(q, c + r̂) = (q·c + Σ_j dot(q_j, cb_j[code_j]))
+    * over ‖q‖·sqrt(‖c‖² + 2·Σ_j dot(c_j, cb_j[code_j]) +
+    * Σ_j ‖cb_j[code_j]‖²). Every (query, centroid)-only term is
+    * hoisted by the caller: `qlut`/`clut` = [[subDotLut]] of the
     * (rotated) query / centroid, `dotQC` = q·c, `cnorm2` = ‖c‖²,
     * `qNorm` = ‖q‖. Per candidate: 3·m element_at lookups plus scalar
-    * arithmetic. Bit-identical to [[adcSimResidual]]. */
+    * arithmetic. Bit-identical to the inline reference
+    * `adcSimResidual` (AdcLutSpec). */
   private[ext] def adcSimResidualLut(qlut: Column, clut: Column,
       dotQC: Column, cnorm2: Column, qNorm: Column, cd: Column,
       model: PqModel): Column =
     (dotQC + lutSum(qlut, cd, model)) /
       (qNorm * sqrt(cnorm2 +
         lit(2.0) * lutSum(clut, cd, model) + codeNorm2(cd, model)))
-
-  private[ext] def adcSim(qv: Column, cd: Column, model: PqModel,
-      qvRot: Option[Column] = None): Column = {
-    val cb = typedlit(model.codebooks) // m × ks × dsub
-    val n2 = typedlit(model.codebooks.map(_.map(_.map(x => x * x).sum)))
-    val qr = qvRot.getOrElse(qv)
-    val dotJ = (0 until model.m).map { j =>
-      val qsl = slice(qr, j * model.dsub + 1, model.dsub)
-      val row = element_at(element_at(cb, j + 1),
-        element_at(cd, j + 1) + 1)
-      aggregate(zip_with(qsl, row, (x, y) => x.cast("double") * y),
-        lit(0.0), (a, b) => a + b)
-    }.reduce(_ + _)
-    val norm2J = (0 until model.m).map { j =>
-      element_at(element_at(n2, j + 1), element_at(cd, j + 1) + 1)
-    }.reduce(_ + _)
-    val qNorm = sqrt(aggregate(qv, lit(0.0),
-      (acc, x) => acc + x.cast("double") * x.cast("double")))
-    dotJ / (qNorm * sqrt(norm2J))
-  }
-
-  /** [[adcSim]] for RESIDUAL-encoded codes (the canonical IVF-PQ
-    * layout: the code word quantizes v − centroid, which a small
-    * codebook reconstructs far better than the raw vector):
-    * cos(q, c + r̂) with r̂ the code's reconstruction —
-    * dot(q,c) + Σ_j dot(q_j, cb_j[code_j]) over
-    * ‖q‖ · sqrt(‖c‖² + 2·Σ_j dot(c_j, cb_j[code_j]) + Σ_j ‖cb_j[code_j]‖²).
-    * The centroid leg (`cvec`) rides as a per-row array (an
-    * element_at into the quantizer literal at the probe site), so no
-    * nlist×m×ks cross-term table ever materializes — the FAISS
-    * precomputed-table trade, resolved for literal-size safety at
-    * production nlist. Same HOF codegen shape as [[adcSim]].
-    *
-    * `qvRot`/`cvecRot` = OPQ mode: codes quantize R·(v − c), so the
-    * reconstruction is v̂ = c + Rᵀẑ and BOTH dot-with-codeword legs
-    * read rotated vectors — q·Rᵀẑ = (Rq)·ẑ and c·Rᵀẑ = (Rc)·ẑ —
-    * while ‖q‖, ‖c‖², q·c stay in the raw space (R orthogonal).
-    * Same pre-rotation contract as [[adcSim]]: the caller hands Rq as
-    * a once-materialized column and Rc as a DRIVER-rotated centroid
-    * literal lookup (nlist·d doubles — a gather per row, never a
-    * per-row matvec). */
-  private[ext] def adcSimResidual(qv: Column, cd: Column, cvec: Column,
-      model: PqModel,
-      qvRot: Option[Column] = None,
-      cvecRot: Option[Column] = None): Column = {
-    val cb = typedlit(model.codebooks)
-    val n2 = typedlit(model.codebooks.map(_.map(_.map(x => x * x).sum)))
-    def dotWithRows(v: Column): Column =
-      (0 until model.m).map { j =>
-        val sl = slice(v, j * model.dsub + 1, model.dsub)
-        val row = element_at(element_at(cb, j + 1),
-          element_at(cd, j + 1) + 1)
-        aggregate(zip_with(sl, row, (x, y) => x.cast("double") * y),
-          lit(0.0), (a, b) => a + b)
-      }.reduce(_ + _)
-    val rnorm2 = (0 until model.m).map { j =>
-      element_at(element_at(n2, j + 1), element_at(cd, j + 1) + 1)
-    }.reduce(_ + _)
-    val dotQC = aggregate(zip_with(qv, cvec,
-      (x, y) => x.cast("double") * y), lit(0.0), (a, b) => a + b)
-    val cnorm2 = aggregate(cvec, lit(0.0),
-      (acc, x) => acc + x * x)
-    val qNorm = sqrt(aggregate(qv, lit(0.0),
-      (acc, x) => acc + x.cast("double") * x.cast("double")))
-    (dotQC + dotWithRows(qvRot.getOrElse(qv))) /
-      (qNorm * sqrt(cnorm2 +
-        lit(2.0) * dotWithRows(cvecRot.getOrElse(cvec)) + rnorm2))
-  }
 
   /** Asymmetric-distance (ADC) approximate cosine: the query keeps
     * full precision, the corpus side is its PQ reconstruction —

@@ -49,7 +49,9 @@ object Retrieval {
     * past the bound fails at the per-cluster collapse; a survivor
     * set (distinct clusters + unkeyed rows) past it fails at the
     * re-cut — instead of silently serializing an unbounded partition
-    * through one task.
+    * through one task. In the single-query form the re-cut is one
+    * unpartitioned window, so its single-partition exchange carries
+    * at most `maxCandidates` rows.
     *
     * `queryCol` = the BATCH form (the [[graft.ext.Bm25Index.topNBatch]]
     * shape): the input carries a whole query set's candidate lists
@@ -67,22 +69,6 @@ object Retrieval {
     require(topN > 0, s"topN must be positive: $topN")
     require(maxCandidates >= topN,
       s"maxCandidates $maxCandidates < topN $topN")
-    if (queryCol.isEmpty) {
-      // ONE implementation (r20): the single-query form IS the batch
-      // form over a constant query key — the collapse and re-cut
-      // windows then always key on (query, …), so no unpartitioned
-      // WindowExec survives in any plan (per-query equivalence was
-      // already spec-pinned from the batch side)
-      var qc = "__ddt_q"
-      while (ranked.columns.contains(qc)) qc += "_"
-      // constant-0 key DERIVED from the id column (a bare literal is
-      // folded out of window partition specs by the optimizer, which
-      // would resurrect the unpartitioned WindowExec)
-      return dedupTopN(
-        ranked.withColumn(qc, pmod(xxhash64(col(idCol)), lit(1L))),
-        idCol, scoreCol, clusterCol, topN, maxCandidates, Some(qc))
-        .drop(qc)
-    }
     // a null query id in batch mode would weld unrelated candidates
     // into one ranking (the topNBatch hazard) — refuse in-plan
     val ranked0 = queryCol.fold(ranked)(q => ranked.filter(

@@ -91,6 +91,32 @@ object Similarity {
     else (vecs("ida"), vecs("idb"))
   }
 
+  /** EXACT all-pairs cosine over a BOUNDED corpus — the truth oracle
+    * an audit replays (q129/q144), NOT a production generator: it
+    * REFUSES corpora over `maxRows` rather than going quadratic
+    * silently (the production paths are the blocked
+    * [[cosineNearDupPairs]] and the banded approx family). For a
+    * corpus small enough to broadcast, one nested-loop pass beats the
+    * blocked machinery whenever the threshold is loose enough that
+    * blocking can't prune (at t=0.90 candidates ≈ all pairs, and the
+    * explode/distinct scaffolding is pure overhead) — and it mirrors
+    * the DuckDB oracle's own `x JOIN y ON x.id < y.id` construction
+    * line-for-line. Output: (ida, idb, cosine_sim), ida < idb. */
+  def cosineAllPairsBounded(df: DataFrame, idCol: String, vecCol: String,
+      threshold: Double, maxRows: Long = 10000): DataFrame = {
+    val (nVecs, _) = vecSizing(df, vecCol, "bounded all-pairs", 1)
+    require(nVecs <= maxRows,
+      s"cosineAllPairsBounded: $nVecs rows > maxRows $maxRows — this is " +
+        "the audit-sized truth generator; use cosineNearDupPairs / the " +
+        "approx family for production corpora")
+    val a = df.select(col(idCol).as("ida"), col(vecCol).as("__va"))
+    val b = df.select(col(idCol).as("idb"), col(vecCol).as("__vb"))
+    a.join(broadcast(b), col("ida") < col("idb"))
+      .select(col("ida"), col("idb"),
+        cosine(col("__va"), col("__vb")).as("cosine_sim"))
+      .filter(col("cosine_sim") >= threshold)
+  }
+
   /** EXACT cosine near-duplicate pairs at `threshold` — the embedding
     * analog of Dedup's text near-dup operators. Blocking is a
     * pigeonhole-banded grid over ALL coordinates of the L2-normalized
@@ -133,32 +159,6 @@ object Similarity {
     * probeIvfIndex discipline). Composite consumers that drain the
     * pairs internally use [[cosineNearDupPairsStaged]] and release
     * everything before returning. */
-  /** EXACT all-pairs cosine over a BOUNDED corpus — the truth oracle
-    * an audit replays (q129/q144), NOT a production generator: it
-    * REFUSES corpora over `maxRows` rather than going quadratic
-    * silently (the production paths are the blocked
-    * [[cosineNearDupPairs]] and the banded approx family). For a
-    * corpus small enough to broadcast, one nested-loop pass beats the
-    * blocked machinery whenever the threshold is loose enough that
-    * blocking can't prune (at t=0.90 candidates ≈ all pairs, and the
-    * explode/distinct scaffolding is pure overhead) — and it mirrors
-    * the DuckDB oracle's own `x JOIN y ON x.id < y.id` construction
-    * line-for-line. Output: (ida, idb, cosine_sim), ida < idb. */
-  def cosineAllPairsBounded(df: DataFrame, idCol: String, vecCol: String,
-      threshold: Double, maxRows: Long = 10000): DataFrame = {
-    val (nVecs, _) = vecSizing(df, vecCol, "bounded all-pairs", 1)
-    require(nVecs <= maxRows,
-      s"cosineAllPairsBounded: $nVecs rows > maxRows $maxRows — this is " +
-        "the audit-sized truth generator; use cosineNearDupPairs / the " +
-        "approx family for production corpora")
-    val a = df.select(col(idCol).as("ida"), col(vecCol).as("__va"))
-    val b = df.select(col(idCol).as("idb"), col(vecCol).as("__vb"))
-    a.join(broadcast(b), col("ida") < col("idb"))
-      .select(col("ida"), col("idb"),
-        cosine(col("__va"), col("__vb")).as("cosine_sim"))
-      .filter(col("cosine_sim") >= threshold)
-  }
-
   def cosineNearDupPairs(df: DataFrame, idCol: String, vecCol: String,
       threshold: Double, gridDims: Int = 4, blockings: Int = 1,
       broadcastBudgetBytes: Long = 256L << 20,
@@ -1220,37 +1220,5 @@ object Similarity {
         coalesce(lit(1.0) / (lit(rrfK) + col(s"rank_$i")), lit(0.0)))
       .reduce(_ + _)
     joined.withColumn("rrf_score", round(rrf, 9))
-  }
-
-  /** Hybrid top-k retrieval: BM25 over `textCol` fused with cosine
-    * similarity of `vecCol` against `queryVec`, by [[rrfFuse]]. The
-    * frame carries BOTH representations of each document (the id
-    * spaces are one). Each retriever cuts to `candidates` first —
-    * corpus-scale work is one stats aggregate + pure-projection
-    * scoring + a distributed TakeOrdered per retriever; only the
-    * candidate lists meet. Cosine is rounded at 1e-6 BEFORE ranking
-    * (the q27 discipline: float sum order must never decide a rank
-    * across engines). Output: (idCol, rrf_score, rank_1=lexical,
-    * rank_2=vector).
-    *
-    * Scale note: the vector side here is the EXACT linear-scan
-    * baseline (one projection + TakeOrdered per query — linear, never
-    * quadratic, but still a full corpus pass). For corpus-scale or
-    * many-query use, feed [[rrfFuse]] directly from the indexed
-    * retrievers instead ([[ivfTopK]] / persisted IVF partition-pruned
-    * probes, or [[lshTopK]]) — RRF only needs the ranked candidate
-    * lists, not how they were produced. */
-  def hybridTopK(df: DataFrame, idCol: String, textCol: String,
-      queryTerms: Seq[String], vecCol: String, queryVec: Seq[Double],
-      candidates: Int, topN: Int, rrfK: Int = 60): DataFrame = {
-    require(candidates >= topN, s"candidates $candidates < topN $topN")
-    val lex = TextAnalysis.bm25TopN(df, idCol, textCol, queryTerms,
-      topN = candidates)
-    val vec = df.select(col(idCol),
-        round(cosine(col(vecCol),
-          typedlit(queryVec).cast("array<float>")), 6).as("cos"))
-      .orderBy(col("cos").desc, col(idCol))
-      .limit(candidates)
-    rrfFuse(Seq(lex -> "bm25", vec -> "cos"), idCol, topN, rrfK)
   }
 }

@@ -353,17 +353,6 @@ object TextAnalysis {
   def shuffleKey(id: Column, seed: String): Column =
     md5(concat(lit(seed), id.cast("string")))
 
-  /** Deterministic corpus shuffle — decorrelates source ordering
-    * before training (documents arrive grouped by crawl/domain; models
-    * should not see them that way). A global reorder by the seeded
-    * hash key: Spark executes it as a range-partitioned sort (sampled
-    * boundaries, every task sorts its slice — no single-task sort),
-    * and the derivation is pure projection, so the shuffle is exactly
-    * one exchange. */
-  def deterministicShuffle(df: org.apache.spark.sql.DataFrame,
-      idCol: String, seed: String): org.apache.spark.sql.DataFrame =
-    df.orderBy(shuffleKey(col(idCol), seed))
-
   /** C4-style line-level cleaning (Raffel et al., arXiv:1910.10683
     * §2.2 — the public web-corpus curation rules): keep only lines
     * that (1) are non-empty after trimming, (2) end in terminal

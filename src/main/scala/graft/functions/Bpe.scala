@@ -282,7 +282,8 @@ object Bpe {
     * and near-FLAT in K (1.2 s → 1.9 s for 8× more merges) where the
     * reference grows linearly — at a production 32k-merge vocab that
     * is seconds versus tens of minutes. Deterministic
-    * and bit-identical to [[trainOnCountsReference]] (ties broken by
+    * and bit-identical to the textbook K-pass loop
+    * (`BpeSpec.trainOnCountsReference`; ties broken by
     * (count DESC, left ASC, right ASC); BpeSpec pins the equivalence
     * property-style on random corpora). */
   def trainOnCounts(wordCounts: Seq[(String, Long)],
@@ -363,55 +364,6 @@ object Bpe {
         }
         pairCount.remove(best)
         pairWords.remove(best)
-      }
-    }
-    out.toIndexedSeq
-  }
-
-  /** Reference trainer — the K-pass textbook loop the incremental
-    * [[trainOnCounts]] must reproduce bit-for-bit (BpeSpec). Kept as
-    * the equivalence oracle; quadratic in (merges × vocab). */
-  def trainOnCountsReference(wordCounts: Seq[(String, Long)],
-      numMerges: Int): IndexedSeq[(String, String)] = {
-    def cps(w: String): Array[String] = {
-      val out = new mutable.ArrayBuffer[String](w.length)
-      var i = 0
-      while (i < w.length) {
-        val cp = w.codePointAt(i); val n = Character.charCount(cp)
-        out += w.substring(i, i + n); i += n
-      }
-      out.toArray
-    }
-    var segs: Array[(Array[String], Long)] =
-      wordCounts.map { case (w, c) => (cps(w), c) }.toArray
-    val out = mutable.ArrayBuffer.empty[(String, String)]
-    var k = 0
-    var exhausted = false
-    while (k < numMerges && !exhausted) {
-      val pairCounts = mutable.HashMap.empty[(String, String), Long]
-      segs.foreach { case (toks, c) =>
-        var i = 0
-        while (i < toks.length - 1) {
-          val p = (toks(i), toks(i + 1))
-          pairCounts.update(p, pairCounts.getOrElse(p, 0L) + c)
-          i += 1
-        }
-      }
-      if (pairCounts.isEmpty) exhausted = true
-      else {
-        val best = pairCounts.toSeq.minBy { case ((l, r), c) => (-c, l, r) }._1
-        out += best
-        segs = segs.map { case (toks, c) =>
-          val merged = new mutable.ArrayBuffer[String](toks.length)
-          var j = 0
-          while (j < toks.length) {
-            if (j < toks.length - 1 && toks(j) == best._1 &&
-                toks(j + 1) == best._2) { merged += (best._1 + best._2); j += 2 }
-            else { merged += toks(j); j += 1 }
-          }
-          (merged.toArray, c)
-        }
-        k += 1
       }
     }
     out.toIndexedSeq

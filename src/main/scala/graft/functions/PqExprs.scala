@@ -159,9 +159,6 @@ object PqExprs {
       case _ => None
     }
 
-  private[functions] val CbType: DataType =
-    ArrayType(ArrayType(ArrayType(DoubleType)))
-
   private[functions] def cbOk(e: Expression): Boolean = e.foldable &&
     (e.dataType match {
       case ArrayType(ArrayType(ArrayType(DoubleType, _), _), _) => true

@@ -43,11 +43,7 @@ object ExtQueries extends QueryPack {
 
     private def build(s: SparkSession, dir: String): P = {
       import graft.sources.VersionedTable
-      val wh = s.conf.get("spark.sql.warehouse.dir")
-      val whPath =
-        if (wh.startsWith("file:")) new java.net.URI(wh).getPath else wh
-      val base = new java.io.File(whPath,
-        s"graft_idxfix/${java.util.UUID.randomUUID()}").toString
+      val base = tmp(s, s"graft_idxfix/${java.util.UUID.randomUUID()}")
       val p = P(s"$base/emb", s"$base/ivf", s"$base/pq_ivf",
         s"$base/docs", s"$base/bm25")
       // the embedding timeline and the document timeline touch
@@ -111,11 +107,7 @@ object ExtQueries extends QueryPack {
 
     private def build(s: SparkSession, dir: String): P = {
       import graft.sources.VersionedTable
-      val wh = s.conf.get("spark.sql.warehouse.dir")
-      val whPath =
-        if (wh.startsWith("file:")) new java.net.URI(wh).getPath else wh
-      val base = new java.io.File(whPath,
-        s"graft_asoffix/${java.util.UUID.randomUUID()}").toString
+      val base = tmp(s, s"graft_asoffix/${java.util.UUID.randomUUID()}")
       val p = P(s"$base/emb", s"$base/ivf", s"$base/pq_ivf",
         s"$base/docs", s"$base/bm25")
       // disjoint-corpus timelines built concurrently (guide §2.6);
@@ -1025,15 +1017,10 @@ object ExtQueries extends QueryPack {
     // guarantee q61 certifies, now for the persisted form.
     "q116_ivf_persisted" -> { (s, dir) =>
       val e = embs(s, dir)
-      // per-run location under this session's warehouse dir (every
-      // entrypoint creates a fresh temp warehouse): repeated calls in
-      // one run reuse it via overwrite mode, while concurrent runs by
-      // other processes/users on a shared machine cannot collide
-      // mid-overwrite the way a fixed java.io.tmpdir path could
-      val wh = s.conf.get("spark.sql.warehouse.dir")
-      val whPath =
-        if (wh.startsWith("file:")) new java.net.URI(wh).getPath else wh
-      val path = new java.io.File(whPath, "graft_ivf_q116").toString
+      // per-run location: repeated calls in one run reuse it via
+      // overwrite mode, while concurrent runs by other processes/users
+      // on a shared machine cannot collide mid-overwrite
+      val path = tmp(s, "graft_ivf_q116")
       Similarity.writeIvfIndex(e, "vec_id", "embedding", nlist = 8, path)
       // scale proof: a partial probe reads ONLY its probed lists (the
       // probe result is persisted by contract — the cached plan string
@@ -1885,11 +1872,7 @@ object ExtQueries extends QueryPack {
     // term idf, per-(query, doc) sums, the filter, and every cut.
     "q198_bm25_batch" -> { (s, dir) =>
       import graft.sources.VersionedTable
-      val wh = s.conf.get("spark.sql.warehouse.dir")
-      val whPath =
-        if (wh.startsWith("file:")) new java.net.URI(wh).getPath else wh
-      val base = new java.io.File(whPath,
-        s"graft_q198/${java.util.UUID.randomUUID()}").toString
+      val base = tmp(s, s"graft_q198/${java.util.UUID.randomUUID()}")
       val (tbl, idx) = (s"$base/docs", s"$base/bm25")
       VersionedTable.create(s, tbl,
         docs(s, dir).select(col("doc_id"), col("text")))
@@ -1940,11 +1923,7 @@ object ExtQueries extends QueryPack {
     // probe — and the per-query fusion arithmetic from scratch.
     "q201_hybrid_batch" -> { (s, dir) =>
       import graft.sources.VersionedTable
-      val wh = s.conf.get("spark.sql.warehouse.dir")
-      val whPath =
-        if (wh.startsWith("file:")) new java.net.URI(wh).getPath else wh
-      val base = new java.io.File(whPath,
-        s"graft_q201/${java.util.UUID.randomUUID()}").toString
+      val base = tmp(s, s"graft_q201/${java.util.UUID.randomUUID()}")
       val (tbl, idx) = (s"$base/docs", s"$base/bm25")
       import s.implicits._
       VersionedTable.create(s, tbl,
@@ -2023,11 +2002,7 @@ object ExtQueries extends QueryPack {
     // per-(query, cluster) argmax, and every per-query re-cut.
     "q202_dedup_retrieval_batch" -> { (s, dir) =>
       import graft.sources.VersionedTable
-      val wh = s.conf.get("spark.sql.warehouse.dir")
-      val whPath =
-        if (wh.startsWith("file:")) new java.net.URI(wh).getPath else wh
-      val base = new java.io.File(whPath,
-        s"graft_q202/${java.util.UUID.randomUUID()}").toString
+      val base = tmp(s, s"graft_q202/${java.util.UUID.randomUUID()}")
       val (tbl, idx) = (s"$base/docs", s"$base/bm25")
       import s.implicits._
       val d = docs(s, dir)
@@ -2218,11 +2193,7 @@ object ExtQueries extends QueryPack {
     // maintained cluster spans all three waves.
     "q206_maintained_clusters" -> { (s, dir) =>
       import graft.sources.VersionedTable
-      val wh = s.conf.get("spark.sql.warehouse.dir")
-      val whPath =
-        if (wh.startsWith("file:")) new java.net.URI(wh).getPath else wh
-      val root = new java.io.File(whPath,
-        s"graft_q206/${java.util.UUID.randomUUID()}/labels").toString
+      val root = tmp(s, s"graft_q206/${java.util.UUID.randomUUID()}/labels")
       val d = docs(s, dir).select(col("doc_id"), col("lang"),
         col("n_chars"))
       val w = org.apache.spark.sql.expressions.Window
@@ -2386,11 +2357,7 @@ object ExtQueries extends QueryPack {
     // (the q191 idiom — certify in-query, replay the exact leg).
     "q199_pq_operating_point" -> { (s, dir) =>
       import graft.sources.VersionedTable
-      val wh = s.conf.get("spark.sql.warehouse.dir")
-      val whPath =
-        if (wh.startsWith("file:")) new java.net.URI(wh).getPath else wh
-      val base = new java.io.File(whPath,
-        s"graft_q199/${java.util.UUID.randomUUID()}").toString
+      val base = tmp(s, s"graft_q199/${java.util.UUID.randomUUID()}")
       val (tbl, idx) = (s"$base/emb", s"$base/pq_ivf")
       val e = embs(s, dir).select(col("vec_id"), col("embedding"))
       VersionedTable.create(s, tbl, e)

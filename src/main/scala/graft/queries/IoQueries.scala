@@ -19,16 +19,6 @@ object IoQueries extends QueryPack {
   private def run(s: SparkSession, dir: String, flow: DataFlow): Map[String, DataFrame] =
     DataFlowExec.run(flow, PipelineContext.overDir(s, dir))
 
-  // anchored under the session's per-run temp warehouse (not a fixed
-  // java.io.tmpdir path): concurrent runs on a shared machine get
-  // disjoint locations, same fix as q116's IVF index
-  private def tmp(s: SparkSession, name: String) = {
-    val wh = s.conf.get("spark.sql.warehouse.dir")
-    val whPath =
-      if (wh.startsWith("file:")) new java.net.URI(wh).getPath else wh
-    s"$whPath/graft_io/$name"
-  }
-
   /** Shared churned fixture for the MV family (q178/q180/q181) — one
     * orders/customer pair and ONE union churn timeline instead of
     * three private bases (r14 verdict item 7: the four MV gate queries
@@ -60,10 +50,10 @@ object IoQueries extends QueryPack {
     private def build(s: SparkSession, dir: String): P = {
       import graft.sources.{MaterializedView, VersionedTable}
       val id = java.util.UUID.randomUUID()
-      val p = P(tmp(s, s"vt_mvfix/$id/orders"),
-        tmp(s, s"vt_mvfix/$id/customer"), tmp(s, s"vt_mvfix/$id/mv178"),
-        tmp(s, s"vt_mvfix/$id/mv180"), tmp(s, s"vt_mvfix/$id/mv181a"),
-        tmp(s, s"vt_mvfix/$id/mv181b"))
+      val p = P(tmp(s, s"graft_io/vt_mvfix/$id/orders"),
+        tmp(s, s"graft_io/vt_mvfix/$id/customer"), tmp(s, s"graft_io/vt_mvfix/$id/mv178"),
+        tmp(s, s"graft_io/vt_mvfix/$id/mv180"), tmp(s, s"graft_io/vt_mvfix/$id/mv181a"),
+        tmp(s, s"graft_io/vt_mvfix/$id/mv181b"))
       val orders = graft.Tables.load(s, dir, "orders").select(
         col("o_orderkey"), col("o_custkey"),
         (col("o_custkey") % 10).as("bucket"), col("o_orderpriority"),
@@ -147,7 +137,7 @@ object IoQueries extends QueryPack {
     // prune every range predicate). The oracle is content identity:
     // compaction must never change the rows.
     "q121_compaction" -> { (s, dir) =>
-      val path = tmp(s, "documents_compacted")
+      val path = tmp(s, "graft_io/documents_compacted")
       val src = graft.Tables.load(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
       val files = graft.ops.Scale.compactWrite(src, path,
@@ -175,7 +165,7 @@ object IoQueries extends QueryPack {
     // cannot give (every q121 file spans the full n_chars range).
     // The oracle is content identity: clustering never changes rows.
     "q126_zorder_compaction" -> { (s, dir) =>
-      val path = tmp(s, "documents_zorder")
+      val path = tmp(s, "graft_io/documents_zorder")
       val src = graft.Tables.load(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
       val files = graft.ops.Scale.compactWriteZ(src, path,
@@ -208,7 +198,7 @@ object IoQueries extends QueryPack {
 
     // CSV write → CSV read (header on, explicit schema on read).
     "q32_csv_roundtrip" -> { (s, dir) =>
-      val path = tmp(s, "nation_csv")
+      val path = tmp(s, "graft_io/nation_csv")
       run(s, dir, DataFlow("q32w", Seq(
         SourceTable("src", "nation"),
         FileDestination("dst", path, "csv", WriteMode.Overwrite,
@@ -223,7 +213,7 @@ object IoQueries extends QueryPack {
 
     // JSON write → JSON read (schema pinned: JSON key order is not).
     "q33_json_roundtrip" -> { (s, dir) =>
-      val path = tmp(s, "supplier_json")
+      val path = tmp(s, "graft_io/supplier_json")
       run(s, dir, DataFlow("q33w", Seq(
         SourceTable("src", "supplier"),
         FileDestination("dst", path, "json", WriteMode.Overwrite)),
@@ -238,7 +228,7 @@ object IoQueries extends QueryPack {
     // Flat-file text source: one line per document (corpus has no
     // embedded newlines; lines are unique).
     "q34_text_source" -> { (s, dir) =>
-      val path = tmp(s, "documents_text")
+      val path = tmp(s, "graft_io/documents_text")
       run(s, dir, DataFlow("q34w", Seq(
         SourceTable("src", "documents", columns = Seq("text")),
         FileDestination("dst", path, "text", WriteMode.Overwrite)),
@@ -251,7 +241,7 @@ object IoQueries extends QueryPack {
 
     // Excel write → Excel read through the native OOXML reader/writer.
     "q39_excel_roundtrip" -> { (s, dir) =>
-      val path = tmp(s, "region_xlsx/region.xlsx")
+      val path = tmp(s, "graft_io/region_xlsx/region.xlsx")
       run(s, dir, DataFlow("q39w", Seq(
         SourceTable("src", "region"),
         ExcelDestination("dst", path)),
@@ -267,7 +257,7 @@ object IoQueries extends QueryPack {
     // goes to its own file, then comes back as a binary column joined
     // via the distributed binaryFile source.
     "q46_import_export" -> { (s, dir) =>
-      val base = tmp(s, "doc_files")
+      val base = tmp(s, "graft_io/doc_files")
       val flow = DataFlow("q46", Seq(
         SourceTable("src", "documents", columns = Seq("doc_id", "text"),
           filter = Some("doc_id < 200")),
@@ -294,7 +284,7 @@ object IoQueries extends QueryPack {
           collect_list(struct(col("n_nationkey"), col("n_name"),
             col("n_regionkey"))).as("rows"))).as("doc"))
         .head().getString(0)
-      val f = new java.io.File(tmp(s, "nation_rest/payload.json"))
+      val f = new java.io.File(tmp(s, "graft_io/nation_rest/payload.json"))
       Option(f.getParentFile).foreach(_.mkdirs())
       java.nio.file.Files.write(f.toPath, payload.getBytes("UTF-8"))
       run(s, dir, DataFlow("q53r", Seq(
@@ -423,7 +413,7 @@ object IoQueries extends QueryPack {
     // PartitionFilter on the scan, not a post-read Filter — asserted,
     // so a layout regression fails the query, not just a spec).
     "q103_partitioned_layout" -> { (s, dir) =>
-      val path = tmp(s, "documents_by_lang")
+      val path = tmp(s, "graft_io/documents_by_lang")
       run(s, dir, DataFlow("q103w", Seq(
         SourceTable("src", "documents"),
         FileDestination("dst", path, "parquet", WriteMode.Overwrite,
@@ -441,7 +431,7 @@ object IoQueries extends QueryPack {
 
     // XML write → XML read via Spark's built-in xml datasource.
     "q40_xml_roundtrip" -> { (s, dir) =>
-      val path = tmp(s, "nation_xml")
+      val path = tmp(s, "graft_io/nation_xml")
       run(s, dir, DataFlow("q40w", Seq(
         SourceTable("src", "nation"),
         FileDestination("dst", path, "xml", WriteMode.Overwrite,
@@ -467,7 +457,7 @@ object IoQueries extends QueryPack {
     // the pre-merge dimension row-for-row (snapshot isolation), while
     // the emitted v2 content is what DuckDB's SQL merge predicts.
     "q145_versioned_merge" -> { (s, dir) =>
-      val root = tmp(s, s"vt_merge/${java.util.UUID.randomUUID()}")
+      val root = tmp(s, s"graft_io/vt_merge/${java.util.UUID.randomUUID()}")
       val base = graft.Tables.load(s, dir, "customer")
         .filter(col("c_custkey") < 500)
         .select(col("c_custkey"), col("c_name"),
@@ -501,7 +491,7 @@ object IoQueries extends QueryPack {
     // 100-199 untouched (must stay current and unexpired), and adds
     // 10000-10004 as new keys.
     "q146_versioned_scd2" -> { (s, dir) =>
-      val root = tmp(s, s"vt_scd2/${java.util.UUID.randomUUID()}")
+      val root = tmp(s, s"graft_io/vt_scd2/${java.util.UUID.randomUUID()}")
       val base = graft.Tables.load(s, dir, "customer")
         .filter(col("c_custkey") < 200)
         .select(col("c_custkey"), col("c_mktsegment"),
@@ -535,7 +525,7 @@ object IoQueries extends QueryPack {
     // layout to one file while every prior version still time-travels.
     // The emitted snapshot must equal DuckDB applying each batch ONCE.
     "q149_versioned_stream" -> { (s, dir) =>
-      val root = tmp(s, s"vt_stream/${java.util.UUID.randomUUID()}")
+      val root = tmp(s, s"graft_io/vt_stream/${java.util.UUID.randomUUID()}")
       val base = graft.Tables.load(s, dir, "customer")
         .filter(col("c_custkey") < 300)
         .select(col("c_custkey"), col("c_mktsegment"),
@@ -586,7 +576,7 @@ object IoQueries extends QueryPack {
     // same range must throw (the file diff stops being the row delta)
     // while a range strictly after the rewrite is clean again.
     "q150_versioned_appends" -> { (s, dir) =>
-      val root = tmp(s, s"vt_appends/${java.util.UUID.randomUUID()}")
+      val root = tmp(s, s"graft_io/vt_appends/${java.util.UUID.randomUUID()}")
       import graft.sources.VersionedTable
       val base = graft.Tables.load(s, dir, "customer")
         .filter(col("c_custkey") < 200)
@@ -626,7 +616,7 @@ object IoQueries extends QueryPack {
     // answer itself: skipping must be invisible to results.
     "q153_versioned_skipping" -> { (s, dir) =>
       import graft.sources.VersionedTable
-      val root = tmp(s, s"vt_skip/${java.util.UUID.randomUUID()}")
+      val root = tmp(s, s"graft_io/vt_skip/${java.util.UUID.randomUUID()}")
       val orders = graft.Tables.load(s, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey"),
           CoreQueries.cents(col("o_totalprice")).as("cents"))
@@ -656,7 +646,7 @@ object IoQueries extends QueryPack {
     // replays delete+update as SQL over the source table.
     "q154_versioned_delete_update" -> { (s, dir) =>
       import graft.sources.VersionedTable
-      val root = tmp(s, s"vt_del/${java.util.UUID.randomUUID()}")
+      val root = tmp(s, s"graft_io/vt_del/${java.util.UUID.randomUUID()}")
       val cust = graft.Tables.load(s, dir, "customer")
         .select(col("c_custkey"), col("c_mktsegment"),
           CoreQueries.cents(col("c_acctbal")).as("cents"))
@@ -697,7 +687,7 @@ object IoQueries extends QueryPack {
     // scanning the table and scanning its answer.
     "q156_versioned_cluster" -> { (s, dir) =>
       import graft.sources.VersionedTable
-      val root = tmp(s, s"vt_cluster/${java.util.UUID.randomUUID()}")
+      val root = tmp(s, s"graft_io/vt_cluster/${java.util.UUID.randomUUID()}")
       val orders = graft.Tables.load(s, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey"),
           CoreQueries.cents(col("o_totalprice")).as("cents"))
@@ -726,7 +716,7 @@ object IoQueries extends QueryPack {
     // rows with theirs.
     "q157_versioned_evolve" -> { (s, dir) =>
       import graft.sources.VersionedTable
-      val root = tmp(s, s"vt_evolve/${java.util.UUID.randomUUID()}")
+      val root = tmp(s, s"graft_io/vt_evolve/${java.util.UUID.randomUUID()}")
       val base = graft.Tables.load(s, dir, "customer")
         .filter(col("c_custkey") < 200)
         .select(col("c_custkey"), col("c_mktsegment"))
@@ -758,7 +748,7 @@ object IoQueries extends QueryPack {
     // the same SQL the q145 merge oracle uses.
     "q158_versioned_cdf" -> { (s, dir) =>
       import graft.sources.VersionedTable
-      val root = tmp(s, s"vt_cdf/${java.util.UUID.randomUUID()}")
+      val root = tmp(s, s"graft_io/vt_cdf/${java.util.UUID.randomUUID()}")
       val base = graft.Tables.load(s, dir, "customer")
         .filter(col("c_custkey") < 500)
         .select(col("c_custkey"), col("c_name"),
@@ -803,7 +793,7 @@ object IoQueries extends QueryPack {
     // the ranged read's content.
     "q161_versioned_zorder" -> { (s, dir) =>
       import graft.sources.VersionedTable
-      val root = tmp(s, s"vt_zorder/${java.util.UUID.randomUUID()}")
+      val root = tmp(s, s"graft_io/vt_zorder/${java.util.UUID.randomUUID()}")
       val orders = graft.Tables.load(s, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey"),
           CoreQueries.cents(col("o_totalprice")).as("cents"))
@@ -837,7 +827,7 @@ object IoQueries extends QueryPack {
     // pre-merge dimension).
     "q162_flow_versioned" -> { (s, dir) =>
       import graft.sources.VersionedTable
-      val root = tmp(s, s"vt_flow/${java.util.UUID.randomUUID()}")
+      val root = tmp(s, s"graft_io/vt_flow/${java.util.UUID.randomUUID()}")
       run(s, dir, DataFlow("q162a", Seq(
         SourceTable("src", "customer",
           filter = Some("c_custkey < 500")),
@@ -884,7 +874,7 @@ object IoQueries extends QueryPack {
     // dimension.
     "q163_versioned_delete_insert" -> { (s, dir) =>
       import graft.sources.VersionedTable
-      val root = tmp(s, s"vt_delins/${java.util.UUID.randomUUID()}")
+      val root = tmp(s, s"graft_io/vt_delins/${java.util.UUID.randomUUID()}")
       val base = graft.Tables.load(s, dir, "customer")
         .filter(col("c_custkey") < 500)
         .select(col("c_custkey"), col("c_mktsegment"),
@@ -915,7 +905,7 @@ object IoQueries extends QueryPack {
     // so the gate certifies the replicated CONTENT itself.
     "q164_versioned_replication" -> { (s, dir) =>
       import graft.sources.VersionedTable
-      val work = tmp(s, s"vt_repl/${java.util.UUID.randomUUID()}")
+      val work = tmp(s, s"graft_io/vt_repl/${java.util.UUID.randomUUID()}")
       val (src, dst, ckpt) = (s"$work/src", s"$work/dst", s"$work/ckpt")
       val base = graft.Tables.load(s, dir, "customer")
         .filter(col("c_custkey") < 300)
@@ -965,7 +955,7 @@ object IoQueries extends QueryPack {
     // off the driver.
     "q165_versioned_checkpoint" -> { (s, dir) =>
       import graft.sources.VersionedTable
-      val root = tmp(s, s"vt_cp/${java.util.UUID.randomUUID()}")
+      val root = tmp(s, s"graft_io/vt_cp/${java.util.UUID.randomUUID()}")
       val base = graft.Tables.load(s, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey"),
           CoreQueries.cents(col("o_totalprice")).as("cents"))
@@ -1011,7 +1001,7 @@ object IoQueries extends QueryPack {
     // of rewriting GBs of parquet (measured in SCALING.md).
     "q166_versioned_mor_delete" -> { (s, dir) =>
       import graft.sources.VersionedTable
-      val root = tmp(s, s"vt_mor/${java.util.UUID.randomUUID()}")
+      val root = tmp(s, s"graft_io/vt_mor/${java.util.UUID.randomUUID()}")
       val base = graft.Tables.load(s, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey"),
           CoreQueries.cents(col("o_totalprice")).as("cents"))
@@ -1056,7 +1046,7 @@ object IoQueries extends QueryPack {
     // didn't) is oracle-checked row-for-row.
     "q168_versioned_constraints" -> { (s, dir) =>
       import graft.sources.VersionedTable
-      val root = tmp(s, s"vt_check/${java.util.UUID.randomUUID()}")
+      val root = tmp(s, s"graft_io/vt_check/${java.util.UUID.randomUUID()}")
       val cust = graft.Tables.load(s, dir, "customer")
         .select(col("c_custkey"), col("c_mktsegment"),
           CoreQueries.cents(col("c_acctbal")).as("cents"))
@@ -1097,7 +1087,7 @@ object IoQueries extends QueryPack {
     // same-name column reads NULL instead of resurrecting old bytes.
     "q169_versioned_column_mapping" -> { (s, dir) =>
       import graft.sources.VersionedTable
-      val root = tmp(s, s"vt_colmap/${java.util.UUID.randomUUID()}")
+      val root = tmp(s, s"graft_io/vt_colmap/${java.util.UUID.randomUUID()}")
       val base = graft.Tables.load(s, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey"),
           CoreQueries.cents(col("o_totalprice")).as("cents"))
@@ -1137,7 +1127,7 @@ object IoQueries extends QueryPack {
     // from one copy of the data.
     "q170_versioned_zorder3" -> { (s, dir) =>
       import graft.sources.VersionedTable
-      val root = tmp(s, s"vt_z3/${java.util.UUID.randomUUID()}")
+      val root = tmp(s, s"graft_io/vt_z3/${java.util.UUID.randomUUID()}")
       val base = graft.Tables.load(s, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey"),
           CoreQueries.cents(col("o_totalprice")).as("cents"))
@@ -1180,7 +1170,7 @@ object IoQueries extends QueryPack {
     // including the DV accounting — replays as SQL.
     "q171_versioned_history" -> { (s, dir) =>
       import graft.sources.VersionedTable
-      val root = tmp(s, s"vt_hist/${java.util.UUID.randomUUID()}")
+      val root = tmp(s, s"graft_io/vt_hist/${java.util.UUID.randomUUID()}")
       val base = graft.Tables.load(s, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey"),
           CoreQueries.cents(col("o_totalprice")).as("cents"))
@@ -1208,7 +1198,7 @@ object IoQueries extends QueryPack {
     // this is the dev/test table fork that moves zero bytes.
     "q172_versioned_clone" -> { (s, dir) =>
       import graft.sources.VersionedTable
-      val work = tmp(s, s"vt_clone/${java.util.UUID.randomUUID()}")
+      val work = tmp(s, s"graft_io/vt_clone/${java.util.UUID.randomUUID()}")
       val (src, dst) = (s"$work/src", s"$work/dst")
       val base = graft.Tables.load(s, dir, "customer")
         .filter(col("c_custkey") < 1000)
@@ -1248,7 +1238,7 @@ object IoQueries extends QueryPack {
     "q173_versioned_objectstore" -> { (s, dir) =>
       import graft.sources.{ConditionalPutLogStore, LogStore,
         SimulatedObjectStore, VersionedTable}
-      val root = tmp(s, s"vt_shim/${java.util.UUID.randomUUID()}")
+      val root = tmp(s, s"graft_io/vt_shim/${java.util.UUID.randomUUID()}")
       val store = new SimulatedObjectStore
       LogStore.register(root, new ConditionalPutLogStore(store))
       try {
@@ -1307,8 +1297,8 @@ object IoQueries extends QueryPack {
     // replayed final base state directly.
     "q177_materialized_view" -> { (s, dir) =>
       import graft.sources.{MaterializedView, VersionedTable}
-      val base = tmp(s, s"vt_mv/${java.util.UUID.randomUUID()}/base")
-      val mv = tmp(s, s"vt_mv/${java.util.UUID.randomUUID()}/mv")
+      val base = tmp(s, s"graft_io/vt_mv/${java.util.UUID.randomUUID()}/base")
+      val mv = tmp(s, s"graft_io/vt_mv/${java.util.UUID.randomUUID()}/mv")
       // a deterministic half of lineitem: the certification is
       // structural (delta shapes + prune + recompute equality), not
       // volume-bound, and the fixture is the query's dominant cost

@@ -32,4 +32,14 @@ trait QueryPack {
     * not pay unrelated multi-index builds). A fixture key absent here
     * is built unconditionally (conservative). */
   def fixtureUsers: Map[String, Set[String]] = Map.empty
+
+  /** `name` under the session's per-run temp warehouse (every
+    * entrypoint creates a fresh one), not a fixed java.io.tmpdir path:
+    * concurrent runs on a shared machine get disjoint locations. */
+  protected def tmp(s: SparkSession, name: String): String = {
+    val wh = s.conf.get("spark.sql.warehouse.dir")
+    val whPath =
+      if (wh.startsWith("file:")) new java.net.URI(wh).getPath else wh
+    s"$whPath/$name"
+  }
 }

@@ -127,26 +127,19 @@ object HadoopLogStore extends LogStore {
 }
 
 /** An object store the way S3 actually behaves, emulated over a local
-  * directory so specs and gated queries can run against it:
-  *
-  *  - [[blindPut]] — an overwriting PUT whose partial progress IS
-  *    visible to readers (emulating the wider failure model where a
-  *    reader can observe an incomplete/overwritten object between a
-  *    non-atomic copy+delete "rename" pair; it also stands in for the
-  *    torn-visibility window itself). `failAfter` injects a crash
-  *    mid-write, leaving the tear on disk.
-  *  - [[conditionalPut]] — `If-None-Match: *`: the store's ONE atomic
-  *    primitive. Server-side serialization is emulated by a JVM-wide
-  *    per-path arbiter (standing in for the service's internal
-  *    linearizer — the part of S3 you cannot build client-side);
-  *    reader-side complete-or-absent visibility is emulated with a
-  *    hidden temp + POSIX rename, which this class is allowed to use
-  *    precisely because it plays the SERVER, not the client.
+  * directory so specs and gated queries can run against it. Its ONE
+  * atomic primitive is [[conditionalPut]] — `If-None-Match: *`.
+  * Server-side serialization is emulated by a JVM-wide per-path
+  * arbiter (standing in for the service's internal linearizer — the
+  * part of S3 you cannot build client-side); reader-side
+  * complete-or-absent visibility is emulated with a hidden temp +
+  * POSIX rename, which this class is allowed to use precisely because
+  * it plays the SERVER, not the client.
   *
   * There is no rename and no create-exclusive in the API — that is
   * the point. A client that needs either must build it from
   * conditionalPut ([[ConditionalPutLogStore]]) or accept lost updates
-  * ([[NaiveObjectStoreLogStore]], kept as the failure demonstrator).
+  * and torn manifests (LogStoreSpec's naive client demonstrates both).
   */
 final class SimulatedObjectStore {
 
@@ -159,26 +152,6 @@ final class SimulatedObjectStore {
     * gated query PROVE its commits routed through the shim (q173)
     * instead of silently falling back to the POSIX default. */
   val condPuts = new java.util.concurrent.atomic.AtomicLong(0)
-
-  /** Test hook: runs between the naive TOCTOU check and the write in
-    * [[blindPut]] callers can't inject elsewhere; see LogStoreSpec. */
-  @volatile var interleaveHook: () => Unit = () => ()
-
-  def blindPut(fs: FileSystem, path: Path, bytes: Array[Byte],
-      failAfter: Int = -1): Unit = {
-    val out = fs.create(path, /*overwrite=*/ true)
-    try {
-      if (failAfter >= 0 && failAfter < bytes.length) {
-        out.write(bytes, 0, failAfter)
-        out.flush()
-        // the "process" dies here: the truncated object is what the
-        // store now serves to every reader
-        throw new java.io.IOException(
-          s"injected crash after $failAfter/${bytes.length} bytes")
-      }
-      out.write(bytes); out.flush()
-    } finally out.close()
-  }
 
   def conditionalPut(fs: FileSystem, path: Path, bytes: Array[Byte]): Boolean = {
     condPuts.incrementAndGet()
@@ -212,28 +185,4 @@ final class ConditionalPutLogStore(store: SimulatedObjectStore)
 
   override def publish(fs: FileSystem, dst: Path, bytes: Array[Byte]): Boolean =
     store.conditionalPut(fs, dst, bytes)
-}
-
-/** The WRONG object-store client — the naive translation everyone
-  * writes first: create-exclusive as exists-check-then-put (a TOCTOU
-  * race: two committers both pass the check and both "reserve" the
-  * slot → lost update) and publish as a blind put (readers can observe
-  * a torn manifest; a crash mid-put leaves the tear permanently).
-  * Exists ONLY so LogStoreSpec can demonstrate both failures
-  * deterministically; nothing routes here by default. */
-final class NaiveObjectStoreLogStore(store: SimulatedObjectStore,
-    tearPublishAfter: Int = -1) extends LogStore {
-
-  override def createExclusive(fs: FileSystem, path: Path): Boolean =
-    if (fs.exists(path)) false
-    else {
-      store.interleaveHook() // the TOCTOU window, made schedulable
-      store.blindPut(fs, path, Array.emptyByteArray)
-      true
-    }
-
-  override def publish(fs: FileSystem, dst: Path, bytes: Array[Byte]): Boolean = {
-    store.blindPut(fs, dst, bytes, failAfter = tearPublishAfter)
-    true
-  }
 }

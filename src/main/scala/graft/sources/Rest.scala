@@ -27,10 +27,10 @@ import org.apache.spark.sql.types.{ArrayType, StructType}
   * `requests.get` (enhanced_json_mapper.py:134-152) — same stance
   * here: fetching is a driver-side, page-bounded act; PARSING stays
   * distributed (pages land as files, Spark's JSON reader takes over).
-  * The sandbox default is [[Rest.FileTransport]] (file:// only,
-  * http(s) rejected — zero egress); a production deployment registers
-  * an HTTP client, and RestSpec drives pagination + error handling
-  * through a stub without any network. */
+  * Every [[Rest.readVia]] call names its transport; none is implied.
+  * [[Rest.FileTransport]] serves file:// only (http(s) rejected — zero
+  * egress), [[HttpTransport]] is the HTTP client, and RestSpec drives
+  * pagination + error handling through a stub without any network. */
 trait RestTransport {
 
   /** Fetch one page's payload. Failures should throw — [[Rest.readVia]]
@@ -292,7 +292,7 @@ object Rest {
     flags.headOption.getOrElse(false)
   }
 
-  /** The sandbox-default transport: file:// URLs (and bare paths) read
+  /** The local-file transport: file:// URLs (and bare paths) read
     * locally; http(s) rejected with the zero-egress error. One URL =
     * one payload file (directory payload sets take the [[read]] fast
     * path, which never funnels bytes through the driver). */

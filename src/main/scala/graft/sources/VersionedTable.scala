@@ -813,12 +813,6 @@ object VersionedTable {
       .as(cols :+ "_change_type"))
   }
 
-  /** Loud type guard for every write path that aligns by NAME: a
-    * source column whose type differs from the table schema would
-    * write parquet files the manifest schema cannot read back (the
-    * commit "succeeds", every later scan throws) — or, through a merge
-    * rewrite's when/otherwise coercion, silently widen pre-existing
-    * rows. Same stance as [[appendEvolve]]'s shared-column check. */
   /** `dt` with every nesting level nullable — the canonical form
     * manifests store ([[create]]). Parquet readback is always nullable
     * (element/value presence is per-file, not per-schema), so a
@@ -838,6 +832,12 @@ object VersionedTable {
   private[sources] def nullableSchema(schema: StructType): StructType =
     nullableOf(schema).asInstanceOf[StructType]
 
+  /** Loud type guard for every write path that aligns by NAME: a
+    * source column whose type differs from the table schema would
+    * write parquet files the manifest schema cannot read back (the
+    * commit "succeeds", every later scan throws) — or, through a merge
+    * rewrite's when/otherwise coercion, silently widen pre-existing
+    * rows. Same stance as [[appendEvolve]]'s shared-column check. */
   private def requireConforms(df: DataFrame, schema: StructType,
       context: String): Unit = {
     val types = df.schema.fields.map(f => f.name -> f.dataType).toMap

@@ -57,7 +57,8 @@ object Streams {
         col("n_events"))
 
   /** Streaming exact dedup on `keys`: watermark-pruned state, the
-    * streaming analog of Dedup.exactByContent. */
+    * streaming analog of [[graft.ext.Dedup.exactKeepFirst]] (the first
+    * arrival per key survives). */
   def dedup(events: DataFrame, tsCol: String, watermark: String,
       keys: Seq[String]): DataFrame =
     watermarked(events, tsCol, watermark).dropDuplicates(keys)
@@ -150,29 +151,6 @@ object Streams {
           .filter(col("__cdc_rn") === 1)
           .select(cols.map(col): _*)
         writeTarget(merged)
-        ()
-    }.start()
-
-  /** Streaming decontamination-by-excision: against a STATIC benchmark
-    * a document's excision depends on that document alone, so each
-    * micro-batch runs the batch operator UNCHANGED (foreachBatch) and
-    * arrival splitting cannot change any row's result — StreamingSpec
-    * proves split-invariance. The operator's internal exchanges touch
-    * only the micro-batch's rows; the benchmark shingle set plays the
-    * static build side every batch (cache it for long-running streams).
-    * The direct-on-stream form is unavailable by construction: the
-    * covered-position collect_set is an unwatermarked stream aggregate
-    * feeding a stream-stream self-join, which Structured Streaming
-    * rejects — foreachBatch is the honest shape, exactly like
-    * [[cdcApply]]. */
-  def excisionStream(docs: DataFrame, idCol: String, textCol: String,
-      benchmark: DataFrame, benchTextCol: String, k: Int,
-      sink: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        sink(graft.ext.TextAnalysis.exciseContaminatedSpans(
-          batch, idCol, textCol, benchmark, benchTextCol, k))
         ()
     }.start()
 

@@ -3,25 +3,21 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan-regression guard: every SparkEntry query's physical plan is
-  * checked for anti-pattern operators — CartesianProduct,
-  * BroadcastNestedLoopJoin, Exchange SinglePartition — against the
-  * committed snapshot `plan_audit_baseline.txt`, so a plan regression
-  * fails `sbt test` the same way a data-layout regression does
-  * (TestdataSmokeSpec). The baseline's accepted NESTEDLOOP/SINGLEPART
-  * entries are all broadcast single-row-aggregate crossJoins (benign
-  * by audit); anything NEW — a flag appearing, a query failing to
-  * build, a baselined flag silently vanishing — is a diff and a
-  * failure. On failure the spec writes the observed snapshot to
-  * `target/plan_audit_actual.txt`: verify the new plan is sound (run
-  * `graft.Explain <sfDir> <query>` and read it), then copy the line
-  * into the baseline. */
+  * checked for the anti-pattern operators `Explain.flagsOf` flags —
+  * CartesianProduct, BroadcastNestedLoopJoin, Exchange SinglePartition
+  * — against the committed snapshot `plan_audit_baseline.txt`, so a
+  * plan regression fails `sbt test` the same way a data-layout
+  * regression does (TestdataSmokeSpec). The baseline's accepted
+  * NESTEDLOOP/SINGLEPART entries are all broadcast single-row-aggregate
+  * crossJoins (benign by audit); anything NEW — a flag appearing, a
+  * query failing to build, a baselined flag silently vanishing — is a
+  * diff and a failure. On failure the spec writes the observed
+  * snapshot to `target/plan_audit_actual.txt`: verify the new plan is
+  * sound (run `graft.Explain <sfDir> <query>` and read it), then copy
+  * the line into the baseline. */
 class PlanAuditSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   private val sfDir = "/root/testdata/sf0.001"
-  private val flagPatterns = Seq(
-    "CartesianProduct" -> "CARTESIAN",
-    "BroadcastNestedLoopJoin" -> "NESTEDLOOP",
-    "Exchange SinglePartition" -> "SINGLEPART")
 
   private def parseBaseline(): Map[String, String] = {
     val in = getClass.getResourceAsStream("/plan_audit_baseline.txt")
@@ -56,8 +52,7 @@ class PlanAuditSpec extends AnyFunSuite {
                 ctx.sinkPlans.toSeq.map(_._2)
               } else Seq(SparkEntry.queries(n)(spark, sfDir)
                 .queryExecution.executedPlan.toString)
-            val flags = flagPatterns.collect {
-              case (pat, flag) if plans.exists(_.contains(pat)) => flag }
+            val flags = Explain.flagsOf(plans)
             if (flags.isEmpty) "-" else flags.mkString(",")
           } catch { case _: Exception => "UNAUDITED" }
         n -> status

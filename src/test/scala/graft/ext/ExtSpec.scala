@@ -26,13 +26,6 @@ class ExtSpec extends AnyFunSuite {
     assert(out.toSeq == Seq(1L, 2L))
   }
 
-  test("exactByContent dedups identical content via hash") {
-    val df = docs((10L, "same text"), (11L, "same text"), (12L, "other"))
-    val out = Dedup.exactByContent(df, "text", "id")
-      .select("id").as[Long].collect().sorted
-    assert(out.toSeq == Seq(10L, 12L))
-  }
-
   test("native set expressions equal the array_intersect/array_union formulation") {
     val rnd = new scala.util.Random(31)
     val vocab = (1 to 15).map(i => s"w$i")
@@ -84,22 +77,6 @@ class ExtSpec extends AnyFunSuite {
     assert(capped == Set((1L, 2L)))
   }
 
-  test("minhashDedup keeps the smallest-id survivor per near-dup group") {
-    val df = docs(
-      (1L, "a genuinely unique document about spark executors and shuffles"),
-      (2L, "a genuinely unique document about spark executors and shuffle"),
-      (3L, "completely different content mentioning streams and watermarks"))
-    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
-    val kept = Dedup.minhashDedup(df, "id", "text",
-        k = 3, numHashes = 64, bands = 16, threshold = 0.5)
-      .select("id").as[Long].collect().sorted
-    assert(kept.toSeq == Seq(1L, 3L)) // 2 drops as 1's near-dup
-    // the corpus-sized shingle cache is released; only the
-    // dup-id-bounded set may remain (the output-cache convention)
-    val residual = spark.sparkContext.getPersistentRDDs.keySet -- cachedBefore
-    assert(residual.size <= 1, s"unexpected residual caches: $residual")
-  }
-
   test("resolveClustersBest keeps the highest-score row, id-tie pinned") {
     val df = docs((1L, "a"), (2L, "bb"), (3L, "cc"), (4L, "d"))
       .withColumn("score", length(col("text")))
@@ -138,10 +115,6 @@ class ExtSpec extends AnyFunSuite {
       .select("ida", "idb").as[(Long, Long)].collect().toSet
     assert(pairs.contains((1L, 2L)))
     assert(!pairs.exists(p => p._1 == 3L || p._2 == 3L))
-    val deduped = Dedup.minhashDedup(df, "id", "text",
-      k = 3, numHashes = 64, bands = 16, threshold = 0.5)
-      .select("id").as[Long].collect().sorted
-    assert(deduped.toSeq == Seq(1L, 3L))
   }
 
   test("simhash: identical docs have distance 0, near docs small, far docs large") {
@@ -690,21 +663,6 @@ class ExtSpec extends AnyFunSuite {
     val once = df.select(TextAnalysis.redactPii(col("t")).as("r"))
     val twice = once.select(TextAnalysis.redactPii(col("r")).as("r"))
     assert(once.as[String].collect().toSeq == twice.as[String].collect().toSeq)
-  }
-
-  test("deterministic shuffle: seeded, reproducible, one range exchange") {
-    import spark.implicits._
-    val df = spark.range(0, 100).toDF("id")
-    def order(seed: String) = TextAnalysis.deterministicShuffle(df, "id", seed)
-      .select("id").as[Long].collect().toSeq
-    val a = order("s1")
-    assert(a == order("s1"))           // same seed, same order
-    assert(a != order("s2"))           // different seed reshuffles
-    assert(a.sorted == (0L until 100L))
-    val plan = TextAnalysis.deterministicShuffle(df, "id", "s1")
-      .queryExecution.executedPlan.toString
-    assert("Exchange".r.findAllMatchIn(plan).size == 1 &&
-      plan.contains("rangepartitioning"), plan)
   }
 
   test("repetition scores flag single-token-dominated docs") {

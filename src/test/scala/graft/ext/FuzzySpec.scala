@@ -42,17 +42,6 @@ class FuzzySpec extends AnyFunSuite {
     assert(missed.isEmpty, s"blocking dropped true pairs: $missed")
   }
 
-  test("bestMatchPerKey finds the nearest reference key with smallest-id ties") {
-    val ref = frame((1L, "stormy apple crate"), (2L, "sunny apple crate"),
-      (3L, "completely different thing"))
-      .select(col("id").as("bid"), Fuzzy.normalize(col("key")).as("bkey"))
-    val keys = Seq("sunny apple crat", "no match at all zzz").toDF("akey")
-    val best = Fuzzy.bestMatchPerKey(keys, ref, minSim = 0.8)
-      .select("akey", "bid").as[(String, Long)].collect().toMap
-    assert(best("sunny apple crat") == 2L)
-    assert(!best.contains("no match at all zzz"))
-  }
-
   test("groupLabels produces transitive components with min-id canonical") {
     // chain: a ~ b ~ c (a !~ c directly) must share one component
     val d = frame(

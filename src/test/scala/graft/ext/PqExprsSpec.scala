@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,6 +15,7 @@ import graft.functions.PqExprs
   * elements, null vectors, null elements, short vectors, and both
   * float and double element types. */
 class PqExprsSpec extends AnyFunSuite {
+  import PqExprsSpec.{encodeHof, quantErrHof}
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -67,7 +68,7 @@ class PqExprsSpec extends AnyFunSuite {
     val df = floatCorpus
     val native = Pq.encode(df, "embedding", model)
       .select($"vec_id", $"pq_code")
-    val hof = Pq.encodeHof(df, "embedding", model)
+    val hof = encodeHof(df, "embedding", model)
       .select($"vec_id", $"pq_code".as("hof_code"))
     val mismatches = native.join(hof, "vec_id")
       .filter(!($"pq_code" <=> $"hof_code")).collect()
@@ -80,7 +81,7 @@ class PqExprsSpec extends AnyFunSuite {
       $"embedding".cast("array<double>").as("embedding"))
     val native = Pq.encode(df, "embedding", model)
       .select($"vec_id", $"pq_code")
-    val hof = Pq.encodeHof(df, "embedding", model)
+    val hof = encodeHof(df, "embedding", model)
       .select($"vec_id", $"pq_code".as("hof_code"))
     val mismatches = native.join(hof, "vec_id")
       .filter(!($"pq_code" <=> $"hof_code")).collect()
@@ -109,7 +110,7 @@ class PqExprsSpec extends AnyFunSuite {
     val native = enc.select($"vec_id",
       Pq.quantErr($"embedding", $"pq_code", model).as("qe"))
     val hof = enc.select($"vec_id",
-      Pq.quantErrHof($"embedding", $"pq_code", model).as("qe_hof"))
+      quantErrHof($"embedding", $"pq_code", model).as("qe_hof"))
     val mism = native.join(hof, "vec_id")
       .filter(!($"qe" <=> $"qe_hof")).collect()
     assert(mism.isEmpty,
@@ -119,7 +120,7 @@ class PqExprsSpec extends AnyFunSuite {
     val encN = Pq.encode(nan, "embedding", model)
     val both = encN.select(
       Pq.quantErr($"embedding", $"pq_code", model).as("a"),
-      Pq.quantErrHof($"embedding", $"pq_code", model).as("b")).head()
+      quantErrHof($"embedding", $"pq_code", model).as("b")).head()
     assert(both.getDouble(0).isNaN == both.getDouble(1).isNaN)
   }
 
@@ -136,5 +137,46 @@ class PqExprsSpec extends AnyFunSuite {
       assert(java.lang.Double.compare(sparkSide(i), ours(i)) == 0,
         s"round9 mismatch at ${vals(i)}: spark=${sparkSide(i)} ours=${ours(i)}")
     }
+  }
+}
+
+/** The higher-order-function forms the native kernels replaced, kept
+  * as the references the parity specs above compare against. */
+object PqExprsSpec {
+  import Pq.PqModel
+
+  /** The ORIGINAL higher-order-function encode — the semantic
+    * reference [[graft.functions.PqEncode]] is pinned bit-identical
+    * to. */
+  def encodeHof(df: DataFrame, vecCol: String, model: PqModel,
+      codeCol: String = "pq_code"): DataFrame = {
+    val cb = typedlit(model.codebooks) // m × ks × dsub
+    val codes = (0 until model.m).map { j =>
+      val sl = slice(col(vecCol), j * model.dsub + 1, model.dsub)
+      array_min(transform(element_at(cb, j + 1), (row, c) =>
+        struct(round(aggregate(zip_with(sl, row, (x, y) => {
+          val d = x.cast("double") - y
+          d * d
+        }), lit(0.0), (a, b) => a + b), 9).as("d"),
+          c.cast("int").as("c")))).getField("c")
+    }
+    df.withColumn(codeCol,
+      when(col(vecCol).isNotNull, array(codes: _*)))
+  }
+
+  /** The ORIGINAL HOF quantization error — [[Pq.quantErr]]'s
+    * semantic reference. */
+  def quantErrHof(v: Column, cd: Column,
+      model: PqModel): Column = {
+    val cb = typedlit(model.codebooks) // m × ks × dsub
+    (0 until model.m).map { j =>
+      val sl = slice(v, j * model.dsub + 1, model.dsub)
+      val row = element_at(element_at(cb, j + 1),
+        element_at(cd, j + 1) + 1)
+      aggregate(zip_with(sl, row, (x, y) => {
+        val d = x.cast("double") - y
+        d * d
+      }), lit(0.0), (a, b) => a + b)
+    }.reduce(_ + _)
   }
 }

@@ -1,14 +1,11 @@
 package graft.ext
 
 import graft.TestSpark
-import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Reciprocal-rank fusion semantics pinned by hand: rank assignment,
-  * the missing-document contribution, tie-breaks, and the hybridTopK
-  * convenience equaling the manual composition. */
+  * the missing-document contribution and tie-breaks. */
 class RetrievalSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -313,32 +310,6 @@ class RetrievalSpec extends AnyFunSuite {
         .toSet
       assert(batch == single, s"query $q: batch $batch != single $single")
     }
-  }
-
-  test("hybridTopK equals the manual bm25 + cosine + rrfFuse composition") {
-    val vschema = StructType(Seq(StructField("id", LongType),
-      StructField("text", StringType),
-      StructField("v", ArrayType(FloatType))))
-    val rnd = new scala.util.Random(5)
-    val words = Seq("spark", "hash", "join", "scan", "sort", "merge")
-    val rows = (1L to 40L).map { i =>
-      val text = Seq.fill(12)(words(rnd.nextInt(words.size))).mkString(" ")
-      Row(i, text, Seq.fill(8)(rnd.nextGaussian().toFloat))
-    }
-    val df = spark.createDataFrame(java.util.Arrays.asList(rows: _*), vschema)
-    val qv = Seq.fill(8)(rnd.nextGaussian())
-    val viaApi = Similarity.hybridTopK(df, "id", "text",
-        Seq("spark", "hash"), "v", qv, candidates = 20, topN = 10)
-      .collect().toSeq
-    val lex = TextAnalysis.bm25TopN(df, "id", "text",
-      Seq("spark", "hash"), topN = 20)
-    val vec = df.select(col("id"),
-        round(Similarity.cosine(col("v"),
-          typedLit(qv).cast("array<float>")), 6).as("cos"))
-      .orderBy(col("cos").desc, col("id")).limit(20)
-    val manual = Similarity.rrfFuse(Seq(lex -> "bm25", vec -> "cos"),
-      "id", topN = 10).collect().toSeq
-    assert(viaApi == manual && viaApi.size == 10)
   }
 
   test("hardNegatives: positives removed, skip band counts non-positives, ties by doc id") {

@@ -1,5 +1,6 @@
 package graft.functions
 
+import scala.collection.mutable
 import scala.util.Random
 
 import org.apache.spark.sql.functions._
@@ -99,7 +100,7 @@ class BpeSpec extends AnyFunSuite {
           (w, g.size.toLong * (1 + rnd.nextInt(3))) }.toSeq
       val k = 1 + rnd.nextInt(40)
       val fast = Bpe.trainOnCounts(wc, k)
-      val ref = Bpe.trainOnCountsReference(wc, k)
+      val ref = BpeSpec.trainOnCountsReference(wc, k)
       assert(fast == ref, s"trial $trial k=$k: $fast vs $ref")
     }
   }
@@ -160,5 +161,56 @@ class BpeSpec extends AnyFunSuite {
     assert(plan.linesIterator.exists(l =>
       l.contains("Project") && l.trim.stripPrefix("+- ").startsWith("*(")),
       plan)
+  }
+}
+
+object BpeSpec {
+  /** Reference trainer — the K-pass textbook loop the incremental
+    * [[Bpe.trainOnCounts]] must reproduce bit-for-bit. Kept as the
+    * equivalence oracle; quadratic in (merges × vocab). */
+  def trainOnCountsReference(wordCounts: Seq[(String, Long)],
+      numMerges: Int): IndexedSeq[(String, String)] = {
+    def cps(w: String): Array[String] = {
+      val out = new mutable.ArrayBuffer[String](w.length)
+      var i = 0
+      while (i < w.length) {
+        val cp = w.codePointAt(i); val n = Character.charCount(cp)
+        out += w.substring(i, i + n); i += n
+      }
+      out.toArray
+    }
+    var segs: Array[(Array[String], Long)] =
+      wordCounts.map { case (w, c) => (cps(w), c) }.toArray
+    val out = mutable.ArrayBuffer.empty[(String, String)]
+    var k = 0
+    var exhausted = false
+    while (k < numMerges && !exhausted) {
+      val pairCounts = mutable.HashMap.empty[(String, String), Long]
+      segs.foreach { case (toks, c) =>
+        var i = 0
+        while (i < toks.length - 1) {
+          val p = (toks(i), toks(i + 1))
+          pairCounts.update(p, pairCounts.getOrElse(p, 0L) + c)
+          i += 1
+        }
+      }
+      if (pairCounts.isEmpty) exhausted = true
+      else {
+        val best = pairCounts.toSeq.minBy { case ((l, r), c) => (-c, l, r) }._1
+        out += best
+        segs = segs.map { case (toks, c) =>
+          val merged = new mutable.ArrayBuffer[String](toks.length)
+          var j = 0
+          while (j < toks.length) {
+            if (j < toks.length - 1 && toks(j) == best._1 &&
+                toks(j + 1) == best._2) { merged += (best._1 + best._2); j += 2 }
+            else { merged += toks(j); j += 1 }
+          }
+          (merged.toArray, c)
+        }
+        k += 1
+      }
+    }
+    out.toIndexedSeq
   }
 }

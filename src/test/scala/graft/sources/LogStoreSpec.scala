@@ -3,7 +3,7 @@ package graft.sources
 import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 
 import graft.TestSpark
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -36,14 +36,13 @@ class LogStoreSpec extends AnyFunSuite {
   test("naive exists-then-put reservation admits two winners (lost update)") {
     val dir = freshDir()
     val fs = fsOf(dir)
-    val store = new SimulatedObjectStore
-    val naive = new NaiveObjectStoreLogStore(store)
+    val naive = new NaiveObjectStoreLogStore()
     val lock = new Path(dir, "v1.lock")
     // deterministic TOCTOU: both threads pass the exists() check
     // before either writes — the interleave hook parks the first
     // thread inside the window until the second arrives
     val inWindow = new CountDownLatch(2)
-    store.interleaveHook = () => {
+    naive.interleaveHook = () => {
       inWindow.countDown()
       inWindow.await(5, TimeUnit.SECONDS)
       ()
@@ -59,15 +58,14 @@ class LogStoreSpec extends AnyFunSuite {
       assert(wins == Seq(true, true),
         "both committers believe they reserved the slot — the lost " +
           "update a real object store produces without conditional puts")
-    } finally store.interleaveHook = () => ()
+    } finally naive.interleaveHook = () => ()
   }
 
   test("naive blind-put publish leaves a reader-visible torn manifest") {
     val dir = freshDir()
     val fs = fsOf(dir)
-    val store = new SimulatedObjectStore
     val bytes = ("graft-versioned-table v1\n" + "x" * 4096).getBytes("UTF-8")
-    val naive = new NaiveObjectStoreLogStore(store, tearPublishAfter = 10)
+    val naive = new NaiveObjectStoreLogStore(tearPublishAfter = 10)
     val dst = new Path(dir, "v1.manifest")
     intercept[java.io.IOException] { naive.publish(fs, dst, bytes) }
     // the crash left a PARTIAL object that readers now see as the
@@ -196,5 +194,54 @@ class LogStoreSpec extends AnyFunSuite {
       assert(LogStore.forPath("/bucket/inner2/t") eq a)
       assert(LogStore.forPath("/bucketful/t") eq HadoopLogStore)
     } finally { LogStore.unregister("/bucket"); LogStore.unregister("/bucket/inner") }
+  }
+}
+
+/** The WRONG object-store client — the naive translation everyone
+  * writes first: create-exclusive as exists-check-then-put (a TOCTOU
+  * race: two committers both pass the check and both "reserve" the
+  * slot → lost update) and publish as a blind put (readers can observe
+  * a torn manifest; a crash mid-put leaves the tear permanently).
+  * Exists ONLY so LogStoreSpec can demonstrate both failures
+  * deterministically; nothing routes here. */
+final class NaiveObjectStoreLogStore(tearPublishAfter: Int = -1)
+    extends LogStore {
+
+  /** Runs between the TOCTOU check and the write, so a spec can park
+    * a committer inside the window. */
+  @volatile var interleaveHook: () => Unit = () => ()
+
+  /** An object store's overwriting PUT, whose partial progress IS
+    * visible to readers (the failure model where a reader observes an
+    * incomplete object between a non-atomic copy+delete "rename"
+    * pair). `failAfter` injects a crash mid-write, leaving the tear on
+    * disk. */
+  private def blindPut(fs: FileSystem, path: Path, bytes: Array[Byte],
+      failAfter: Int = -1): Unit = {
+    val out = fs.create(path, /*overwrite=*/ true)
+    try {
+      if (failAfter >= 0 && failAfter < bytes.length) {
+        out.write(bytes, 0, failAfter)
+        out.flush()
+        // the "process" dies here: the truncated object is what the
+        // store now serves to every reader
+        throw new java.io.IOException(
+          s"injected crash after $failAfter/${bytes.length} bytes")
+      }
+      out.write(bytes); out.flush()
+    } finally out.close()
+  }
+
+  override def createExclusive(fs: FileSystem, path: Path): Boolean =
+    if (fs.exists(path)) false
+    else {
+      interleaveHook() // the TOCTOU window, made schedulable
+      blindPut(fs, path, Array.emptyByteArray)
+      true
+    }
+
+  override def publish(fs: FileSystem, dst: Path, bytes: Array[Byte]): Boolean = {
+    blindPut(fs, dst, bytes, failAfter = tearPublishAfter)
+    true
   }
 }

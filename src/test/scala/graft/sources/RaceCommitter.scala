@@ -1,7 +1,5 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
-
 /** Child-process main for [[RaceProcessSpec]]: one INDEPENDENT JVM
   * (own SparkSession, own Hadoop FileSystem instance, no shared
   * client-side state with its siblings) committing `commits` appends
@@ -15,12 +13,8 @@ object RaceCommitter {
     val Array(root, writerIdStr, commitsStr) = args
     val writerId = writerIdStr.toInt
     val commits = commitsStr.toInt
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName(s"graft-race-$writerId")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.LocalSpark.builder(2)
+      .appName(s"graft-race-$writerId").getOrCreate()
     try {
       import spark.implicits._
       val rnd = new scala.util.Random(writerId)

@@ -294,43 +294,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(streamed.map(_._1) == Set(1L, 2L, 3L))
   }
 
-  test("excisionStream: per-micro-batch excision equals batch over all rows (split-invariant)") {
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType)))
-    def frameD(rows: Seq[Row]): DataFrame =
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), docSchema)
-    val bench = frameD(Seq(Row(100L, "secret eval answer key")))
-    val db1 = Seq(
-      Row(1L, "intro text then secret eval answer key appears here"),
-      Row(2L, "totally clean document with no quoted material at all"))
-    val db2 = Seq(
-      Row(3L, "secret eval answer key"), // fully covered → empty clean_text
-      Row(4L, "tail quote secret eval answer key"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_exc")
-    dir.toFile.deleteOnExit()
-    val src = dir.toString + "/in"
-    frameD(db1).write.mode(SaveMode.Append).parquet(src)
-    val got = scala.collection.mutable.Set.empty[(Long, Long, Long, String)]
-    val q = Streams.excisionStream(
-      spark.readStream.schema(docSchema).parquet(src),
-      "doc_id", "text", bench, "text", k = 4,
-      sink = out => got ++= out
-        .select("doc_id", "n_tokens", "n_removed", "clean_text")
-        .as[(Long, Long, Long, String)].collect())
-    try {
-      q.processAllAvailable()
-      frameD(db2).write.mode(SaveMode.Append).parquet(src)
-      q.processAllAvailable()
-    } finally q.stop()
-    val batch = graft.ext.TextAnalysis.exciseContaminatedSpans(
-        frameD(db1 ++ db2), "doc_id", "text", bench, "text", k = 4)
-      .select("doc_id", "n_tokens", "n_removed", "clean_text")
-      .as[(Long, Long, Long, String)].collect().toSet
-    assert(got.toSet == batch)
-    assert(batch.map(r => r._1 -> r._3).toMap ==
-      Map(1L -> 4L, 2L -> 0L, 3L -> 4L, 4L -> 4L))
-  }
-
   test("dedupArrivalsApprox: per-micro-batch screen equals batch over all arrivals (split-invariant)") {
     val vecSchema = StructType(Seq(
       StructField("vec_id", LongType),

@@ -21,7 +21,7 @@ object BpeTrainBench {
       val fast = graft.functions.Bpe.trainOnCounts(wc, k)
       val tFast = (System.nanoTime() - t0) / 1e9
       val t1 = System.nanoTime()
-      val ref = graft.functions.Bpe.trainOnCountsReference(wc, k)
+      val ref = graft.functions.BpeSpec.trainOnCountsReference(wc, k)
       val tRef = (System.nanoTime() - t1) / 1e9
       require(fast == ref, s"divergence at k=$k")
       println(f"k=$k incremental=$tFast%.2fs reference=$tRef%.2fs " +

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.sources.VersionedTable
@@ -28,14 +28,9 @@ object MorBench {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/repo/tmp/sf1")
     val work = java.nio.file.Files.createTempDirectory("graft_mor").toString
-    val spark = SparkSession.builder()
-      .master("local[32]")
+    val spark = graft.LocalSpark.builder(32)
       .appName("graft-mor-bench")
       .config("spark.sql.warehouse.dir", s"$work/wh")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ops.Scale
@@ -29,12 +29,8 @@ object SkewBench {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/repo/tmp/skew")
     val saltFactor = args.lift(1).map(_.toInt).getOrElse(32)
-    val spark = SparkSession.builder()
-      .master("local[32]")
+    val spark = graft.LocalSpark.builder(32)
       .appName("graft-skew-bench")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .config("spark.driver.memory", "8g")
       // dim is ~100 MB in memory: force the shuffle join the
       // measurement is about (broadcast would dodge the skew entirely,
