@@ -50,20 +50,10 @@ object ControlFlowExec {
       require(byName.contains(e.to), s"edge to unknown task ${e.to}")
     }
 
-    // Kahn order over precedence edges
-    val indeg = mutable.Map(spec.tasks.map(t => t.name -> 0): _*)
-    spec.edges.foreach(e => indeg(e.to) += 1)
-    val queue = mutable.Queue(spec.tasks.map(_.name).filter(indeg(_) == 0): _*)
-    val order = mutable.Buffer.empty[String]
-    while (queue.nonEmpty) {
-      val n = queue.dequeue()
-      order += n
-      spec.edges.filter(_.from == n).foreach { e =>
-        indeg(e.to) -= 1
-        if (indeg(e.to) == 0) queue += e.to
-      }
-    }
-    require(order.size == spec.tasks.size, s"cycle in control flow ${spec.name}")
+    // Kahn order over precedence edges, roots seeded in declaration order
+    val (order, cyclic) = DataFlowExec.kahnOrder(spec.tasks.map(_.name),
+      spec.edges.map(e => e.from -> e.to))
+    require(cyclic.isEmpty, s"cycle in control flow ${spec.name}")
 
     def edgeSatisfied(e: PrecedenceEdge): Boolean = {
       def statusOk(c: EdgeCondition): Boolean = c match {

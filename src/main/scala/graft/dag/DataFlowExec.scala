@@ -31,6 +31,13 @@ final class PipelineContext(
     * ControlFlowExec once the flow's sinks have run (leak fix — a long
     * multi-flow pipeline must not accumulate cached parents). */
   val persisted: mutable.Buffer[DataFrame] = mutable.Buffer.empty
+  /** Persist `df` at MEMORY_AND_DISK and register it for
+    * [[unpersistAll]] — the ONE way a flow component caches a frame. */
+  def persist(df: DataFrame): DataFrame = {
+    val p = df.persist(StorageLevel.MEMORY_AND_DISK)
+    persisted += p
+    p
+  }
   /** Physical plan of every sink's input frame, captured as the sink
     * executes — the audit surface for multi-sink pipelines whose query
     * entry returns only a post-hoc read (PlanAuditSpec's golden row:
@@ -168,6 +175,28 @@ object PipelineContext {
   */
 object DataFlowExec {
 
+  /** Kahn topological order shared by both DAG executors: every node,
+    * listed in `seed` order, whose in-degree is zero seeds the queue,
+    * and each placed node releases its successors in `edges` order.
+    * Returns the order and the nodes left with in-degree > 0 —
+    * non-empty exactly when `edges` hold a cycle. */
+  private[dag] def kahnOrder(seed: Seq[String],
+      edges: Seq[(String, String)]): (Seq[String], Iterable[String]) = {
+    val indeg = mutable.Map(seed.map(_ -> 0): _*)
+    edges.foreach { case (_, to) => indeg(to) += 1 }
+    val queue = mutable.Queue(seed.filter(indeg(_) == 0): _*)
+    val order = mutable.Buffer.empty[String]
+    while (queue.nonEmpty) {
+      val n = queue.dequeue()
+      order += n
+      edges.filter(_._1 == n).foreach { case (_, to) =>
+        indeg(to) -= 1
+        if (indeg(to) == 0) queue += to
+      }
+    }
+    (order.toSeq, indeg.filter(_._2 > 0).keys)
+  }
+
   /** Run the flow; returns every dangling (unconsumed) output port as
     * `"component.port" → DataFrame`, after sinks have executed. */
   def run(flow: DataFlow, ctx: PipelineContext): Map[String, DataFrame] = {
@@ -178,21 +207,12 @@ object DataFlowExec {
       require(byName.contains(p.to), s"path to unknown component ${p.to}")
     }
 
-    // Kahn topological order (as enhanced_json_mapper.py:904-932, strict)
-    val indeg = mutable.Map(flow.components.map(c => c.name -> 0): _*)
-    flow.paths.foreach(p => indeg(p.to) += 1)
-    val queue = mutable.Queue(flow.components.map(_.name).filter(indeg(_) == 0).sorted: _*)
-    val order = mutable.Buffer.empty[String]
-    while (queue.nonEmpty) {
-      val n = queue.dequeue()
-      order += n
-      flow.paths.filter(_.from == n).foreach { p =>
-        indeg(p.to) -= 1
-        if (indeg(p.to) == 0) queue += p.to
-      }
-    }
-    require(order.size == flow.components.size,
-      s"cycle in data flow ${flow.name}: ${indeg.filter(_._2 > 0).keys.mkString(",")}")
+    // Kahn topological order (as enhanced_json_mapper.py:904-932,
+    // strict), roots seeded in name order
+    val (order, cyclic) = kahnOrder(flow.components.map(_.name).sorted,
+      flow.paths.map(p => p.from -> p.to))
+    require(cyclic.isEmpty,
+      s"cycle in data flow ${flow.name}: ${cyclic.mkString(",")}")
 
     // consumers per (component, port) — fan-out > 1 gets persisted
     val consumers = flow.paths.groupBy(p => (p.from, p.fromPort)).view.mapValues(_.size).toMap
@@ -208,13 +228,9 @@ object DataFlowExec {
         .toMap
       val outs = execute(comp, inputs, ctx)
       outs.foreach { case (port, df) =>
-        val persisted =
-          if (consumers.getOrElse((name, port), 0) > 1) {
-            val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-            ctx.persisted += p
-            p
-          } else df
-        outputs((name, port)) = persisted
+        outputs((name, port)) =
+          if (consumers.getOrElse((name, port), 0) > 1) ctx.persist(df)
+          else df
       }
     }
 
@@ -370,9 +386,7 @@ object DataFlowExec {
               .withColumn(c, col(s"${caps(c)}.value"))
           }
           val err = coalesce(exprs.map { case (c, _) => col(s"${caps(c)}.error") }: _*)
-          val labeled = df.withColumn(s"__graft_err_$name", err)
-            .persist(StorageLevel.MEMORY_AND_DISK)
-          ctx.persisted += labeled
+          val labeled = ctx.persist(df.withColumn(s"__graft_err_$name", err))
           val clean = labeled.filter(col(s"__graft_err_$name").isNull)
             .drop(caps.values.toSeq ++ stash.values.toSeq :+ s"__graft_err_$name": _*)
           val errRows = labeled.filter(col(s"__graft_err_$name").isNotNull)
@@ -427,8 +441,7 @@ object DataFlowExec {
       val cidx = raw.columns.indexOf(contentColumn)
       require(idx >= 0 && cidx >= 0,
         s"${comp.name}: missing $pathColumn/$contentColumn")
-      val df = raw.persist(StorageLevel.MEMORY_AND_DISK)
-      ctx.persisted += df
+      val df = ctx.persist(raw)
       df.select(col(pathColumn), col(contentColumn)).foreachPartition {
         (rows: Iterator[org.apache.spark.sql.Row]) =>
           rows.foreach { r =>
@@ -453,8 +466,7 @@ object DataFlowExec {
       // this component with an explicit Path into its "cache" port
       // (data-less ordering edge; Lookup ignores that port's frames)
       val df = single(inputs, comp)
-      val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-      ctx.persisted += p
+      val p = ctx.persist(df)
       p.createOrReplaceTempView(cacheName)
       Map("out" -> p)
 
@@ -518,8 +530,7 @@ object DataFlowExec {
       val streamCols = stream.columns.map(n => sc0(n).as(n))
       noMatch match {
         case NoMatchBehavior.Redirect =>
-          val labeled = joined.persist(StorageLevel.MEMORY_AND_DISK)
-          ctx.persisted += labeled
+          val labeled = ctx.persist(joined)
           Map(
             "out" -> labeled.filter(rc0(matchFlag) === lit(true))
               .select(streamCols ++ copied: _*),
@@ -623,21 +634,20 @@ object DataFlowExec {
       val df = single(inputs, comp)
       // first-match-wins: label each row once via a when-cascade, then
       // filter per port — conditions are evaluated once per row, and the
-      // labeled parent is persisted by the fan-out rule above.
+      // labeled parent is persisted here, once, for every port.
       val branch = "__graft_branch"
-      val labeled = df.withColumn(branch,
+      val labeled = ctx.persist(df.withColumn(branch,
         cases.foldRight(lit(defaultOut)) { case ((port, cond), els) =>
           // fold right so earlier cases take precedence in the cascade
           when(Compiler.compile(cond, df.schema, ctx.vars), lit(port)).otherwise(els)
-        }).persist(StorageLevel.MEMORY_AND_DISK)
-      ctx.persisted += labeled
+        }))
       val ports = cases.map(_._1) :+ defaultOut
       ports.map(p => p -> labeled.filter(col(branch) === lit(p)).drop(branch)).toMap
 
     case Multicast(_, outs) =>
       val df = single(inputs, comp)
-      val persisted = if (outs.size > 1) df.persist(StorageLevel.MEMORY_AND_DISK) else df
-      outs.map(o => o -> persisted).toMap
+      val parent = if (outs.size > 1) ctx.persist(df) else df
+      outs.map(o => o -> parent).toMap
 
     case UnionAll(_) =>
       val ins = inputs.getOrElse("in", Nil)
@@ -649,12 +659,7 @@ object DataFlowExec {
 
     case MultiAggregate(_, outs) =>
       val df = single(inputs, comp)
-      val parent =
-        if (outs.size > 1) {
-          val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-          ctx.persisted += p
-          p
-        } else df
+      val parent = if (outs.size > 1) ctx.persist(df) else df
       outs.map { case (port, groupBy, aggs) =>
         port -> buildAggregate(parent, groupBy, aggs)
       }.toMap
@@ -673,9 +678,8 @@ object DataFlowExec {
       // one seeded draw per row, persisted so the two ports partition
       // the input consistently even across separate downstream actions
       val df = single(inputs, comp)
-      val drawn = df.withColumn("__graft_rs", rand(seed) < lit(percent / 100.0))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      ctx.persisted += drawn
+      val drawn = ctx.persist(
+        df.withColumn("__graft_rs", rand(seed) < lit(percent / 100.0)))
       Map(
         "out" -> drawn.filter(col("__graft_rs")).drop("__graft_rs"),
         "unselected" -> drawn.filter(!col("__graft_rs")).drop("__graft_rs"))
@@ -715,9 +719,7 @@ object DataFlowExec {
       // "unselected" = exceptAll(sampled) is built lazily and costs
       // nothing unless the port is consumed.
       val df = single(inputs, comp)
-      val sampled = df.orderBy(rand(seed)).limit(rows)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      ctx.persisted += sampled
+      val sampled = ctx.persist(df.orderBy(rand(seed)).limit(rows))
       Map("out" -> sampled, "unselected" -> df.exceptAll(sampled))
 
     case ScdRouter(_, refTable, keys, changing, historical, fixed) =>
@@ -725,11 +727,9 @@ object DataFlowExec {
       // ConditionalSplit: conditions evaluate once per row)
       val feed = single(inputs, comp)
       val routeCol = "__graft_scd_route"
-      val labeled = graft.ops.Mutations.scdRoute(feed,
-          ctx.resolveTable(refTable), keys, changing, historical, fixed,
-          routeCol)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      ctx.persisted += labeled
+      val labeled = ctx.persist(graft.ops.Mutations.scdRoute(feed,
+        ctx.resolveTable(refTable), keys, changing, historical, fixed,
+        routeCol))
       Seq("new", "fixedattr", "historical", "changed", "unchanged")
         .map(p => p -> labeled.filter(col(routeCol) === p).drop(routeCol))
         .toMap

@@ -31,6 +31,20 @@ object Dedup {
     p
   }
 
+  /** Close a staged pair generator's lifecycle: materialize the
+    * (near-dup-density-sized) pair frame while the corpus-sized caches
+    * behind it are still warm, then release them — the caller's
+    * actions replay only the cached pair partitions, and the caller
+    * unpersists the returned frame when done. */
+  private[ext] def materializePairs(staged: (DataFrame, () => Unit))
+      : DataFrame = {
+    val (pairs, release) = staged
+    val out = pairs.persist()
+    out.count()
+    release()
+    out
+  }
+
   // ---------- exact ----------
 
   /** Exact dedup: keep one row per key set, the one with the smallest
@@ -106,31 +120,20 @@ object Dedup {
     * Cache contract: the result comes back materialized and PERSISTED
     * (pair-density-sized; the corpus-sized intermediate is already
     * released) — the caller must `unpersist()` it when done, or each
-    * invocation holds executor storage until the session ends. Use
-    * [[minhashNearDupPairsStaged]] to own the whole lifecycle. */
+    * invocation holds executor storage until the session ends. */
   def minhashNearDupPairs(df: DataFrame, idCol: String, textCol: String,
       k: Int = 3, numHashes: Int = 64, bands: Int = 16,
-      threshold: Double = 0.5, maxBucket: Int = 10000): DataFrame = {
-    val (pairs, release) = minhashNearDupPairsStaged(df, idCol, textCol,
-      k, numHashes, bands, threshold, maxBucket)
-    // the cosineNearDupPairs lifecycle: materialize the pair-density-
-    // sized output while the corpus-sized shingle cache is warm, then
-    // release it — only the result stays cached, for the caller to drop
-    val out = pairs.persist()
-    out.count()
-    release()
-    out
-  }
+      threshold: Double = 0.5, maxBucket: Int = 10000): DataFrame =
+    materializePairs(minhashNearDupPairsStaged(df, idCol, textCol,
+      k, numHashes, bands, threshold, maxBucket))
 
-  /** [[minhashNearDupPairs]] with the shingle-set cache's lifecycle in
-    * the caller's hands: returns the LAZY pair frame + a release hook
-    * for the corpus-sized cached projection (must stay cached until
-    * the last action over the pairs — the banded explode and both
-    * verify sides read it). */
-  def minhashNearDupPairsStaged(df: DataFrame, idCol: String, textCol: String,
-      k: Int = 3, numHashes: Int = 64, bands: Int = 16,
-      threshold: Double = 0.5, maxBucket: Int = 10000)
-      : (DataFrame, () => Unit) = {
+  /** The lazy half of [[minhashNearDupPairs]]: the pair frame + a
+    * release hook for the corpus-sized cached shingle projection (must
+    * stay cached until the last action over the pairs — the banded
+    * explode and both verify sides read it). */
+  private def minhashNearDupPairsStaged(df: DataFrame, idCol: String,
+      textCol: String, k: Int, numHashes: Int, bands: Int,
+      threshold: Double, maxBucket: Int): (DataFrame, () => Unit) = {
     val withSets = df.select(col(idCol).as("id"),
         shingles(col(textCol), k).as("sh"))
       .filter(size(col("sh")) > 0)
@@ -193,28 +196,19 @@ object Dedup {
     *
     * Cache contract: the result comes back materialized and PERSISTED
     * (pair-density-sized; corpus-sized intermediates released) — the
-    * caller must `unpersist()` it when done. Use
-    * [[jaccardNearDupPairsStaged]] to own the whole lifecycle. */
+    * caller must `unpersist()` it when done. */
   def jaccardNearDupPairs(d: DataFrame, idCol: String, wsCol: String,
       threshold: Double, blockCol: Option[String] = None,
-      dfOrderedPrefix: Boolean = true): DataFrame = {
-    val (pairs, release) = jaccardNearDupPairsStaged(d, idCol, wsCol,
-      threshold, blockCol, dfOrderedPrefix)
-    // materialize the pair-density-sized output, then drop the
-    // corpus-sized set/prefix caches (the cosineNearDupPairs lifecycle)
-    val out = pairs.persist()
-    out.count()
-    release()
-    out
-  }
+      dfOrderedPrefix: Boolean = true): DataFrame =
+    materializePairs(jaccardNearDupPairsStaged(d, idCol, wsCol,
+      threshold, blockCol, dfOrderedPrefix))
 
-  /** [[jaccardNearDupPairs]] with its caches' lifecycle in the
-    * caller's hands: the LAZY pair frame + one release hook covering
-    * both the cached set projection and (under the df-ordered prefix)
-    * the cached prefix-token table. */
-  def jaccardNearDupPairsStaged(d: DataFrame, idCol: String, wsCol: String,
-      threshold: Double, blockCol: Option[String] = None,
-      dfOrderedPrefix: Boolean = true): (DataFrame, () => Unit) = {
+  /** The lazy half of [[jaccardNearDupPairs]]: the pair frame + one
+    * release hook covering both the cached set projection and (under
+    * the df-ordered prefix) the cached prefix-token table. */
+  private def jaccardNearDupPairsStaged(d: DataFrame, idCol: String,
+      wsCol: String, threshold: Double, blockCol: Option[String],
+      dfOrderedPrefix: Boolean): (DataFrame, () => Unit) = {
     val t = threshold
     val blockCols = blockCol.toSeq.map(col)
     val blockNames = blockCol.toSeq

@@ -6,9 +6,11 @@ import org.apache.spark.sql.functions._
 
 import graft.sources.VersionedTable
 
-/** Incrementally-maintained IVF index — the production half of the
-  * persisted-index story ([[Similarity.writeIvfIndex]] is build-once;
-  * a 100 TB corpus ingesting daily cannot rebuild per batch).
+/** Incrementally-maintained IVF index — graft's one persisted IVF
+  * layout (a 100 TB corpus ingesting daily cannot rebuild per batch).
+  * Every assignment — build, refresh, probe — is
+  * [[Similarity.nearestCentroids]], the kernel the in-memory
+  * [[Similarity.ivfTopK]] runs.
   *
   * The posting lists live in a [[VersionedTable]] CLUSTERED by
   * `centroid_id` (range-partitioned, sorted write → tight per-file
@@ -98,27 +100,6 @@ object IvfIndex {
   private val PqOpqItersKey = "ivf.pq_opq_iters"
 
   private def listsRoot(path: String) = s"$path/lists"
-
-  /** Nearest centroid + its cosine, one map-only pass. Tie-break is
-    * lowest centroid_id (struct min on (-cosine, id)) — identical to
-    * [[Similarity.nearestCentroids]] with topN = 1. */
-  private def assignWithSim(df: DataFrame, vCol: String,
-      centroids: Seq[Seq[Double]]): DataFrame = {
-    val best =
-      if (centroids.size <= 64)
-        array_min(array(centroids.zipWithIndex.map { case (cv, i) =>
-          struct((-Similarity.cosine(col(vCol), array(cv.map(lit): _*)))
-            .as("neg"), lit(i).as("centroid_id"))
-        }: _*))
-      else
-        array_min(transform(typedlit(centroids), (cv, i) =>
-          struct((-Similarity.cosine(col(vCol), cv)).as("neg"),
-            i.cast("int").as("centroid_id"))))
-    df.withColumn("_best", best)
-      .withColumn("centroid_id", col("_best.centroid_id"))
-      .withColumn("assign_sim", -col("_best.neg"))
-      .drop("_best")
-  }
 
   private def readCentroids(spark: SparkSession, path: String,
       meta: Map[String, String]): Seq[Seq[Double]] =
@@ -234,7 +215,8 @@ object IvfIndex {
     centroids.zipWithIndex.map { case (c, i) => (i, c) }
       .toDF("centroid_id", "weights")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/$cdir")
-    val assigned = assignWithSim(corpus, "nv", centroids)
+    val assigned =
+      Similarity.nearestCentroids(corpus, "nv", centroids, topN = 1)
     def baseMetaOf(simSum: Double, n: Long) = Map(
       CorpusKey -> corpusRoot,
       WatermarkKey -> cv.toString,
@@ -421,8 +403,9 @@ object IvfIndex {
     // delete keys: EVERY preimage's (old centroid, id) — an update or
     // a delete-and-reinsert must clear the pair its OLD vector lived
     // under, even when the id nets out to an insert at a new centroid
-    val dels = assignWithSim(ch.filter(col("_change_type") === "delete"),
-      "nv", centroids)
+    val dels = Similarity.nearestCentroids(
+        ch.filter(col("_change_type") === "delete"), "nv", centroids,
+        topN = 1)
       .select("centroid_id", "neighbor_id").dropDuplicates()
     // inserts: the per-id NET-LAST change across the range. A row
     // inserted and later deleted inside (wm, cv] must NOT land
@@ -432,11 +415,11 @@ object IvfIndex {
     val netW = Window.partitionBy("neighbor_id")
       .orderBy(col("_commit_version").desc,
         when(col("_change_type") === "insert", 1).otherwise(0).desc)
-    val ins = assignWithSim(
+    val ins = Similarity.nearestCentroids(
       ch.withColumn("_rn", row_number().over(netW))
         .filter(col("_rn") === 1 && col("_change_type") === "insert")
         .drop("_rn"),
-      "nv", centroids)
+      "nv", centroids, topN = 1)
     // IVF-PQ: the delta encodes against the FROZEN generation's
     // codebooks (same pinning as the quantizer — a crossed rebuild
     // throws StaleRefresh below before stale codes could land), and
@@ -684,8 +667,7 @@ object IvfIndex {
     probes.unpersist()
     // the returned frame stays persisted (k·|queries| rows — bounded
     // by construction); a long-lived caller issuing many probes should
-    // unpersist each result when done, exactly like
-    // [[Similarity.probeIvfIndex]]'s documented contract
+    // unpersist each result when done
     ranked
   }
 
@@ -901,27 +883,8 @@ object IvfIndex {
       s"ladder must be ascending distinct in (0, $nlist]: $rungs")
     def run(np: Int, p: Int): DataFrame =
       probe(queries, path, idCol, vecCol, k, np, version, p)
-    // every rung probes the same read-only index and [[probe]] is
-    // eager — the rungs and the covering reference are INDEPENDENT
-    // driver actions, so overlap them (guide §2.6; rung results are
-    // consumed in ladder order below, never completion order)
-    val probedAll = Par.run(
-      (() => run(nlist, Int.MaxValue)) +:
-        rungs.map(p => () => run(p, pool)))
-    // release ALL pinned probes on any failure path (r19 ADVICE: a
-    // thrown sibling previously leaked the others' cached blocks)
-    val (total, hitCounts) =
-      try {
-        val exact = probedAll.head
-          .select(col("query_id"), col("neighbor_id"))
-          .localCheckpoint(true)
-        val t = exact.count()
-        require(t > 0, "nprobe tuning needs a non-empty reference")
-        (t, Par.run(probedAll.tail.map(probed => () =>
-          probed.select(col("query_id"), col("neighbor_id"))
-            .join(exact, Seq("query_id", "neighbor_id"), "left_semi")
-            .count())))
-      } finally probedAll.foreach(_.unpersist())
+    val (total, hitCounts) = recallHits(() => run(nlist, Int.MaxValue),
+      rungs.map(p => () => run(p, pool)), "nprobe tuning")
     val rows = rungs.zip(hitCounts).map { case (p, hits) =>
       (p, hits, hits.toDouble / total)
     }
@@ -984,34 +947,13 @@ object IvfIndex {
     require(probeWeight >= 0 && poolWeight >= 0 &&
       probeWeight + poolWeight > 0,
       s"need a non-degenerate cost model: $probeWeight/$poolWeight")
-    // the covering reference and every grid cell probe the same
-    // read-only index and [[probe]] is eager: |grid|+1 INDEPENDENT
-    // driver actions, overlapped (guide §2.6). Cell results are
-    // consumed in grid order below — completion order never leaks
-    // into the pick, the monotonicity check, or the returned frame.
     val gridKeys = for (np <- nprobes; p <- pools) yield (np, p)
-    // every probed frame comes back pinned; release ALL survivors on
-    // any failure path (r19 ADVICE: a thrown sibling probe previously
-    // leaked the others' localCheckpoint blocks for the session)
-    val probedAll = Par.run(
-      (() => probe(queries, path, idCol, vecCol, k, nlist, version,
-        pool = Int.MaxValue)) +:
-        gridKeys.map { case (np, p) =>
-          () => probe(queries, path, idCol, vecCol, k, np, version, p)
-        })
-    val (total, hitCounts) =
-      try {
-        val exact = probedAll.head
-          .select(col("query_id"), col("neighbor_id"))
-          .localCheckpoint(true)
-        val t = exact.count()
-        require(t > 0,
-          "operating-point tuning needs a non-empty reference")
-        (t, Par.run(probedAll.tail.map(probed => () =>
-          probed.select(col("query_id"), col("neighbor_id"))
-            .join(exact, Seq("query_id", "neighbor_id"), "left_semi")
-            .count())))
-      } finally probedAll.foreach(_.unpersist())
+    val (total, hitCounts) = recallHits(
+      () => probe(queries, path, idCol, vecCol, k, nlist, version,
+        pool = Int.MaxValue),
+      gridKeys.map { case (np, p) =>
+        () => probe(queries, path, idCol, vecCol, k, np, version, p)
+      }, "operating-point tuning")
     val cells = gridKeys.zip(hitCounts).map { case ((np, p), hits) =>
       (np, p, hits, hits.toDouble / total,
         np * probeWeight + p * poolWeight)
@@ -1036,6 +978,32 @@ object IvfIndex {
       .toDF("nprobe", "pool", "hits", "recall", "cost",
         "meets_target", "chosen")
     (pick, grid)
+  }
+
+  /** The recall harness under [[tuneNprobe]] and
+    * [[tuneOperatingPoint]]: runs the covering `reference` probe and
+    * every `cells` probe, then counts |reference| and each cell's hits
+    * (left-semi against the checkpointed reference), in cell order.
+    * All probes hit the same read-only index and [[probe]] is eager,
+    * so they are INDEPENDENT driver actions and overlap; results are
+    * consumed in cell order — completion order never leaks into a
+    * pick. Every probed frame comes back pinned; ALL are released on
+    * any failure path (a thrown sibling must not leak the others'
+    * cached blocks for the session). */
+  private def recallHits(reference: () => DataFrame,
+      cells: Seq[() => DataFrame], what: String): (Long, Seq[Long]) = {
+    val probedAll = Par.run(reference +: cells)
+    try {
+      val exact = probedAll.head
+        .select(col("query_id"), col("neighbor_id"))
+        .localCheckpoint(true)
+      val t = exact.count()
+      require(t > 0, s"$what needs a non-empty reference")
+      (t, Par.run(probedAll.tail.map(probed => () =>
+        probed.select(col("query_id"), col("neighbor_id"))
+          .join(exact, Seq("query_id", "neighbor_id"), "left_semi")
+          .count())))
+    } finally probedAll.foreach(_.unpersist())
   }
 
   /** The quantizer generation a lists version was assigned against:

@@ -86,10 +86,10 @@ object Pq {
   }
 
   /** Map-only encoder: `codeCol` = the m per-subspace nearest-centroid
-    * ids (squared-L2, ties to the LOWEST centroid id — the assignWithSim
-    * discipline). Runs as ONE native codegen'd kernel per row
-    * ([[graft.functions.PqEncode]]; the codebook rides as a reference
-    * object) — bit-identical to the original HOF form it replaced
+    * ids (squared-L2, ties to the LOWEST centroid id — the
+    * [[Similarity.nearestCentroids]] discipline). Runs as ONE native
+    * codegen'd kernel per row ([[graft.functions.PqEncode]]; the
+    * codebook rides as a reference object) — bit-identical to the original HOF form it replaced
     * (`encodeHof`, PqExprsSpec's test-scope reference; also pinned by
     * the oracle gate): same
     * ascending-i fold per (subspace, codeword) distance, same

@@ -155,24 +155,16 @@ object Similarity {
     * Cache lifecycle: the returned pair set is MATERIALIZED (persisted
     * + counted) before this returns and the corpus-sized blocking
     * projection is dropped — what stays cached is only the
-    * output-sized result, which callers unpersist when done (the
-    * probeIvfIndex discipline). Composite consumers that drain the
+    * output-sized result, which callers unpersist when done
+    * ([[Dedup.materializePairs]]). Composite consumers that drain the
     * pairs internally use [[cosineNearDupPairsStaged]] and release
     * everything before returning. */
   def cosineNearDupPairs(df: DataFrame, idCol: String, vecCol: String,
       threshold: Double, gridDims: Int = 4, blockings: Int = 1,
       broadcastBudgetBytes: Long = 256L << 20,
-      maxCorpusRows: Long = 200000): DataFrame = {
-    val (pairs, release) = cosineNearDupPairsStaged(df, idCol, vecCol,
-      threshold, gridDims, blockings, broadcastBudgetBytes, maxCorpusRows)
-    // materialize the (near-dup-density-sized) output while the
-    // corpus-sized base is still cached, then drop the base: the
-    // caller's action replays only the cached pair partitions
-    val out = pairs.persist()
-    out.count()
-    release()
-    out
-  }
+      maxCorpusRows: Long = 200000): DataFrame =
+    Dedup.materializePairs(cosineNearDupPairsStaged(df, idCol, vecCol,
+      threshold, gridDims, blockings, broadcastBudgetBytes, maxCorpusRows))
 
   /** [[cosineNearDupPairs]] with the blocking base's lifecycle in the
     * caller's hands: returns the LAZY pair frame plus a release hook
@@ -395,14 +387,9 @@ object Similarity {
     * density-sized) result left cached for the caller to unpersist. */
   def cosineNearDupPairsApprox(df: DataFrame, idCol: String, vecCol: String,
       threshold: Double, planes: Int = 32, bitsPerBand: Int = 8,
-      seed: Int = 7, broadcastBudgetBytes: Long = 256L << 20): DataFrame = {
-    val (pairs, release) = cosineNearDupPairsApproxStaged(df, idCol, vecCol,
-      threshold, planes, bitsPerBand, seed, broadcastBudgetBytes)
-    val out = pairs.persist()
-    out.count()
-    release()
-    out
-  }
+      seed: Int = 7, broadcastBudgetBytes: Long = 256L << 20): DataFrame =
+    Dedup.materializePairs(cosineNearDupPairsApproxStaged(df, idCol,
+      vecCol, threshold, planes, bitsPerBand, seed, broadcastBudgetBytes))
 
   /** Directed arrival screen — the batch-vs-corpus form of
     * [[cosineNearDupPairsApproxStaged]], the shape a 100 TB ingest
@@ -624,10 +611,15 @@ object Similarity {
         round(x.cast("double") * scale).cast("int")))
   }
 
-  /** Nearest-centroid assignment as a PURE PROJECTION: per row, cosine
-    * against each inlined centroid literal, ranked by an ascending
-    * struct sort on (-sim, centroid_id) — i.e. sim DESC with
-    * centroid_id breaking exact ties — and the top `topN` exploded.
+  /** Nearest-centroid assignment as a PURE PROJECTION — the ONE
+    * assignment kernel behind every IVF path (in-memory [[ivfTopK]] /
+    * [[ivfTopKExplicit]], [[trainCentroids]], and [[IvfIndex]]'s build,
+    * refresh and probe). Per row, `sim(vector, centroid)` against each
+    * inlined centroid literal, ranked by an ascending struct order on
+    * (-sim, centroid_id) — i.e. sim DESC with centroid_id breaking
+    * exact ties. `topN = 1` takes the struct `array_min` (one row per
+    * input row); `topN > 1` sorts and explodes the first `topN`.
+    * Adds `centroid_id` and its `assign_sim` (the ranking similarity).
     * No join, no window, no Exchange: the scan is map-only, so the
     * index build reads the corpus exactly once with ZERO row
     * amplification. (The previous plan crossJoined a broadcast
@@ -641,21 +633,31 @@ object Similarity {
     * per-centroid codegen'd expressions (fastest); above that, ONE
     * 2-D array literal walked by a higher-order `transform` keeps the
     * expression tree O(1) in nlist, so a production-sized quantizer
-    * (nlist in the tens of thousands) cannot blow up codegen. */
+    * (nlist in the tens of thousands) cannot blow up codegen.
+    *
+    * `sim` is [[cosine]] everywhere except the explicit quantizer,
+    * which ranks by `round(cosine, 6)` (the q27 cross-engine
+    * discipline). */
   private[ext] def nearestCentroids(df: DataFrame, vCol: String,
-      centroids: Seq[Seq[Double]], topN: Int): DataFrame = {
-    val ranked =
+      centroids: Seq[Seq[Double]], topN: Int,
+      sim: (Column, Column) => Column = cosine): DataFrame = {
+    val scored =
       if (centroids.size <= 64)
-        array_sort(array(centroids.zipWithIndex.map { case (cv, i) =>
-          struct((-cosine(col(vCol), array(cv.map(lit): _*))).as("neg"),
+        array(centroids.zipWithIndex.map { case (cv, i) =>
+          struct((-sim(col(vCol), array(cv.map(lit): _*))).as("neg"),
             lit(i).as("centroid_id"))
-        }: _*))
+        }: _*)
       else
-        array_sort(transform(typedlit(centroids), (cv, i) =>
-          struct((-cosine(col(vCol), cv)).as("neg"),
-            i.cast("int").as("centroid_id"))))
-    df.withColumn("centroid_id",
-        explode(slice(ranked, 1, topN).getField("centroid_id")))
+        transform(typedlit(centroids), (cv, i) =>
+          struct((-sim(col(vCol), cv)).as("neg"),
+            i.cast("int").as("centroid_id")))
+    val best =
+      if (topN == 1) array_min(scored)
+      else explode(slice(array_sort(scored), 1, topN))
+    df.withColumn("_best", best)
+      .withColumn("centroid_id", col("_best.centroid_id"))
+      .withColumn("assign_sim", -col("_best.neg"))
+      .drop("_best")
   }
 
   /** Deterministic hash-picked sample of `nlist` corpus vectors as
@@ -751,73 +753,6 @@ object Similarity {
     df.select(col(idCol), posexplode(array(projs: _*)).as(Seq("out_dim", "proj")))
   }
 
-  /** Persisted IVF index — build ONCE, probe MANY: the production ANN
-    * shape at 100 TB, where re-deriving posting lists per query batch
-    * would re-scan the corpus. The build is the same single map-only
-    * assignment scan as [[ivfTopK]], written hive-partitioned by
-    * `centroid_id`; the quantizer itself (nlist rows) lands beside it.
-    * Probing then reads ONLY the probed lists — the centroid filter is
-    * a literal `isin` over an nlist-bounded set, so it surfaces as
-    * PartitionFilters on the scan and unprobed lists are never read
-    * from storage (the I/O skip that makes IVF an index rather than a
-    * partition of a full scan). Full probe (`nprobe = nlist`) remains
-    * exactly [[bruteForceTopK]] — the oracle-gate guarantee holds for
-    * the persisted form too. */
-  def writeIvfIndex(corpus: DataFrame, idCol: String, vecCol: String,
-      nlist: Int, path: String, trainIters: Int = 0): Unit = {
-    val centroids =
-      if (trainIters > 0) trainCentroids(corpus, idCol, vecCol, nlist, trainIters)
-      else sampleCentroids(corpus, idCol, vecCol, nlist)
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    centroids.zipWithIndex.map { case (cv, i) => (i, cv) }
-      .toDF("centroid_id", "weights")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-    nearestCentroids(
-        corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("nv")),
-        "nv", centroids, topN = 1)
-      .write.mode("overwrite").partitionBy("centroid_id")
-      .parquet(s"$path/lists")
-  }
-
-  /** Probe a [[writeIvfIndex]] layout. Output and tie-break discipline
-    * match [[ivfTopK]]: (query_id, neighbor_id, cosine_sim, rank). */
-  def probeIvfIndex(queries: DataFrame, path: String, idCol: String,
-      vecCol: String, k: Int, nprobe: Int): DataFrame = {
-    val spark = queries.sparkSession
-    val centroids = spark.read.parquet(s"$path/centroids")
-      .orderBy("centroid_id").collect()
-      .map(_.getSeq[Number](1).map(_.doubleValue()).toSeq).toSeq
-    require(nprobe > 0 && nprobe <= centroids.size,
-      s"need 0 < nprobe <= ${centroids.size}, got $nprobe")
-    // cached: the assignment scan feeds BOTH the probed-id collect and
-    // the candidate join — without it the query side's nlist-cosine
-    // projection (its most expensive stage) would run twice
-    val probes = nearestCentroids(
-      queries.select(col(idCol).as("query_id"), col(vecCol).as("qv")),
-      "qv", centroids, topN = nprobe).persist()
-    // nlist-bounded driver set → literal partition filter → pruned scan
-    val probed = probes.select("centroid_id").distinct()
-      .collect().map(_.getInt(0)).sorted
-    val lists = spark.read.parquet(s"$path/lists")
-      .filter(col("centroid_id").isin(probed.map(Integer.valueOf): _*))
-    val scored = probes.join(lists, Seq("centroid_id"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        cosine(col("qv"), col("nv")).as("cosine_sim"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine_sim").desc, col("neighbor_id"))
-    val ranked = scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k).persist()
-    // materialize NOW (while probes is still cached), then drop the
-    // wide probe projection — otherwise every probe call leaks its
-    // cached blocks for the session's lifetime. What stays cached is
-    // only the k-per-query output; callers may unpersist it when done.
-    ranked.count()
-    probes.unpersist()
-    ranked
-  }
-
   /** Lloyd-iteration k-means refinement of the coarse quantizer, built
     * from the same shuffle-free machinery as the index itself: each
     * iteration is ONE map-only assignment scan ([[nearestCentroids]]
@@ -880,21 +815,7 @@ object Similarity {
       if (trainIters > 0)
         trainCentroids(corpus, idCol, vecCol, nlist, trainIters)
       else sampleCentroids(corpus, idCol, vecCol, nlist)
-    // inverted lists: each corpus vector in exactly its nearest list
-    val lists = nearestCentroids(
-      corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("nv")),
-      "nv", centroids, topN = 1)
-    // each query probes its nprobe nearest lists
-    val probes = nearestCentroids(
-      queries.select(col(idCol).as("query_id"), col(vecCol).as("qv")),
-      "qv", centroids, topN = nprobe)
-    val scored = probes.join(lists, Seq("centroid_id"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        cosine(col("qv"), col("nv")).as("cosine_sim"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine_sim").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    ivfRanked(queries, corpus, idCol, vecCol, k, nprobe, centroids, cosine)
   }
 
   /** [[ivfTopK]] with a CALLER-SUPPLIED coarse quantizer and the q27
@@ -914,27 +835,32 @@ object Similarity {
       s"need 0 < nprobe <= ${centroids.size} centroids, got $nprobe")
     require(centroids.forall(_.length == centroids.head.length),
       "centroids must share one dimensionality")
-    def assign(df: DataFrame, vCol: String, topN: Int): DataFrame = {
-      val ranked = array_sort(array(centroids.zipWithIndex.map {
-        case (cv, i) =>
-          struct((-round(cosine(col(vCol), array(cv.map(lit): _*)), 6))
-            .as("neg"), lit(i).as("centroid_id"))
-      }: _*))
-      df.withColumn("centroid_id",
-        explode(slice(ranked, 1, topN).getField("centroid_id")))
-    }
-    val lists = assign(corpus.select(col(idCol).as("neighbor_id"),
-      col(vecCol).as("nv")), "nv", topN = 1)
-    val probes = assign(queries.select(col(idCol).as("query_id"),
-      col(vecCol).as("qv")), "qv", topN = nprobe)
+    ivfRanked(queries, corpus, idCol, vecCol, k, nprobe, centroids,
+      (a, b) => round(cosine(a, b), 6))
+  }
+
+  /** The in-memory IVF body shared by [[ivfTopK]] and
+    * [[ivfTopKExplicit]]: corpus vectors land in their single nearest
+    * list, each query probes its `nprobe` nearest lists, the candidate
+    * join shuffles on centroid_id, and `sim` — the same expression
+    * that ranked the centroids — ranks the candidates (sim DESC, id). */
+  private def ivfRanked(queries: DataFrame, corpus: DataFrame,
+      idCol: String, vecCol: String, k: Int, nprobe: Int,
+      centroids: Seq[Seq[Double]],
+      sim: (Column, Column) => Column): DataFrame = {
+    val lists = nearestCentroids(
+      corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("nv")),
+      "nv", centroids, topN = 1, sim)
+    val probes = nearestCentroids(
+      queries.select(col(idCol).as("query_id"), col(vecCol).as("qv")),
+      "qv", centroids, topN = nprobe, sim)
     val scored = probes.join(lists, Seq("centroid_id"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
-        round(cosine(col("qv"), col("nv")), 6).as("cosine_sim"))
+        sim(col("qv"), col("nv")).as("cosine_sim"))
     val w = Window.partitionBy("query_id")
       .orderBy(col("cosine_sim").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
   }
 
   /** MAXIMAL MARGINAL RELEVANCE re-rank (Carbonell & Goldstein, SIGIR

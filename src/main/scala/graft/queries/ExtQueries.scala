@@ -1010,30 +1010,25 @@ object ExtQueries extends QueryPack {
         .orderBy(col("vec_id"), col("out_dim"))
     },
 
-    // Persisted IVF index: build ONCE to a centroid-partitioned hive
-    // layout, probe with partition-pruned reads (asserted in-query:
-    // the pruned probe must surface PartitionFilters). The gate row
-    // uses the full probe, which is exactly brute force — the same
-    // guarantee q61 certifies, now for the persisted form.
+    // Persisted IVF index: the embeddings land as a VersionedTable,
+    // IvfIndex builds centroid-clustered posting lists over it, and a
+    // one-centroid probe must file-prune (asserted in-query through
+    // the manifest pruner, as q186 does). The gate row uses the full
+    // probe, which is exactly brute force — the same guarantee q61
+    // certifies, now for the persisted form.
     "q116_ivf_persisted" -> { (s, dir) =>
-      val e = embs(s, dir)
-      // per-run location: repeated calls in one run reuse it via
-      // overwrite mode, while concurrent runs by other processes/users
-      // on a shared machine cannot collide mid-overwrite
-      val path = tmp(s, "graft_ivf_q116")
-      Similarity.writeIvfIndex(e, "vec_id", "embedding", nlist = 8, path)
-      // scale proof: a partial probe reads ONLY its probed lists (the
-      // probe result is persisted by contract — the cached plan string
-      // retains the pruned scan — so unpersist after the assertion)
-      val partial = Similarity.probeIvfIndex(e.filter(col("vec_id") < 20),
-        path, "vec_id", "embedding", k = 5, nprobe = 2)
-      val pruned = partial.queryExecution.executedPlan.toString
-      partial.unpersist()
-      require("PartitionFilters: \\[[^\\]]*centroid_id".r
-          .findFirstIn(pruned).isDefined,
-        s"probe must prune unprobed posting lists:\n$pruned")
-      val topk = Similarity.probeIvfIndex(e.filter(col("vec_id") < 20),
-        path, "vec_id", "embedding", k = 5, nprobe = 8)
+      import graft.sources.VersionedTable
+      val base = tmp(s, s"graft_q116/${java.util.UUID.randomUUID()}")
+      val (tbl, idx) = (s"$base/emb", s"$base/ivf")
+      val e = embs(s, dir).select(col("vec_id"), col("embedding"))
+      VersionedTable.create(s, tbl, e)
+      IvfIndex.create(s, tbl, "vec_id", "embedding", nlist = 8, idx)
+      val (kept, total) = IvfIndex.pruneAudit(s, idx, Seq(0))
+      require(kept < total,
+        s"clustered lists must file-prune a one-centroid probe: " +
+          s"$kept/$total")
+      val topk = IvfIndex.probe(e.filter(col("vec_id") < 20), idx,
+        "vec_id", "embedding", k = 5, nprobe = 8)
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("query_id")
         .orderBy(round(col("cosine_sim"), 6).desc, col("neighbor_id"))
@@ -1278,11 +1273,10 @@ object ExtQueries extends QueryPack {
         .orderBy(col("run"), col("k"))
     },
 
-    // Incremental IVF maintenance under corpus churn — the production
-    // half of the q116 persisted index (build-once cannot serve a
-    // corpus ingesting daily). The corpus is a VersionedTable; the
-    // posting lists are a centroid-clustered VersionedTable maintained
-    // from its CHANGE FEED: one refresh call applies an append + a
+    // Incremental IVF maintenance under corpus churn — q116's
+    // persisted index kept current while the corpus ingests. The
+    // corpus is a VersionedTable; the posting lists are a
+    // centroid-clustered VersionedTable maintained from its CHANGE FEED: one refresh call applies an append + a
     // CDF delete + an in-place vector update as ONE atomic commit
     // (delta-sized assignment against the frozen quantizer, keyed
     // copy-on-write of only the churned centroids' files), with the

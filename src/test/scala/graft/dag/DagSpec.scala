@@ -231,6 +231,24 @@ class DagSpec extends AnyFunSuite {
     assert(spark.table("loop_out").count() == 4)
   }
 
+  test("Multicast's cached parent is released once the flow's sinks have run") {
+    val c = ctx(Map("people" -> people))
+    val flow = DataFlow("mc", Seq(
+      SourceTable("src", "people"),
+      Multicast("fan", Seq("a", "b")),
+      Destination("dst_a", "mc_a", WriteMode.Overwrite),
+      Destination("dst_b", "mc_b", WriteMode.Overwrite)),
+      Seq(Path("src", "fan"), Path("fan", "dst_a", fromPort = "a"),
+        Path("fan", "dst_b", fromPort = "b")))
+    // the shared session may still hold other specs' cached frames
+    spark.catalog.clearCache()
+    ControlFlowExec.run(PipelineSpec("p",
+      tasks = Seq(DataFlowTask("dft", flow)), edges = Nil), c)
+    assert(spark.table("mc_a").count() == 4 && spark.table("mc_b").count() == 4)
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "the multicast parent must not outlive its flow")
+  }
+
   test("RecordsetDestination fills its variable; the driver-bound cap fails loudly") {
     val c = ctx(Map("people" -> people))
     DataFlowExec.run(DataFlow("rs", Seq(

@@ -557,31 +557,40 @@ class ExtSpec extends AnyFunSuite {
       queries, df, "id", "v", k = 3, nprobe = 9, cents))
   }
 
-  test("persisted ivf index: probe equals in-memory ivf, pruned scan reads only probed lists") {
-    val rnd = new scala.util.Random(23)
-    val dim = 12
-    val rows = (0L until 40L).map(i =>
+  test("ivf explicit quantizer above 64 centroids: HOF assignment, no Exchange, full probe equals brute force") {
+    import org.apache.spark.sql.catalyst.expressions.ArrayTransform
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    val rnd = new scala.util.Random(29)
+    val dim = 8
+    val rows = (0L until 60L).map(i =>
       Row(i, Seq.fill(dim)(rnd.nextGaussian().toFloat)))
     val schema = StructType(Seq(StructField("id", LongType),
       StructField("v", ArrayType(FloatType))))
     val df = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
     val queries = df.filter(col("id") < 5)
-    val path = java.nio.file.Files.createTempDirectory("ivf_spec").toString
-    Similarity.writeIvfIndex(df, "id", "v", nlist = 4, path)
-    def canon(out: org.apache.spark.sql.DataFrame) =
-      out.select("query_id", "neighbor_id", "rank")
+    val cents = Seq.fill(70)(Seq.fill(dim)(rnd.nextGaussian()))
+    val out = Similarity.ivfTopKExplicit(queries, df, "id", "v",
+      k = 3, nprobe = cents.size, cents)
+    // the assignment nodes are the ones walking the centroid literal
+    // with a higher-order transform; none may sit above an Exchange
+    val plan = out.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.inputPlan
+      case p => p
+    }
+    val assign = plan.collect {
+      case n if n.expressions.exists(
+        _.find(_.isInstanceOf[ArrayTransform]).isDefined) => n
+    }
+    assert(assign.nonEmpty,
+      s"70 explicit centroids must plan the HOF shape:\n$plan")
+    assert(assign.forall(_.find(_.isInstanceOf[Exchange]).isEmpty),
+      s"centroid assignment must be map-only:\n$plan")
+    def canon(o: org.apache.spark.sql.DataFrame) =
+      o.select("query_id", "neighbor_id", "rank")
         .as[(Long, Long, Int)].collect().toSet
-    // full probe from the persisted layout == brute force
-    val brute = canon(Similarity.bruteForceTopK(queries, df, "id", "v", 3))
-    val full = canon(Similarity.probeIvfIndex(queries, path, "id", "v",
-      k = 3, nprobe = 4))
-    assert(full == brute)
-    // partial probe prunes the posting-list scan at the partition level
-    val prunedPlan = Similarity.probeIvfIndex(queries, path, "id", "v",
-        k = 3, nprobe = 1)
-      .queryExecution.executedPlan.toString
-    assert("PartitionFilters: \\[[^\\]]*centroid_id".r
-      .findFirstIn(prunedPlan).isDefined, prunedPlan)
+    assert(canon(out) ==
+      canon(Similarity.bruteForceTopK(queries, df, "id", "v", 3)))
   }
 
   test("PII redaction scrubs emails, phones, IPs; clean text untouched") {
@@ -763,11 +772,17 @@ class ExtSpec extends AnyFunSuite {
     val planBig = assignedBig.queryExecution.executedPlan.toString
     assert(!planBig.contains("Exchange"),
       s"HOF-shape assignment must be map-only:\n$planBig")
-    val small = assigned.select("id", "centroid_id")
-      .as[(Long, Int)].collect().toMap
-    val bigOut = assignedBig.select("id", "centroid_id")
-      .as[(Long, Int)].collect().toMap
+    val small = assigned.select("id", "centroid_id", "assign_sim")
+      .as[(Long, Int, Double)].collect().map(r => r._1 -> (r._2, r._3)).toMap
+    val bigOut = assignedBig.select("id", "centroid_id", "assign_sim")
+      .as[(Long, Int, Double)].collect().map(r => r._1 -> (r._2, r._3)).toMap
     assert(bigOut == small, "both expression shapes must assign identically")
+    // assign_sim is the cosine to the assigned centroid: v = (id, 2)
+    // against the unit axes gives max(id, 2) / |v|
+    small.foreach { case (id, (_, sim)) =>
+      val want = math.max(id.toDouble, 2.0) / math.sqrt(id * id + 4.0)
+      assert(math.abs(sim - want) < 1e-9, s"row $id: $sim vs $want")
+    }
   }
 
   test("spanDupStats counts shared k-token spans, flags mostly-duplicated docs") {

@@ -19,6 +19,13 @@ if [ -n "$ONLY" ]; then
 else
   sbt -batch "runMain graft.Verify $SF $OUT" >/dev/null
 fi
-python3 tools/check.py "$OUT" "$SF"
-python3 tools/dtype_check.py "$OUT" "$SF"
+# both checkers always run and print their verdicts; the gate fails
+# if either does
+rc=0
+python3 tools/check.py "$OUT" "$SF" || rc=1
+python3 tools/dtype_check.py "$OUT" "$SF" || rc=1
+if [ "$rc" -ne 0 ]; then
+  echo "== gate RED (values and/or dtypes; see both verdicts above) =="
+  exit 1
+fi
 echo "== gate green (values + dtypes) =="
