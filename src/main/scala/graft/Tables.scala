@@ -3,6 +3,7 @@ package graft
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.LogicalTypeAnnotation
@@ -60,7 +61,10 @@ object Tables {
         val file =
           if (fs.getFileStatus(p).isDirectory) firstDataFile(p) else Some(p)
         java.lang.Boolean.valueOf(file.exists { f =>
-          val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+          // read options over `conf`: without them parquet-mr builds
+          // (and parses) a fresh Hadoop Configuration for the footer
+          val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf),
+            HadoopReadOptions.builder(conf).build())
           try reader.getFileMetaData.getSchema.getColumns.asScala.exists { cd =>
             cd.getPrimitiveType.getLogicalTypeAnnotation match {
               case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>

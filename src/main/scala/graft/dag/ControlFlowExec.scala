@@ -97,8 +97,8 @@ object ControlFlowExec {
       // bound to a variable needs an explicit action.
       resultInto.foreach(variable => ctx.variables(variable) = df.head().get(0))
     case DataFlowTask(_, flow) =>
-      // sinks have executed when run() returns; release cached parents so
-      // a long multi-flow pipeline doesn't accumulate persisted frames
+      // sinks have executed when run() returns; release the flow's row
+      // checkpoints so a long multi-flow pipeline doesn't accumulate them
       try DataFlowExec.run(flow, ctx)
       finally ctx.unpersistAll()
     case ForEach(_, variable, values, body) =>

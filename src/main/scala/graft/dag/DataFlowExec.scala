@@ -1,8 +1,9 @@
 package graft.dag
 
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import scala.collection.mutable
 import graft.ir._
 import graft.ir.Component._
@@ -27,22 +28,42 @@ final class PipelineContext(
     val variables: mutable.Map[String, Any]) {
   /** Row-count taps registered during the flow; drained after actions. */
   val observations: mutable.Buffer[ObsTap] = mutable.Buffer.empty
-  /** Frames persisted by fan-out/split during a flow; unpersisted by
-    * ControlFlowExec once the flow's sinks have run (leak fix — a long
-    * multi-flow pipeline must not accumulate cached parents). */
-  val persisted: mutable.Buffer[DataFrame] = mutable.Buffer.empty
-  /** Persist `df` at MEMORY_AND_DISK and register it for
-    * [[unpersistAll]] — the ONE way a flow component caches a frame. */
-  def persist(df: DataFrame): DataFrame = {
-    val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-    persisted += p
+  /** The block-manager RDDs behind the flow's row checkpoints
+    * ([[persist]]); ControlFlowExec releases them once the flow's sinks
+    * have run, so a long multi-flow pipeline does not accumulate them. */
+  val persisted: mutable.Buffer[RDD[_]] = mutable.Buffer.empty
+  /** Materialize `df` once as an eager local row checkpoint and register
+    * its blocks for [[unpersistAll]] — the ONE way a flow component
+    * (split, fan-out, redirect, sampling, cache) pins a frame that
+    * several consumers read. A fan-out parent is read a few times and
+    * dropped at flow end, so it is kept as rows (MEMORY_AND_DISK), not
+    * as Spark SQL's compressed columnar cache. The checkpoint is eager:
+    * its own SQL execution computes the rows, so a RowCount `observe`
+    * tap upstream is filled by that execution (a lazy one would end the
+    * execution first and could complete the Observation with 0). Fault
+    * domain: the blocks live in the block managers with no lineage
+    * behind them. Under `local[cpus]` that is the driver, as a cache
+    * is; on a cluster a lost checkpoint block fails the flow where a
+    * lost cache block would be recomputed. The frame's executed plan is
+    * recorded in [[sinkPlans]] under `component`, so the plan audit
+    * still sees the operators the checkpoint cuts from the sinks' plans.
+    * `releaseWithFlow = false` leaves the blocks to whoever still names
+    * the frame (a Cache Transform's package-lifetime view): Spark's
+    * context cleaner frees them once nothing references it. */
+  def persist(component: String, df: DataFrame,
+      releaseWithFlow: Boolean = true): DataFrame = {
+    val p = df.localCheckpoint(eager = true)
+    if (releaseWithFlow)
+      persisted += p.queryExecution.logical.asInstanceOf[LogicalRDD].rdd
+    recordSinkPlan(component, df)
     p
   }
   /** Physical plan of every sink's input frame, captured as the sink
-    * executes — the audit surface for multi-sink pipelines whose query
-    * entry returns only a post-hoc read (PlanAuditSpec's golden row:
-    * without this, the pipeline's real plans are invisible to the
-    * plan-regression guard). */
+    * executes, and of every frame [[persist]] materialized — the audit
+    * surface for multi-sink pipelines whose query entry returns only a
+    * post-hoc read (PlanAuditSpec's golden row: without this, the
+    * pipeline's real plans are invisible to the plan-regression guard,
+    * and a sink below a checkpoint would show only its scan). */
   val sinkPlans: mutable.Buffer[(String, String)] = mutable.Buffer.empty
   /** Live JDBC connections by connection-manager name — the OLE DB
     * Command escape hatch's wiring: a [[graft.ir.Component
@@ -54,7 +75,7 @@ final class PipelineContext(
     sinkPlans += component -> df.queryExecution.executedPlan.toString
   def vars: Map[String, Any] = variables.toMap
   def unpersistAll(): Unit = {
-    persisted.foreach(_.unpersist(false))
+    persisted.foreach(_.unpersist(blocking = false))
     persisted.clear()
   }
 }
@@ -214,7 +235,7 @@ object DataFlowExec {
     require(cyclic.isEmpty,
       s"cycle in data flow ${flow.name}: ${cyclic.mkString(",")}")
 
-    // consumers per (component, port) — fan-out > 1 gets persisted
+    // consumers per (component, port) — fan-out > 1 gets checkpointed
     val consumers = flow.paths.groupBy(p => (p.from, p.fromPort)).view.mapValues(_.size).toMap
 
     val outputs = mutable.Map.empty[(String, String), DataFrame]
@@ -229,7 +250,7 @@ object DataFlowExec {
       val outs = execute(comp, inputs, ctx)
       outs.foreach { case (port, df) =>
         outputs((name, port)) =
-          if (consumers.getOrElse((name, port), 0) > 1) ctx.persist(df)
+          if (consumers.getOrElse((name, port), 0) > 1) ctx.persist(name, df)
           else df
       }
     }
@@ -386,7 +407,7 @@ object DataFlowExec {
               .withColumn(c, col(s"${caps(c)}.value"))
           }
           val err = coalesce(exprs.map { case (c, _) => col(s"${caps(c)}.error") }: _*)
-          val labeled = ctx.persist(df.withColumn(s"__graft_err_$name", err))
+          val labeled = ctx.persist(name, df.withColumn(s"__graft_err_$name", err))
           val clean = labeled.filter(col(s"__graft_err_$name").isNull)
             .drop(caps.values.toSeq ++ stash.values.toSeq :+ s"__graft_err_$name": _*)
           val errRows = labeled.filter(col(s"__graft_err_$name").isNotNull)
@@ -432,8 +453,8 @@ object DataFlowExec {
         .drop("__graft_path"))
 
     case ExportColumn(_, pathColumn, contentColumn) =>
-      // persist before the eager write action: the downstream consumer
-      // re-reads this frame, and without the cache a nondeterministic
+      // checkpoint before the eager write action: the downstream consumer
+      // re-reads this frame, and without the checkpoint a nondeterministic
       // upstream could diverge between the exported files and the rows
       // passed through
       val raw = single(inputs, comp)
@@ -441,7 +462,7 @@ object DataFlowExec {
       val cidx = raw.columns.indexOf(contentColumn)
       require(idx >= 0 && cidx >= 0,
         s"${comp.name}: missing $pathColumn/$contentColumn")
-      val df = ctx.persist(raw)
+      val df = ctx.persist(comp.name, raw)
       df.select(col(pathColumn), col(contentColumn)).foreachPartition {
         (rows: Iterator[org.apache.spark.sql.Row]) =>
           rows.foreach { r =>
@@ -464,9 +485,12 @@ object DataFlowExec {
       // the cache-name dependency is invisible to the topological sort:
       // a consumer's Lookup(refSql over cacheName) MUST be ordered after
       // this component with an explicit Path into its "cache" port
-      // (data-less ordering edge; Lookup ignores that port's frames)
+      // (data-less ordering edge; Lookup ignores that port's frames).
+      // A cache connection manager lives for the package — a Lookup in a
+      // later data flow reads the view — so its checkpoint is not
+      // released with this flow; replacing the view lets Spark free it.
       val df = single(inputs, comp)
-      val p = ctx.persist(df)
+      val p = ctx.persist(comp.name, df, releaseWithFlow = false)
       p.createOrReplaceTempView(cacheName)
       Map("out" -> p)
 
@@ -530,7 +554,7 @@ object DataFlowExec {
       val streamCols = stream.columns.map(n => sc0(n).as(n))
       noMatch match {
         case NoMatchBehavior.Redirect =>
-          val labeled = ctx.persist(joined)
+          val labeled = ctx.persist(lk.name, joined)
           Map(
             "out" -> labeled.filter(rc0(matchFlag) === lit(true))
               .select(streamCols ++ copied: _*),
@@ -634,9 +658,9 @@ object DataFlowExec {
       val df = single(inputs, comp)
       // first-match-wins: label each row once via a when-cascade, then
       // filter per port — conditions are evaluated once per row, and the
-      // labeled parent is persisted here, once, for every port.
+      // labeled parent is checkpointed here, once, for every port.
       val branch = "__graft_branch"
-      val labeled = ctx.persist(df.withColumn(branch,
+      val labeled = ctx.persist(comp.name, df.withColumn(branch,
         cases.foldRight(lit(defaultOut)) { case ((port, cond), els) =>
           // fold right so earlier cases take precedence in the cascade
           when(Compiler.compile(cond, df.schema, ctx.vars), lit(port)).otherwise(els)
@@ -646,7 +670,7 @@ object DataFlowExec {
 
     case Multicast(_, outs) =>
       val df = single(inputs, comp)
-      val parent = if (outs.size > 1) ctx.persist(df) else df
+      val parent = if (outs.size > 1) ctx.persist(comp.name, df) else df
       outs.map(o => o -> parent).toMap
 
     case UnionAll(_) =>
@@ -659,7 +683,7 @@ object DataFlowExec {
 
     case MultiAggregate(_, outs) =>
       val df = single(inputs, comp)
-      val parent = if (outs.size > 1) ctx.persist(df) else df
+      val parent = if (outs.size > 1) ctx.persist(comp.name, df) else df
       outs.map { case (port, groupBy, aggs) =>
         port -> buildAggregate(parent, groupBy, aggs)
       }.toMap
@@ -678,7 +702,7 @@ object DataFlowExec {
       // one seeded draw per row, persisted so the two ports partition
       // the input consistently even across separate downstream actions
       val df = single(inputs, comp)
-      val drawn = ctx.persist(
+      val drawn = ctx.persist(comp.name,
         df.withColumn("__graft_rs", rand(seed) < lit(percent / 100.0)))
       Map(
         "out" -> drawn.filter(col("__graft_rs")).drop("__graft_rs"),
@@ -719,7 +743,7 @@ object DataFlowExec {
       // "unselected" = exceptAll(sampled) is built lazily and costs
       // nothing unless the port is consumed.
       val df = single(inputs, comp)
-      val sampled = ctx.persist(df.orderBy(rand(seed)).limit(rows))
+      val sampled = ctx.persist(comp.name, df.orderBy(rand(seed)).limit(rows))
       Map("out" -> sampled, "unselected" -> df.exceptAll(sampled))
 
     case ScdRouter(_, refTable, keys, changing, historical, fixed) =>
@@ -727,7 +751,7 @@ object DataFlowExec {
       // ConditionalSplit: conditions evaluate once per row)
       val feed = single(inputs, comp)
       val routeCol = "__graft_scd_route"
-      val labeled = ctx.persist(graft.ops.Mutations.scdRoute(feed,
+      val labeled = ctx.persist(comp.name, graft.ops.Mutations.scdRoute(feed,
         ctx.resolveTable(refTable), keys, changing, historical, fixed,
         routeCol))
       Seq("new", "fixedattr", "historical", "changed", "unchanged")
@@ -843,9 +867,8 @@ object DataFlowExec {
     case TrashDestination(name, countInto) =>
       val df = single(inputs, comp)
       // Deferred count: register a tap and let the drain phase count it
-      // AFTER real sinks have run — if the trash shares a persisted
-      // split/fan-out parent, the count then reads the cache instead of
-      // forcing the first (cold) materialization mid-flow.
+      // AFTER real sinks have run, off the sinks' critical path — over a
+      // split/fan-out port the count reads the parent's row checkpoint.
       countInto.foreach { v =>
         val obs = Observation(s"trash_$name")
         ctx.observations += ObsTap(obs, v, name,

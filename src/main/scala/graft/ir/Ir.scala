@@ -104,9 +104,10 @@ object Component {
     * through. */
   final case class ExportColumn(name: String, pathColumn: String,
       contentColumn: String) extends Component
-  /** Cache Transform (SSIS §2.4, reference maps to df.cache): persists
-    * the input and registers it as `cacheName` for downstream Lookups
-    * (`Lookup(refSql = Some("SELECT * FROM cacheName"))`). */
+  /** Cache Transform (SSIS §2.4, reference maps to df.cache):
+    * materializes the input once and registers it as `cacheName` for
+    * downstream Lookups (`Lookup(refSql = Some("SELECT * FROM
+    * cacheName"))`), in this data flow or a later one of the package. */
   final case class CacheTransform(name: String, cacheName: String) extends Component
 
   /** Murmur3 hash of `columns` into `outColumn` — the scalable change-
@@ -221,8 +222,9 @@ object Component {
   final case class ConditionalSplit(name: String,
       cases: Seq[(String, String)],               // (outputPort, ssisCondition)
       defaultOutput: String = "default") extends Component
-  /** Fan one input out to N identical outputs; parent persisted when
-    * the fan-out is consumed more than once. */
+  /** Fan one input out to N identical outputs; the parent is
+    * checkpointed once (`PipelineContext.persist`) when there are two or
+    * more outputs. */
   final case class Multicast(name: String, outputs: Seq[String]) extends Component
   final case class UnionAll(name: String) extends Component
 

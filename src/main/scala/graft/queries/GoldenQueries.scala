@@ -109,7 +109,11 @@ object GoldenQueries extends QueryPack {
     * captured inside ([[graft.dag.PipelineContext.sinkPlans]]), which
     * is how PlanAuditSpec audits this multi-sink pipeline (the q18
     * query entry returns only a post-hoc table read whose plan says
-    * nothing about the pipeline itself). */
+    * nothing about the pipeline itself). The conditional split's
+    * parent is a row checkpoint, so the branch sinks' plans start at
+    * its scan; the plan that computed the checkpoint — the lookup,
+    * merge join and flags upstream — is captured under the split's
+    * name. */
   def runGoldenMedium(s: SparkSession, dir: String): PipelineContext = {
     val ctx = PipelineContext.overDir(s, dir)
     val spec = PipelineSpec("golden",
@@ -163,8 +167,8 @@ object GoldenQueries extends QueryPack {
         .withColumn("__in_feed", lit(true))
       val t2 = targetChanged.withColumn("__in_tgt", lit(true))
       // the churn join fans out into three branches (insert / update /
-      // kept-deleted) — persist it, same rule the engine applies to
-      // Multicast fan-outs; without this each branch re-runs the join
+      // kept-deleted) — persist it, as the engine materializes its
+      // fan-out parents once; without this each branch re-runs the join
       // (exchange reuse only catches the branches whose pruned scans
       // stay textually identical)
       val j = f2.join(t2, col("f_c_custkey") <=> col("c_custkey"), "full_outer")

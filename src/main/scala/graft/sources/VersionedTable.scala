@@ -662,11 +662,14 @@ object VersionedTable {
     val abs = new Path(root, sub)
     val f = fs(spark, abs)
     val conf = spark.sessionState.newHadoopConf()
+    // read options built once over `conf`: without them parquet-mr
+    // builds (and parses) a fresh Hadoop Configuration per file
+    val opts = org.apache.parquet.HadoopReadOptions.builder(conf).build()
     val all = f.listStatus(abs).map(_.getPath.getName)
       .filter(_.endsWith(".parquet")).sorted.toSeq.map { n =>
         val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
           org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new Path(abs, n), conf))
+            new Path(abs, n), conf), opts)
         val blocks: Blocks =
           try reader.getFooter.getBlocks.asScala.toSeq finally reader.close()
         (s"$sub/$n", blocks)

@@ -231,22 +231,91 @@ class DagSpec extends AnyFunSuite {
     assert(spark.table("loop_out").count() == 4)
   }
 
+  /** Ids of the session's persistent RDDs. Compared as sets, so the
+    * context cleaner releasing another spec's RDDs mid-run cannot
+    * disturb the counts. */
+  private def pinnedIds(): Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  /** A context whose writer runs ONE action (a collect) and pins
+    * nothing, so every persistent RDD a run leaves belongs to the flow's
+    * own checkpoints. Records, per sink, the rows it received and the
+    * RDDs pinned once its action ran. */
+  private def collectingCtx(tables: Map[String, DataFrame],
+      pinned: mutable.Map[String, Set[Int]],
+      rows: mutable.Map[String, Int]): PipelineContext =
+    new PipelineContext(spark,
+      name => tables.getOrElse(name, sys.error(s"unknown table $name")),
+      (name, df, _) => {
+        rows(name) = df.collect().length
+        pinned(name) = pinnedIds()
+      },
+      mutable.Map.empty)
+
+  /** Runs `flow` as a one-task pipeline over `people` and asserts that
+    * its fan-out parent was pinned while the sinks ran and is released
+    * once they have. Returns the rows each sink received. */
+  private def releasedAfterRun(flow: DataFlow): Map[String, Int] = {
+    val pinned = mutable.Map.empty[String, Set[Int]]
+    val rows = mutable.Map.empty[String, Int]
+    val before = pinnedIds()
+    val res = ControlFlowExec.run(PipelineSpec("p",
+      tasks = Seq(DataFlowTask("dft", flow)), edges = Nil),
+      collectingCtx(Map("people" -> people), pinned, rows))
+    assert(res.succeeded("dft"), res.statuses)
+    assert(pinned.nonEmpty && pinned.values.forall(p => (p -- before).nonEmpty),
+      s"the parent must be pinned while the sinks run: $pinned vs $before")
+    assert((pinnedIds() -- before).isEmpty,
+      "the fan-out parent must not outlive its flow")
+    rows.toMap
+  }
+
   test("Multicast's cached parent is released once the flow's sinks have run") {
-    val c = ctx(Map("people" -> people))
-    val flow = DataFlow("mc", Seq(
+    val rows = releasedAfterRun(DataFlow("mc", Seq(
       SourceTable("src", "people"),
       Multicast("fan", Seq("a", "b")),
       Destination("dst_a", "mc_a", WriteMode.Overwrite),
       Destination("dst_b", "mc_b", WriteMode.Overwrite)),
       Seq(Path("src", "fan"), Path("fan", "dst_a", fromPort = "a"),
-        Path("fan", "dst_b", fromPort = "b")))
-    // the shared session may still hold other specs' cached frames
-    spark.catalog.clearCache()
-    ControlFlowExec.run(PipelineSpec("p",
-      tasks = Seq(DataFlowTask("dft", flow)), edges = Nil), c)
-    assert(spark.table("mc_a").count() == 4 && spark.table("mc_b").count() == 4)
-    assert(spark.sharedState.cacheManager.isEmpty,
-      "the multicast parent must not outlive its flow")
+        Path("fan", "dst_b", fromPort = "b"))))
+    assert(rows == Map("mc_a" -> 4, "mc_b" -> 4))
+  }
+
+  test("ConditionalSplit's labeled parent is released once the flow's sinks have run") {
+    val rows = releasedAfterRun(DataFlow("cs", Seq(
+      SourceTable("src", "people"),
+      ConditionalSplit("split", Seq("hi" -> "x > 20"), "rest"),
+      Destination("dst_hi", "cs_hi", WriteMode.Overwrite),
+      Destination("dst_rest", "cs_rest", WriteMode.Overwrite)),
+      Seq(Path("src", "split"), Path("split", "dst_hi", fromPort = "hi"),
+        Path("split", "dst_rest", fromPort = "rest"))))
+    assert(rows == Map("cs_hi" -> 3, "cs_rest" -> 1))
+  }
+
+  test("RowCount taps above a ConditionalSplit and below a Multicast branch count exactly") {
+    // the split's parent is materialized before any sink runs, so the
+    // upstream tap must be filled by that materialization itself
+    val src = spark.range(1000).selectExpr("id", "CAST(id % 1000 AS INT) AS x")
+    val rows = mutable.Map.empty[String, Int]
+    val c = collectingCtx(Map("src" -> src), mutable.Map.empty, rows)
+    DataFlowExec.run(DataFlow("rc", Seq(
+      SourceTable("src", "src"),
+      RowCount("rc_up", "User::All"),
+      ConditionalSplit("split", Seq("lo" -> "x < 460"), "hi"),
+      Multicast("fan", Seq("a", "b")),
+      RowCount("rc_down", "User::Hi"),
+      Destination("dst_a", "rc_a", WriteMode.Overwrite),
+      Destination("dst_b", "rc_b", WriteMode.Overwrite),
+      Destination("dst_lo", "rc_lo", WriteMode.Overwrite)),
+      Seq(Path("src", "rc_up"), Path("rc_up", "split"),
+        Path("split", "fan", fromPort = "hi"),
+        Path("split", "dst_lo", fromPort = "lo"),
+        Path("fan", "rc_down", fromPort = "a"), Path("rc_down", "dst_a"),
+        Path("fan", "dst_b", fromPort = "b"))), c)
+    c.unpersistAll()
+    assert(c.variables("User::All") == 1000L)
+    assert(c.variables("User::Hi") == 540L)
+    assert(rows == Map("rc_a" -> 540, "rc_b" -> 540, "rc_lo" -> 460))
   }
 
   test("RecordsetDestination fills its variable; the driver-bound cap fails loudly") {

@@ -220,6 +220,34 @@ class IoSpec extends AnyFunSuite {
       Set((1L, 10L), (2L, 20L), (3L, 30L)))
   }
 
+  test("a cache transform's view stays readable by a later data flow of the package") {
+    // an SSIS cache connection manager lives for the package: a Lookup
+    // in a later data flow task reads what an earlier one cached, after
+    // the earlier flow's own fan-out parents were released
+    spark.range(1, 6).selectExpr("id", "id * 10 AS tens")
+      .createOrReplaceTempView("cache_src2")
+    val c = ctx
+    val res = ControlFlowExec.run(PipelineSpec("p",
+      tasks = Seq(
+        CfTask.DataFlowTask("fill", DataFlow("fill", Seq(
+          SourceQuery("ref", "SELECT id AS k, tens FROM cache_src2"),
+          CacheTransform("ct", cacheName = "pkg_cache"),
+          TrashDestination("trash")),
+          Seq(Path("ref", "ct"), Path("ct", "trash")))),
+        CfTask.DataFlowTask("use", DataFlow("use", Seq(
+          SourceQuery("stream", "SELECT id FROM cache_src2 WHERE id <= 3"),
+          Lookup("lk", refTable = "", joinKeys = Seq("id" -> "k"),
+            copyColumns = Seq("tens" -> "tens"),
+            refSql = Some("SELECT * FROM pkg_cache")),
+          RecordsetDestination("rs", "User::Rows")),
+          Seq(Path("stream", "lk"), Path("lk", "rs"))))),
+      edges = Seq(PrecedenceEdge("fill", "use"))), c)
+    assert(res.succeeded("use"), res.statuses)
+    assert(c.variables("User::Rows").asInstanceOf[Seq[Row]]
+      .map(r => (r.getLong(0), r.getLong(1))).toSet ==
+      Set((1L, 10L), (2L, 20L), (3L, 30L)))
+  }
+
   test("error redirection preserves the ORIGINAL value of replaced columns") {
     tricky.createOrReplaceTempView("tricky_src")
     val out = DataFlowExec.run(DataFlow("f", Seq(

@@ -1,8 +1,6 @@
 package graft.sources
 
-import graft.TestSpark
-import org.apache.spark.ListenerDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import graft.{SparkActions, TestSpark}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -25,25 +23,6 @@ class CommitJobBudgetSpec extends AnyFunSuite {
       (1 to 40).map(i => (i, s"n$i", i.toLong)).toDF("k", "name", "amt")
         .repartitionByRange(4, col("k")))
     root
-  }
-
-  /** (jobs, SQL executions) started while `body` runs. */
-  private def actionsDuring(body: => Unit): (Int, Int) = {
-    val sc = spark.sparkContext
-    ListenerDrain(sc)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val executions = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet()
-        Option(j.properties).flatMap(p =>
-          Option(p.getProperty("spark.sql.execution.id")))
-          .foreach(executions.add)
-      }
-    }
-    sc.addSparkListener(l)
-    try { body; ListenerDrain(sc); (jobs.get(), executions.size) }
-    finally sc.removeSparkListener(l)
   }
 
   private def src(rows: (Int, String, Long)*): DataFrame =
@@ -74,7 +53,7 @@ class CommitJobBudgetSpec extends AnyFunSuite {
   test("each commit kind runs its exact Spark-job budget") {
     val counts = budget.map { case (kind, _, _, op) =>
       val root = table()
-      val (jobs, executions) = actionsDuring(op(root))
+      val (jobs, executions) = SparkActions.during(spark)(op(root))
       (kind, jobs, executions)
     }
     info(counts.map { case (k, j, e) => s"$k=$j/$e" }.mkString(" "))
